@@ -29,7 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import QuerySpec
-from ..sources.tables import load_table, spread_unsplittable_scan
+from ..sources.tables import load_table, scan_max_tasks, spread_unsplittable_scan
 
 DIM = 64
 K_NEIGHBORS = 5
@@ -105,40 +105,18 @@ def corpus_count(spark: SparkSession, sf_dir: str) -> int:
     engines) instead of running a Spark count() job: at sf0.1 the job
     cost ~0.3 s of every first `dedup_semantic`/`kmeans_assign` build,
     and at 100 TB a footer read is O(files) driver metadata, not a
-    cluster job.  Falls back to the count() job for any layout pyarrow
-    cannot resolve (nested dirs of a partitioned table, non-local fs).
-    Fixture dirs are immutable, so the per-session memo stands."""
+    cluster job.  The footer read is the engine's one stats reader,
+    ``tables.scan_max_tasks``.  Falls back to the count() job for any
+    layout it cannot resolve (nested dirs of a partitioned table,
+    non-local fs).  Fixture dirs are immutable, so the per-session memo
+    stands."""
     if sf_dir not in _CORPUS_COUNT_CACHE:
-        _CORPUS_COUNT_CACHE[sf_dir] = _parquet_num_rows(
-            f"{sf_dir}/embeddings.parquet"
-        ) or load_table(spark, sf_dir, "embeddings").count()
+        stats = scan_max_tasks(sf_dir, "embeddings")
+        _CORPUS_COUNT_CACHE[sf_dir] = (
+            stats[1] if stats is not None
+            else load_table(spark, sf_dir, "embeddings").count()
+        )
     return _CORPUS_COUNT_CACHE[sf_dir]
-
-
-def _parquet_num_rows(path: str) -> int | None:
-    """Sum of footer num_rows over a parquet file or a flat directory
-    of part files; None when the layout is not one of those (caller
-    falls back to a count() job).  A zero-row fixture also returns
-    None — indistinguishable from "no footers found" here, and the
-    count() fallback gives the same 0."""
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isfile(path):
-            return pq.ParquetFile(path).metadata.num_rows or None
-        if os.path.isdir(path):
-            total = 0
-            for name in os.listdir(path):
-                if name.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(path, name)
-                    ).metadata.num_rows
-            return total or None
-    except Exception:  # noqa: BLE001 — any footer-read surprise → Spark job
-        return None
-    return None
 
 
 #: the two parameter formulas as DuckDB SQL — the exact expression
@@ -1159,6 +1137,14 @@ def _member_sum_partials(cent_ids, cent_mat):
                 continue
             ks = score(qv).to_numpy()
             pos = np.searchsorted(ids, ks)
+            # a k missing from ids would scatter-add into a neighbour
+            hit = pos < len(ids)
+            hit[hit] = ids[pos[hit]] == ks[hit]
+            if not hit.all():
+                raise ValueError(
+                    f"scored cluster ids {sorted(set(ks[~hit].tolist()))} "
+                    f"are not centroid ids {ids.tolist()}"
+                )
             mat = np.stack(qv.to_numpy()).astype(np.int64)
             np.add.at(acc, pos, mat)
             seen[pos] = True

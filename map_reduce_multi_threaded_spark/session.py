@@ -15,6 +15,24 @@ real 1000-executor cluster against ~100 TB you would raise
 every operator in this package is written to be agnostic to the actual
 partition count (no collect()-based logic, no driver-side loops over
 data).
+
+Python workers: :func:`get_spark` starts them through this package's
+own daemon module (``spark.python.daemon.module`` =
+:mod:`.worker_daemon`) instead of ``pyspark.daemon``.  Measured on
+Python 3.11, every Python task (even in a reused worker) spent ~0.2 s in
+``importlib.invalidate_caches()``, called by pyspark's
+``worker_util.setup_spark_files`` before any UDF code runs; cProfile of
+``pyspark.worker.main`` put all of it in the zip importers cached for
+paths inside ``pyspark.zip``, each re-reading the archive's 1328-entry
+directory.  The daemon re-reads an archive only when its (mtime, size)
+changed and otherwise runs the stock ``pyspark.daemon.manager()`` —
+the behaviour CPython 3.13 adopted itself (``zipimport`` there only
+drops the cached directory and re-reads it lazily), so on 3.13+ it
+patches nothing.  The package's parent directory is put on
+``spark.executorEnv.PYTHONPATH`` so the workers can import the daemon
+(and every UDF module) from any working directory.  The daemon conf is
+static: a session created elsewhere and handed to :func:`ensure_confs`
+keeps the stock daemon.
 """
 
 from __future__ import annotations
@@ -56,6 +74,20 @@ _PERF_CONFS = {
 }
 
 
+#: directory holding this package — the Python workers' import root
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
+
+def _worker_pythonpath(current: str) -> str:
+    """``current`` (a PYTHONPATH value, possibly empty) with the
+    package's parent directory in front."""
+    paths = [p for p in current.split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        paths.insert(0, _PACKAGE_PARENT)
+    return os.pathsep.join(paths)
+
+
 def get_spark(
     app_name: str = "map_reduce_multi_threaded_spark",
     master: str | None = None,
@@ -80,7 +112,15 @@ def get_spark(
     builder = builder.config("spark.ui.enabled", "false")
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
 
-    for k, v in {**_REQUIRED_CONFS, **_PERF_CONFS, **(extra_confs or {})}.items():
+    extra_confs = extra_confs or {}
+    confs = {
+        **_REQUIRED_CONFS,
+        **_PERF_CONFS,
+        "spark.python.daemon.module": "map_reduce_multi_threaded_spark.worker_daemon",
+        **extra_confs,
+        _WORKER_PYTHONPATH: _worker_pythonpath(extra_confs.get(_WORKER_PYTHONPATH, "")),
+    }
+    for k, v in confs.items():
         builder = builder.config(k, v)
 
     spark = builder.getOrCreate()

@@ -13,8 +13,15 @@ operator takes a DataFrame and never assumes a partition count.
 
 from __future__ import annotations
 
+import logging
+import os
+import stat
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+_log = logging.getLogger(__name__)
 
 #: All tables the driver materializes per scale factor.
 TABLES = (
@@ -57,12 +64,76 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df  # already TimestampType
 
 
+#: session confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: (file identity, inference confs) -> the Spark-inferred StructType
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+#: file identity -> (row_groups, rows) from the parquet footers
+_FOOTER_STATS_CACHE: dict[tuple, tuple[int, int]] = {}
+
+
+def file_identity(path: str) -> tuple | None:
+    """What a parquet table's files are, on disk: ``(abspath,
+    st_mtime_ns, st_size)`` for a file, ``(abspath, sorted (name,
+    st_mtime_ns, st_size) of every entry)`` for a flat directory.  A
+    rewritten file or an added/removed part file gets a new identity.
+    None for a missing path or a nested (partitioned) directory —
+    those are never memoized."""
+    path = os.path.abspath(path)
+    try:
+        st = os.stat(path)
+        if stat.S_ISREG(st.st_mode):
+            return path, st.st_mtime_ns, st.st_size
+        if not stat.S_ISDIR(st.st_mode):
+            return None
+        listing = []
+        with os.scandir(path) as entries:
+            for e in entries:
+                if not e.is_file():
+                    return None
+                est = e.stat()
+                listing.append((e.name, est.st_mtime_ns, est.st_size))
+    except OSError:
+        return None
+    return path, tuple(sorted(listing))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one test table (``events.ts`` → see normalize_event_ts)."""
+    """Load one test table (``events.ts`` → see normalize_event_ts).
+
+    The first load of a file infers its schema (``spark.read.parquet``
+    runs one schema-inference job for that); the inferred
+    ``StructType`` is memoized, and later loads pass it to
+    ``spark.read.schema(...)``, which starts no job.  The memo key is
+    the file identity (:func:`file_identity`: absolute path,
+    ``st_mtime_ns`` and ``st_size``, or a flat directory's sorted
+    listing of those) plus the session's values of the confs that
+    change inference (``_INFERENCE_CONFS``), so a rewritten file or a
+    changed conf is inferred again.  Nested/partitioned layouts are
+    always inferred."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    ident = file_identity(path)
+    if ident is None:
+        df = spark.read.parquet(path)
+    else:
+        key = (ident, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+        schema = _SCHEMA_CACHE.get(key)
+        if schema is None:
+            df = spark.read.parquet(path)
+            _SCHEMA_CACHE[key] = df.schema
+        else:
+            df = spark.read.schema(schema).parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
     return df
@@ -73,30 +144,41 @@ def scan_max_tasks(sf_dir: str, name: str) -> tuple[int, int] | None:
     table's files — the upper bound on scan parallelism, since Spark
     splits parquet at row-group boundaries (byte-range splits below
     that all collapse onto whichever task holds the group) — plus the
-    footer row count.  None when the layout is not a flat file/dir of
-    .parquet (caller treats unknown as 'parallel enough').  Footer
-    metadata only — no Spark job (the corpus_count precedent,
-    guide §6)."""
-    import os
-
+    footer row count.  Footer metadata only — no Spark job (the
+    corpus_count precedent, guide §6), memoized per
+    :func:`file_identity`.  None, with a warning logged, when the layout
+    is not a flat file/dir of .parquet or a footer cannot be read
+    (callers treat unknown as 'parallel enough' / fall back to a
+    count job)."""
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isfile(path):
-            m = pq.ParquetFile(path).metadata
-            return m.num_row_groups, m.num_rows
-        if os.path.isdir(path):
-            groups = rows = 0
-            for f in os.listdir(path):
-                if f.endswith(".parquet"):
-                    m = pq.ParquetFile(os.path.join(path, f)).metadata
-                    groups += m.num_row_groups
-                    rows += m.num_rows
-            return groups, rows
-    except Exception:  # noqa: BLE001 — unknown layout → assume splittable
+    ident = file_identity(path)
+    if ident is None:
+        _log.warning("scan_max_tasks: %s is missing or not a flat parquet layout", path)
         return None
-    return None
+    stats = _FOOTER_STATS_CACHE.get(ident)
+    if stats is None:
+        try:
+            stats = _footer_stats(path)
+        except (OSError, ValueError):  # pyarrow's I/O and ArrowInvalid errors
+            _log.warning("scan_max_tasks: cannot read parquet footers of %s", path, exc_info=True)
+            return None
+        _FOOTER_STATS_CACHE[ident] = stats
+    return stats
+
+
+def _footer_stats(path: str) -> tuple[int, int]:
+    import pyarrow.parquet as pq
+
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
+    groups = rows = 0
+    for f in files:
+        m = pq.ParquetFile(f).metadata
+        groups += m.num_row_groups
+        rows += m.num_rows
+    return groups, rows
 
 
 #: Minimum rows each would-be task must receive for the spread to be
@@ -189,7 +271,6 @@ def stage_scratch_dir(sf_dir: str, kind: str, *source_tables: str) -> str:
     (renamed staging layouts would otherwise orphan their old dirs
     on disk forever)."""
     import hashlib
-    import os
     import shutil
 
     parts = []

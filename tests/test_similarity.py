@@ -605,6 +605,29 @@ def test_member_sum_partials_match_groupby_sums():
     assert list(part(iter([]))) == []
 
 
+@pytest.mark.parametrize("bad_k", [3, 10, 0])
+def test_member_sum_partials_rejects_unknown_cluster_id(monkeypatch, bad_k):
+    """A scored id missing from the centroid ids — between two of them
+    (3), past the last (10) or before the first (0) — must raise, not
+    scatter-add the row into whichever centroid searchsorted lands on."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    monkeypatch.setattr(
+        similarity, "_cluster_scorer",
+        lambda ids, mats: lambda qv: pd.Series([1] + [bad_k] * (len(qv) - 1)),
+    )
+    rows = np.ones((3, similarity.DIM), dtype=np.int64)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([r.tolist() for r in rows], type=pa.list_(pa.int64()))],
+        names=["qv"],
+    )
+    part = similarity._member_sum_partials([1, 5, 9], [list(rows[0])] * 3)
+    with pytest.raises(ValueError, match=rf"\[{bad_k}\] are not centroid ids"):
+        list(part(iter([batch])))
+
+
 def test_cos_scorer_matches_sequential_fold():
     """The round-16 knn_bruteforce Arrow scorer must equal the retired
     interpreted spelling bit-for-bit: sequential per-dim dot and
