@@ -9,6 +9,10 @@ append away from being correctness-gated against the DuckDB oracle.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -37,7 +41,22 @@ class QuerySpec:
 
 
 def collect_specs() -> list[QuerySpec]:
-    """Import every operator module and concatenate its SPECS."""
+    """Import every operator module and concatenate its SPECS, in sweep
+    order.
+
+    The round driver re-verifies about the first ``_SWEEP_WINDOW``
+    specs each round, so the order decides what gets verified.  It
+    follows four rules, read from the committed ``CORRECTNESS_r*.json``
+    history and ``_REVERIFY_FIRST``:
+
+    1. never checked -- no record yet, or the newest green was the
+       rows-only check and the spec now has an oracle;
+    2. the newest record failed;
+    3. flagged -- a live ``_REVERIFY_FIRST`` entry;
+    4. green, oldest newest-green round first.
+
+    Ties keep registry order.
+    """
     from .operators import (
         dedup,
         graph,
@@ -59,281 +78,69 @@ def collect_specs() -> list[QuerySpec]:
     dupes = {n for n in names if names.count(n) > 1}
     if dupes:
         raise ValueError(f"duplicate query names in registry: {dupes}")
-    # Sweep order (the driver checks the first ~50 specs per round, so
-    # ordering decides what gets verified).  Groups, in sweep order:
-    #   0. never driver-checked (new queries need a first record),
-    #   1. newest record is a FAIL (regressions re-verify first),
-    #   2. green — ordered by (oldest green round, changed-first).
-    # Change-awareness (since round 3): a green record is weaker if
-    # anything in the query's import closure was committed/edited after
-    # the record landed (a rewrite invalidates the old green).  Since
-    # round 6 that demotion is a TIEBREAK within the same green round,
-    # not a group ahead of all valid greens: one refactor touching
-    # relational.py (94 queries) would otherwise monopolize the ~50
-    # sweep slots for rounds and starve the cross-module rotation tail,
-    # leaving other modules' oldest records unverified indefinitely.
-    # Age-first bounds time-to-reverify for EVERY query; pytest's
-    # oracle-parity suite (every spec, every run) covers the changed
-    # queries in the meantime.  Stable module order within ties.
-    #
-    # Bounded carve-out (ADVICE r6): pure in-cohort tiebreaking means a
-    # changed query whose green record is RECENT can wait many rounds
-    # for driver re-verification (its cohort sorts last).  Reserve up
-    # to _CHANGED_CARVEOUT sweep slots for queries whose DEFINING
-    # module was edited after their green record and that would
-    # otherwise fall outside the driver's ~_SWEEP_WINDOW-slot sweep —
-    # spliced in right after the never-checked and failed groups.  The
-    # defining-module signal (not the closure signal the tiebreak
-    # uses) keeps the carve-out discriminating when a shared leaf
-    # module edit marks every closure changed; boundedness keeps a
-    # big-module refactor from monopolizing the rotation.
-    rank = _sweep_rank()
-    ordered = sorted(specs, key=lambda s: (*rank(s), names.index(s.name)))
-    urgent = [s for s in ordered if rank(s)[0] < 2]
-    greens = [s for s in ordered if rank(s)[0] >= 2]
-    window = {s.name for s in ordered[:_SWEEP_WINDOW]}
-    # Explicit reverify-first flags outrank the heuristic: a flag is
-    # live while the query's newest green record is no newer than the
-    # rewrite round, and expires automatically with the first newer
-    # green (see _REVERIFY_FIRST).
-    flagged = {
-        s.name for s in greens
-        if rank(s)[1] <= _REVERIFY_FIRST.get(s.name, -1)
-    }
-    candidates = [
-        s for s in greens
-        if s.name not in window
-        and (s.name in flagged or rank.direct_changed(s))
-    ]
-    # flagged rewrites first (sharp builder signal), then newest green
-    # first: a query rewritten right after a fresh green sorts LAST in
-    # the age rotation (longest natural wait), while an old changed
-    # query is about to be swept by rotation anyway
-    candidates.sort(key=lambda s: (s.name not in flagged, -rank(s)[1]))
-    # the carve-out YIELDS to the oldest cohort: promotions use only
-    # the window slack left after the urgent groups and the entire
-    # oldest green cohort (the judge's freshness contract: no newest
-    # record older than rotation allows) — a round that registers many
-    # new queries shrinks the carve-out rather than pushing the oldest
-    # cohort's tail out of the sweep
-    oldest_round = min((rank(s)[1] for s in greens), default=0)
-    oldest_n = sum(1 for s in greens if rank(s)[1] == oldest_round)
-    slack = max(0, _SWEEP_WINDOW - len(urgent) - oldest_n)
-    # hand-set flags bypass the heuristic cap (their green records
-    # describe RETIRED code — epistemically void, unlike the merely-old
-    # records of the rotation cohort) but still respect the window
-    # slack; only the noisy direct_changed heuristic stays capped at
-    # _CHANGED_CARVEOUT (round 12: seven same-round rewrite flags vs a
-    # 4-slot cap would have left three rewrites un-re-recorded)
-    flagged_cands = [s for s in candidates if s.name in flagged]
-    heuristic_cands = [s for s in candidates if s.name not in flagged]
-    n_flagged = min(len(flagged_cands), slack)
-    n_heur = min(
-        len(heuristic_cands),
-        max(0, min(_CHANGED_CARVEOUT, slack) - n_flagged),
-    )
-    promoted = flagged_cands[:n_flagged] + heuristic_cands[:n_heur]
-    promoted_set = {s.name for s in promoted}
-    return urgent + promoted + [s for s in greens if s.name not in promoted_set]
+    return _sweep_order(specs)
 
-
-#: Sweep slots per round reserved for changed-since-green queries
-#: (ADVICE r6).  ~8% of the driver's ~50-slot sweep: big enough that a
-#: typical round's rewrites re-verify next sweep, small enough that the
-#: oldest-cohort rotation still dominates (round 7: 11 never-checked +
-#: 4 promoted + the 31-query r3 cohort fit inside the window with
-#: margin; 8 would have pushed the cohort tail to exactly slot 50).
-_CHANGED_CARVEOUT = 4
 
 #: How many specs the round driver sweeps per round (observed ~50 in
-#: every CORRECTNESS_r*.json); the carve-out only promotes changed
-#: queries that would land OUTSIDE this window.
+#: every CORRECTNESS_r*.json).
 _SWEEP_WINDOW = 50
 
 #: Explicit reverify-first flags: ``{query_name: rewrite_round}``, set
-#: by hand when a query's ALGORITHM is rewritten in ``rewrite_round``
-#: and its newest green record therefore describes retired code.  The
-#: module-level change heuristics cannot SELECT such queries when a
-#: round edits several large modules (round 9 touched dedup.py,
-#: graph.py and relational.py, marking 131 queries direct_changed — no
-#: sort order of that set singles out the five PPJoin rewrites VERDICT
-#: r9 asked to re-record).  A flag is live while the query's newest
-#: green round is <= its rewrite round and takes the FRONT of the
-#: bounded carve-out; the first newer green record expires it
-#: automatically, so stale entries are inert.  The ``<=`` is
-#: deliberately conservative — within-round ordering of rewrite vs
-#: driver sweep is unknowable to this code — so a green recorded in
-#: the SAME round as the rewrite does NOT auto-expire the flag, and a
-#: same-round-verified flag would hold the front of the carve-out an
-#: extra round (ADVICE r10).  Convention: when the builder KNOWS the
-#: same-round green postdates the rewrite commit (commit order is in
-#: git), prune the entry in the next round's first commit.
+#: by hand when a query's algorithm is rewritten in ``rewrite_round``,
+#: so its newest green record describes retired code.  A flag is live
+#: while the query's newest green round is <= its rewrite round; live
+#: flags sweep right after the never-checked and failed queries.  The
+#: first newer green expires the flag, so a stale entry is inert; prune
+#: expired entries in the next round's first commit.  The ``<=`` is
+#: conservative: a green recorded in the rewrite round itself may
+#: predate the rewrite, so it does not expire the flag -- prune such an
+#: entry by hand once the commit order shows the green came after.
 _REVERIFY_FIRST: dict[str, int] = {
-    # History: the five r9 PPJoin/pinned-shingle flags (dedup_clusters,
-    # dedup_cluster_keep, dedup_minhash_lsh, dedup_recall_eval,
-    # graph_triangle_count) expired automatically via their r10 greens;
-    # the r10 grouped_map_zscore flag was pruned per the convention
-    # above (its r10 driver green was recorded after commit b43b248).
-    # The four r11 flags (agg_corr_exact + the three session-oracle
-    # consumers) were pruned in round 12 per the same convention: all
-    # four lead CORRECTNESS_r11 with green post-fix records.
-    # The seven r12 flags (wordcount ×3, text_zipf_slope,
-    # tfidf_cosine_rank, pipeline_contrastive_pairs, rerank_mmr) were
-    # pruned in round 13 per the convention above: VERDICT r12 records
-    # all seven with post-rewrite r12 driver greens.
-    # The four r13 skew-gate flags (join_asof_nearest,
-    # events_resample_ffill, events_resample_interpolate,
-    # stream_stream_join) were pruned in round 14 per the convention:
-    # CORRECTNESS_r13 records all four green, recorded by the driver's
-    # end-of-round sweep after the gate commits (4ede4be, b78eb9b).
-    # The three r14 rewrite flags (join_asof_nearest,
-    # events_resample_interpolate, graph_triangle_count) were pruned
-    # in round 15 per the convention above: CORRECTNESS_r14 records
-    # all three green, and VERDICT r14 confirms those records postdate
-    # the rewrites ("fresh r14 driver greens").
-    # round-14 end-of-round snapshot (adaptive LSH plane count +
-    # adaptive k-means k, similarity.py): the driver fixtures clamp to
-    # the historical p=6/k=4 so fixture RESULTS are bit-identical, but
-    # the existing green records predate the rewrite and never
-    # exercised the formula dispatch — VERDICT r14 ask #1c front-loads
-    # the whole adaptive-parameter family for re-recording (the
-    # adaptive BRANCH itself is oracle-gated by the round-15 5k-vector
-    # fixture tests in tests/test_similarity.py).
-    "embedding_neardup_lsh": 14,
-    "knn_lsh": 14,
-    "knn_recall_eval": 14,
-    # round-15 scoring rewrite: kmeans_assign's per-iteration scoring
-    # moved from the broadcast-join of interpreted folds to one
-    # Arrow-batched narrow map against driver-held centroids
-    # (bit-identical output — oracle-exact at sf0.01 AND on the
-    # 5k-vector adaptive fixture at k=10; 80k stress: 735 s → 10.4 s).
-    # dedup_semantic composes it, so both flags move to 15.
-    "kmeans_assign": 15,
-    "dedup_semantic": 15,
-    # round-15 giant-family OOM fix: the incremental near-dup screen's
-    # corpus index is now exact-collapsed (one representative per
-    # distinct text + family weight; member-level n_candidates /
-    # best-match reconstructed exactly) — the raw-member banding
-    # heap-OOMed the 8 GB JVM at 80k docs / 10k-member families and
-    # the collapsed index runs it in 7.1 s.  Output identical (the
-    # unchanged member-level oracle gates it) — re-record.
-    "dedup_incremental_lsh": 15,
-    # round-15 Arrow-scorer rewrites (same treatment as kmeans_assign,
-    # same bounded-driver-state exception): knn_scalar_quant scores
-    # all queries' INTEGER dots in one narrow map and ranks NARROW
-    # rows (the float/code arrays no longer ride the window exchange);
-    # embedding_pq assigns codes in one narrow map against the
-    # driver-held 4x4x16-int codebook (explode/join/2-agg retired).
-    # Integer arithmetic end to end -- equality with the unchanged
-    # oracles is exact by order-freeness; both re-verified hash-exact
-    # at sf0.001/0.01/0.1 before commit -- re-record.
-    "knn_scalar_quant": 15,
-    "embedding_pq": 15,
+    # round-16 rewrites (VERDICT r16 #2): no driver green since them
+    "events_resample_ffill": 16,
+    "events_resample_interpolate": 16,
+    "text_duplicate_spans": 16,
+    "text_decontaminate": 16,
+    "text_ngram_counts": 16,
+    "text_ngram_novelty": 16,
+    "text_repetition": 16,
+    "text_vocab_coverage": 16,
+    "text_lm_perplexity": 16,
+    "dedup_prefix_filter": 16,
+    "sql_collated_wordcount": 16,
+    "agg_countmin": 16,
+    "udtf_top_terms_poly": 16,
 }
 
 
-def _module_graph() -> tuple[dict[str, str], dict[str, set[str]]]:
-    """Static intra-package import graph: ``{module: file}`` and
-    ``{module: set(imported package modules)}``, from ``ast`` over
-    every ``.py`` file in the package.  Used by the sweep ordering —
-    a query is only "validly proven" if NOTHING in its import closure
-    changed since its green record, not just its defining module
-    (round 3 edited ``streaming/windows.py`` without demoting the
-    ``streaming/queries.py`` queries that depend on it)."""
-    import ast
-    import os
+def _sweep_order(specs: list[QuerySpec], history_dir: str | None = None) -> list[QuerySpec]:
+    """``specs`` in the sweep order of :func:`collect_specs`, from the
+    history in ``history_dir`` (default: the repository root)."""
+    rank = _sweep_rank(history_dir)
 
-    pkg_root = os.path.dirname(os.path.abspath(__file__))
-    pkg_name = os.path.basename(pkg_root)
-    parent = os.path.dirname(pkg_root)
-    files: dict[str, str] = {}
-    for dirpath, _, fnames in os.walk(pkg_root):
-        for fn in fnames:
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, fn)
-            mod = os.path.relpath(path, parent)[: -len(".py")].replace(os.sep, ".")
-            if mod.endswith(".__init__"):
-                mod = mod[: -len(".__init__")]
-            files[mod] = path
-    edges: dict[str, set[str]] = {m: set() for m in files}
-    for mod, path in files.items():
-        try:
-            with open(path) as f:
-                tree = ast.parse(f.read())
-        except (OSError, SyntaxError):
-            continue
-        parts = mod.split(".")
-        # package context for relative-import resolution
-        base_parts = parts if path.endswith("__init__.py") else parts[:-1]
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Import):
-                for a in node.names:
-                    name = a.name
-                    while name and name not in files:
-                        name = name.rpartition(".")[0]
-                    if name:
-                        edges[mod].add(name)
-            elif isinstance(node, ast.ImportFrom):
-                if node.level == 0:
-                    base = node.module or ""
-                    if base != pkg_name and not base.startswith(pkg_name + "."):
-                        continue
-                else:
-                    anchor = base_parts[: len(base_parts) - (node.level - 1)]
-                    base = ".".join(anchor + ([node.module] if node.module else []))
-                for cand in [base] + [f"{base}.{a.name}" for a in node.names]:
-                    if cand in files:
-                        edges[mod].add(cand)
-    # This module aggregates EVERY operator module in collect_specs(),
-    # so leaving its outgoing edges in place would make every query's
-    # closure the whole package (operator -> registry -> all operators)
-    # and mass-demote on any edit.  The registry contains sweep
-    # ordering only — no query semantics — so it contributes no edges.
-    edges[f"{pkg_name}.registry"] = set()
-    return files, edges
+    def key(spec: QuerySpec) -> tuple[int, bool, int]:
+        group, green_round = rank(spec)
+        flagged = group == 2 and green_round <= _REVERIFY_FIRST.get(spec.name, -1)
+        return (group, not flagged, green_round)
+
+    return sorted(specs, key=key)  # stable: ties keep registry order
 
 
-def _import_closure(mod: str, edges: dict[str, set[str]]) -> set[str]:
-    """Transitive closure of ``mod`` over the static import graph
-    (including ``mod`` itself)."""
-    seen: set[str] = set()
-    stack = [mod]
-    while stack:
-        m = stack.pop()
-        if m in seen:
-            continue
-        seen.add(m)
-        stack.extend(edges.get(m, ()))
-    return seen
-
-
-def _sweep_rank(commit_ct_fn=None):
-    """Build the (group, newest_green_round) key function described in
-    :func:`collect_specs`, from CORRECTNESS_r*.json history + git.
-
-    ``commit_ct_fn`` overrides the git/mtime change-time lookup (tests
-    inject a fake clock to prove the demotion logic)."""
-    import glob
-    import json
-    import os
-    import re
-    import sys
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    # newest record per query wins: {name: (round, green)}
-    latest: dict[str, tuple[int, bool]] = {}
-    # newest GREEN record per query: {name: round}
-    latest_green: dict[str, int] = {}
-    # queries whose newest green was only the weaker rows-only check
-    rows_only_green: set[str] = set()
-    round_files: dict[int, str] = {}
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+def _sweep_rank(history_dir: str | None = None) -> Callable[[QuerySpec], tuple[int, int]]:
+    """Build the ``(group, newest_green_round)`` key of a spec from the
+    ``CORRECTNESS_r*.json`` files in ``history_dir`` (default: the
+    repository root).  Group 0 = never checked, 1 = newest record
+    failed, 2 = green; the round is 0 when there is no green."""
+    history_dir = history_dir or os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    rounds = []
+    for path in glob.glob(os.path.join(history_dir, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        round_files[rnd] = path
+        if m:
+            rounds.append((int(m.group(1)), path))
+    newest_ok: dict[str, bool] = {}
+    # newest green per query: (round, whether it was the rows-only check)
+    newest_green: dict[str, tuple[int, bool]] = {}
+    for rnd, path in sorted(rounds):
         try:
             with open(path) as f:
                 records = json.load(f)
@@ -344,116 +151,21 @@ def _sweep_rank(commit_ct_fn=None):
         for name, rec in records.items():
             if not isinstance(rec, dict):
                 continue
-            green = bool(
-                rec.get("hash_match")
-                or (rec.get("err") == "no_oracle" and rec.get("spark_rows") is not None)
-            )
-            if name not in latest or rnd > latest[name][0]:
-                latest[name] = (rnd, green)
-            if green and latest_green.get(name, -1) < rnd:
-                latest_green[name] = rnd
-                if rec.get("err") == "no_oracle":
-                    rows_only_green.add(name)
-                else:
-                    rows_only_green.discard(name)
+            rows_only = rec.get("err") == "no_oracle" and rec.get("spark_rows") is not None
+            ok = bool(rec.get("hash_match")) or rows_only
+            newest_ok[name] = ok
+            if ok:
+                newest_green[name] = (rnd, rows_only)
 
-    mod_files, mod_edges = _module_graph()
-    commit_ct_cache: dict[str, int | None] = {}
+    def rank(spec: QuerySpec) -> tuple[int, int]:
+        if spec.name not in newest_ok:
+            return (0, 0)
+        green_round, rows_only = newest_green.get(spec.name, (0, False))
+        if not newest_ok[spec.name]:
+            return (1, green_round)
+        if rows_only and spec.oracle is not None:
+            # never hash-verified under the current contract
+            return (0, green_round)
+        return (2, green_round)
 
-    def _commit_ct(path: str) -> int | None:
-        """Unix time of the last commit touching ``path``; the file
-        mtime when git is unavailable or the file has uncommitted
-        edits (mtime of a dirty file >= any record commit, so dirty
-        counts as changed)."""
-        if path in commit_ct_cache:
-            return commit_ct_cache[path]
-        ct: int | None = None
-        try:
-            import subprocess
-
-            dirty = subprocess.run(
-                ["git", "-C", here, "status", "--porcelain", "--", path],
-                capture_output=True, text=True, timeout=10,
-            )
-            if dirty.returncode == 0 and not dirty.stdout.strip():
-                out = subprocess.run(
-                    ["git", "-C", here, "log", "-1", "--format=%ct", "--", path],
-                    capture_output=True, text=True, timeout=10,
-                )
-                if out.returncode == 0 and out.stdout.strip():
-                    ct = int(out.stdout.strip())
-        except Exception:
-            ct = None
-        if ct is None:
-            try:
-                ct = int(os.path.getmtime(path))
-            except OSError:
-                ct = None
-        commit_ct_cache[path] = ct
-        return ct
-
-    ct_fn = commit_ct_fn or _commit_ct
-
-    def _closure_ct(mod_name: str) -> int | None:
-        """Newest change time over the module's transitive
-        intra-package import closure (None if nothing resolvable —
-        then the check abstains rather than demoting everything)."""
-        paths = [mod_files[m] for m in _import_closure(mod_name, mod_edges) if m in mod_files]
-        if not paths:
-            mod = sys.modules.get(mod_name)
-            mod_file = getattr(mod, "__file__", None)
-            paths = [mod_file] if mod_file else []
-        cts = [c for c in (ct_fn(p) for p in paths) if c is not None]
-        return max(cts) if cts else None
-
-    def rank(spec: QuerySpec) -> tuple[int, int, int]:
-        rec = latest.get(spec.name)
-        if rec is None:
-            return (0, 0, 0)  # never checked
-        green_round = latest_green.get(spec.name, 0)
-        if not rec[1]:
-            # newest record is a FAIL — regressions stay group 1 even
-            # when the stale green was rows-only (a hash-fail is a
-            # stronger signal than "never hash-verified")
-            return (1, green_round, 0)
-        if spec.oracle is not None and spec.name in rows_only_green:
-            # the spec gained an oracle AFTER its newest green, which
-            # was only the weaker rows-only check — under the current
-            # contract it has never been hash-verified at all
-            return (0, green_round, 0)
-        changed = 1  # unchanged sorts after changed within a round
-        rec_file = round_files.get(green_round)
-        if rec_file:
-            mod_ct = _closure_ct(spec.fn.__module__)
-            rec_ct = ct_fn(rec_file)
-            if mod_ct is not None and rec_ct is not None and mod_ct > rec_ct:
-                # the query or anything it imports was rewritten since
-                # its green record — the old green is weaker, so it
-                # leads its cohort (but does not jump older cohorts)
-                changed = 0
-        return (2, green_round, changed)
-
-    def direct_changed(spec: QuerySpec) -> bool:
-        """True when the query's DEFINING module file was committed
-        after its newest green record — the sharp per-query rewrite
-        signal the carve-out promotes on.  (The closure signal used by
-        the in-cohort tiebreak goes indiscriminate whenever a shared
-        leaf module changes: one functions/ edit marks all 177 queries
-        changed, which orders cohorts fine but can't SELECT.)"""
-        rec = latest.get(spec.name)
-        if rec is None or not rec[1]:
-            return False  # never-checked / failed are already urgent
-        rec_file = round_files.get(latest_green.get(spec.name, 0))
-        if not rec_file:
-            return False
-        mod = sys.modules.get(spec.fn.__module__)
-        mod_file = mod_files.get(spec.fn.__module__) or getattr(
-            mod, "__file__", None
-        )
-        if not mod_file:
-            return False
-        mod_ct, rec_ct = ct_fn(mod_file), ct_fn(rec_file)
-        return mod_ct is not None and rec_ct is not None and mod_ct > rec_ct
-
-    rank.direct_changed = direct_changed
     return rank

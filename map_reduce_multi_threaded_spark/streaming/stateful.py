@@ -157,70 +157,3 @@ def session_windows_custom(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas — Spark 4's arbitrary-state API (the
-# successor to applyInPandasWithState): named state variables on a
-# handle, explicit timers, RocksDB-backed.  Same per-user running
-# totals as running_user_counts, so the two APIs are oracle-checked
-# against the SAME batch truth.
-# ---------------------------------------------------------------------------
-
-TWS_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("last_ts_us", LongType()),
-    ]
-)
-
-
-def running_user_counts_tws(events: DataFrame) -> DataFrame:
-    """Per-user running counts via ``transformWithStateInPandas``.
-
-    NOT REGISTERED as a contract query: the API's state-protocol driver
-    worker imports google.protobuf, which this container does not ship
-    (and installs are off-limits), so the query crashes at start.  The
-    implementation is kept — it is the documented migration target for
-    running_user_counts on a cluster with protobuf — and
-    tests/test_streaming.py exercises it behind a protobuf import gate.
-    Also requires the RocksDB state store provider (the caller sets it
-    around query start — transformWithState does not run on the
-    HDFS-backed store)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    state_schema = StructType(
-        [StructField("count", LongType()), StructField("last_ts_us", LongType())]
-    )
-
-    class CountProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("cnt", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                count, last = self._state.get()
-            else:
-                count, last = 0, None
-            for pdf in rows:
-                count += len(pdf)
-                m = int(pdf["ts"].max().value) // 1000  # ns → µs
-                if last is None or m > last:
-                    last = m
-            self._state.update((count, last))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [count], "last_ts_us": [last]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=CountProcessor(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -179,129 +179,72 @@ def test_missing_sf_dir_raises(spark):
         word_counts(spark, "/root/testdata/sf_does_not_exist").collect()
 
 
-def test_sweep_demotes_on_helper_module_edit():
-    """The change-aware sweep must key on a query's whole import
-    closure, not just its defining module: an edit to
-    streaming/windows.py (a helper) invalidates the green records of
-    streaming/queries.py queries that import it (VERDICT r3 blind
-    spot).  A fake clock makes windows.py newer than every
-    CORRECTNESS record while all other files stay older."""
-    import os
+def test_sweep_order_follows_the_four_rules(tmp_path, monkeypatch):
+    """Sweep order is never-checked -> newest failed -> live flag ->
+    green oldest first, ties in registry order -- computed from the
+    CORRECTNESS history and _REVERIFY_FIRST alone: no subprocess, no
+    source parsing."""
+    import ast
+    import json
+    import subprocess
 
     from map_reduce_multi_threaded_spark import registry
-    from map_reduce_multi_threaded_spark.registry import (
-        _import_closure,
-        _module_graph,
-        _sweep_rank,
+    from map_reduce_multi_threaded_spark.registry import QuerySpec
+
+    green = {"hash_match": True, "spark_rows": 1, "err": None}
+    failed = {"hash_match": False, "spark_rows": 1, "err": "hash mismatch"}
+    rows_only = {"hash_match": None, "spark_rows": 3, "err": "no_oracle"}
+    history = {
+        # unpadded round numbers: r10 must sort after r9 numerically
+        9: {
+            "green_new": green,
+            "green_old": green,
+            "flag_live": green,
+            "failed": green,
+        },
+        10: {
+            "green_new": green,
+            "flag_expired": green,
+            "failed": failed,
+            "rows_only_oracle": rows_only,
+            "rows_only_no_oracle": rows_only,
+        },
+    }
+    for rnd, records in history.items():
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text(json.dumps(records))
+    monkeypatch.setattr(
+        registry, "_REVERIFY_FIRST", {"flag_live": 9, "flag_expired": 9}
     )
 
-    files, edges = _module_graph()
-    pkg = "map_reduce_multi_threaded_spark"
-    closure = _import_closure(f"{pkg}.streaming.queries", edges)
-    assert f"{pkg}.streaming.windows" in closure
-    assert f"{pkg}.sources.tables" in closure  # transitive, via windows
+    def boom(*args, **kwargs):
+        raise AssertionError("sweep order must not shell out or parse source")
 
-    def fake_ct(path: str) -> int:
-        name = os.path.basename(path)
-        if name == "windows.py" and f"{os.sep}streaming{os.sep}" in path:
-            return 2_000  # edited after every green record
-        return 1_000  # records and all other modules: older
-
-    rank = _sweep_rank(commit_ct_fn=fake_ct)
-    from map_reduce_multi_threaded_spark.streaming import queries as sq
-
-    by_name = {s.name: s for s in sq.SPECS}
-    spec = by_name["stream_tumbling_multibatch"]
-    group, rnd, changed = rank(spec)
-    assert (group, changed) == (2, 0), "helper edit must mark the importing query changed"
-
-    # control: a relational query whose closure excludes windows.py
-    # keeps its proven status under the same fake clock
-    from map_reduce_multi_threaded_spark.operators import relational
-
-    rel_spec = {s.name: s for s in relational.SPECS}["q6_revenue"]
-    rel_group, rel_rnd, rel_changed = rank(rel_spec)
-    assert (rel_group, rel_changed) == (2, 1), "unrelated query must stay proven"
-
-    # rotation-starvation guard (round 6): within the SAME green round
-    # the changed query leads, but an OLDER green always outranks a
-    # newer changed one — one big-module refactor must not monopolize
-    # the ~50 driver sweep slots and starve other modules' old records
-    if rnd == rel_rnd:
-        assert rank(spec) < rank(rel_spec)
-    assert (2, rnd - 1, 1) < rank(spec), "older cohorts outrank changed"
-
-
-def test_sweep_carveout_uses_defining_module_signal():
-    """The carve-out's direct_changed predicate (ADVICE r6) must key on
-    the query's DEFINING module only — a shared-helper edit that marks
-    every import closure changed must NOT mark queries direct-changed,
-    otherwise the bounded carve-out loses its ability to select the
-    actually-rewritten queries."""
-    import os
-
-    from map_reduce_multi_threaded_spark.registry import _sweep_rank
-
-    def fake_ct(path: str) -> int:
-        name = os.path.basename(path)
-        if name == "text.py" and f"{os.sep}functions{os.sep}" in path:
-            return 2_000  # shared helper edited after every record
-        if name == "pipeline.py":
-            return 2_000  # one operator module genuinely rewritten
-        return 1_000
-
-    rank = _sweep_rank(commit_ct_fn=fake_ct)
-    from map_reduce_multi_threaded_spark.operators import pipeline, relational
-
-    pip = {s.name: s for s in pipeline.SPECS}["bm25_rank"]
-    rel = {s.name: s for s in relational.SPECS}["q6_revenue"]
-    # both closures include functions/text.py -> both tiebreak-changed
-    assert rank(pip)[2] == 0 and rank(rel)[2] == 0
-    # but only the pipeline query is direct-changed
-    assert rank.direct_changed(pip) is True
-    assert rank.direct_changed(rel) is False
-
-
-def test_sweep_carveout_is_bounded_and_front_loaded():
-    """collect_specs must bound the promoted changed-green queries
-    ahead of the age rotation — heuristic (direct_changed) promotions
-    by _CHANGED_CARVEOUT, hand-set _REVERIFY_FIRST promotions only by
-    the window slack (round 12: flags bypass the heuristic cap, since
-    their green records describe retired code) — and every promoted
-    query must be flagged or direct-changed (no free riders)."""
-    from map_reduce_multi_threaded_spark.registry import (
-        _CHANGED_CARVEOUT,
-        _REVERIFY_FIRST,
-        _SWEEP_WINDOW,
-        _sweep_rank,
-        collect_specs,
-    )
-
-    specs = collect_specs()
-    rank = _sweep_rank()
-    # find where the age rotation resumes: the first green spec whose
-    # green round is the global minimum (oldest cohort head)
-    greens = [s for s in specs if rank(s)[0] == 2]
-    oldest = min(rank(s)[1] for s in greens)
-    head = []
-    for s in specs:
-        if rank(s)[0] == 2 and rank(s)[1] == oldest:
-            break
-        head.append(s)
-    promoted = [s for s in head if rank(s)[0] == 2]
-
-    def flagged(s):
-        return rank(s)[1] <= _REVERIFY_FIRST.get(s.name, -1)
-
-    n_urgent = len(head) - len(promoted)
-    oldest_n = sum(1 for s in greens if rank(s)[1] == oldest)
-    slack = max(0, _SWEEP_WINDOW - n_urgent - oldest_n)
-    heuristic = [s for s in promoted if not flagged(s)]
-    assert len(heuristic) <= _CHANGED_CARVEOUT, [s.name for s in heuristic]
-    assert len(promoted) <= slack, [s.name for s in promoted]
-    assert all(
-        flagged(s) or rank.direct_changed(s) for s in promoted
-    ), [s.name for s in promoted if not rank.direct_changed(s)]
+    registry_order = [
+        ("green_new", "SELECT 1"),
+        ("flag_expired", "SELECT 1"),
+        ("green_old", "SELECT 1"),
+        ("flag_live", "SELECT 1"),
+        ("failed", "SELECT 1"),
+        ("rows_only_oracle", "SELECT 1"),
+        ("rows_only_no_oracle", None),
+        ("never", "SELECT 1"),
+    ]
+    specs = [QuerySpec(n, lambda spark, sf: None, oracle) for n, oracle in registry_order]
+    # patched only around the ordering: pytest's failure report parses source
+    with monkeypatch.context() as m:
+        m.setattr(subprocess, "run", boom)
+        m.setattr(ast, "parse", boom)
+        order = [s.name for s in registry._sweep_order(specs, str(tmp_path))]
+    assert order == [
+        "never",
+        "rows_only_oracle",
+        "failed",
+        "flag_live",
+        "green_old",
+        "green_new",
+        "flag_expired",
+        "rows_only_no_oracle",
+    ]
 
 
 def test_sweep_reverify_first_flags_lead_and_expire():
