@@ -193,16 +193,7 @@ def _previous_bench(current_sf: float, current_sf_dir: str) -> dict[str, float]:
     """Per-query seconds from the newest BENCH_r*.json next to this
     script, {} if none.  A recorded run at a DIFFERENT scale factor is
     not comparable (larger sf would emit spurious regressions, smaller
-    would mask real ones) — the gate skips with a stderr note.
-
-    Fallback (r9): a driver BENCH file can be unusable — BENCH_r08.json
-    shipped with ``parsed: null`` and only a TRUNCATED ``tail`` string,
-    which made the gate silently compare against an EMPTY baseline
-    (zero flags no matter what).  When the newest driver file yields no
-    queries, fall back to the newest committed builder artifact
-    (docs/bench_full_*.json, bench.py's own one-line format) so the
-    gate always has a real baseline; the fallback is announced on
-    stderr."""
+    would mask real ones) — the gate skips with a stderr note."""
     import glob
     import re
 
@@ -212,35 +203,7 @@ def _previous_bench(current_sf: float, current_sf_dir: str) -> dict[str, float]:
         m = re.search(r"BENCH_r(\d+)\.json$", p)
         if m and int(m.group(1)) > newest_round:
             newest, newest_round = p, int(m.group(1))
-    prev = _load_bench_queries(newest, current_sf, current_sf_dir)
-    if prev:
-        return prev
-    # Deterministic ordering (ADVICE r9): a fresh clone gives every
-    # committed artifact the same checkout mtime, so mtime ordering
-    # made the effective gate baseline arbitrary.  Order by the round
-    # number encoded in the filename, then by name — within one round,
-    # later session suffixes sort after the bare name
-    # (bench_full_r9.json < bench_full_r9_postfix.json <
-    # bench_full_r9_s3.json), so the newest same-round artifact wins.
-    def _round_key(p: str) -> tuple[int, str]:
-        m = re.search(r"bench_full_r(\d+)", os.path.basename(p))
-        return (int(m.group(1)) if m else -1, os.path.basename(p))
-
-    candidates = sorted(
-        glob.glob(os.path.join(here, "docs", "bench_full_*.json")),
-        key=_round_key,
-        reverse=True,
-    )
-    for p in candidates:
-        prev = _load_bench_queries(p, current_sf, current_sf_dir)
-        if prev:
-            print(
-                f"regression gate: driver BENCH file unusable/absent, "
-                f"gating against {os.path.relpath(p, here)!r}",
-                file=sys.stderr,
-            )
-            return prev
-    return {}
+    return _load_bench_queries(newest, current_sf, current_sf_dir)
 
 
 def _load_bench_queries(

@@ -980,112 +980,7 @@ ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') e
 """
 
 
-#: per-key row-count threshold above which the as-of/interval family
-#: dispatches to its chunked/bucketed spelling (round-13, VERDICT r12
-#: ask #1).  RECALIBRATED round 14: the original 10k setting priced
-#: the OLD plain carry, whose forward ``first(ignorenulls)`` frame was
-#: super-linear per partition (108k hot rows → 158 s in one task,
-#: docs/skew_recipe_ab_r12.md).  That frame is gone — the carry is now
-#: a descending running frame, linear per partition — and the re-run
-#: A/B on the same 100×/90%-one-key fixture (270k hot rows) measures
-#: plain at 1.08 s vs 4.26 s for the chunked dispatch, identical
-#: output (docs/skew_audit_r14.md).  The binding constraint is
-#: therefore single-TASK time on a linear sort+carry (~1-2 s/M rows
-#: on one core), not frame math: 1M rows/key is where the hot key's
-#: one task starts costing seconds while chunking's extra shuffle +
-#: stitch stays comfortably cheaper.  At a 90%-key 100 TB table the
-#: gate still fires (the hot key is ~1e12 rows); on balanced keys and
-#: every driver fixture the cheaper plain plan stays registered.
-_HOT_KEY_ROWS_DEFAULT = 1_000_000
-
-
-def hot_key_rows_threshold() -> int:
-    """Resolve the gate threshold at CALL time (ADVICE r13: the old
-    module-level ``int(os.environ...)`` froze the knob at import and
-    made a malformed value crash the whole module import).  Empty or
-    unset → the calibrated default; a non-integer value fails here,
-    scoped to the one query that consulted it."""
-    raw = os.environ.get("SPARK_GRAFT_HOT_KEY_ROWS", "")
-    if not raw:
-        return _HOT_KEY_ROWS_DEFAULT
-    try:
-        return int(raw)
-    except ValueError:
-        raise ValueError(
-            "SPARK_GRAFT_HOT_KEY_ROWS must be an integer row count, "
-            f"got {raw!r}"
-        ) from None
-
-
-#: per-session memo for the gate's stats pre-pass, keyed by a caller-
-#: supplied (derivation, sf_dir) tag + the stats signature.  Fixture
-#: dirs are immutable for a session, so the same (table derivation,
-#: key) pair never needs a second scan — the resample ffill/interpolate
-#: pair shares one entry, and full-registry sweeps pay each pre-pass
-#: once (VERDICT r13 ask #4).
-_HOT_KEY_STATS_CACHE: dict[tuple, tuple[int, int | None, int | None]] = {}
-
-
-def _hot_key_stats(
-    df: DataFrame,
-    key_cols: list[str],
-    ts_col: str | None = None,
-    cache_key: tuple | None = None,
-) -> tuple[int, int | None, int | None]:
-    """One partial-aggregated stats pass for the AQE-style skew gate:
-    (max rows per key, min ts µs, max ts µs).  The groupBy count
-    combines map-side, so the shuffle carries one row per key and the
-    final agg reduces on executors — O(data) scan, O(keys) shuffle, a
-    single scalar to the driver (a plan-dispatch statistic, same role
-    as AQE's runtime shuffle stats, NOT a data collect).  Empty input
-    → (0, None, None).
-
-    NOTE (documented per ADVICE r13): this is an eager action at plan-
-    BUILD time — the returned plan is stats-pinned to the data as of
-    the build, exactly like a plan compiled under AQE runtime stats.
-    For immutable fixture dirs that is the intended semantics; pass
-    ``cache_key=(tag, sf_dir)`` to memoize the scan per session."""
-    if cache_key is not None:
-        memo_key = (cache_key, tuple(key_cols), ts_col)
-        hit = _HOT_KEY_STATS_CACHE.get(memo_key)
-        if hit is not None:
-            return hit
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    if ts_col is not None:
-        aggs += [
-            F.min(F.unix_micros(F.col(ts_col))).alias("_lo"),
-            F.max(F.unix_micros(F.col(ts_col))).alias("_hi"),
-        ]
-    per_key = df.groupBy(*key_cols).agg(*aggs)
-    outer = [F.max("_n").alias("n")]
-    if ts_col is not None:
-        outer += [F.min("_lo").alias("lo"), F.max("_hi").alias("hi")]
-    row = per_key.agg(*outer).first()
-    n = row["n"] or 0
-    res: tuple[int, int | None, int | None]
-    if ts_col is None:
-        res = (n, None, None)
-    else:
-        res = (n, row["lo"], row["hi"])
-    if cache_key is not None:
-        _HOT_KEY_STATS_CACHE[memo_key] = res
-    return res
-
-
-def _asof_chunk_width(hot_n: int, lo_us: int, hi_us: int, threshold: int) -> int:
-    """Chunk width for the dispatched carry: aim the hot key at ~1/4 of
-    the threshold per chunk (assuming time-spread rows), clamped to
-    [16, 8192] chunks so the stitch summary frame stays tiny and a
-    time-CONCENTRATED hot key (all rows in one chunk — the documented
-    residual, same limit as any time-bucketing remedy) still bounds the
-    chunk count.  Width never below 1 µs."""
-    n_chunks = min(8192, max(16, -(-hot_n * 4 // max(1, threshold))))
-    return max(1, -(-(hi_us - lo_us) // n_chunks))
-
-
-def join_asof_nearest(
-    spark: SparkSession, sf_dir: str, *, hot_key_rows: int | None = None
-) -> DataFrame:
+def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAREST-in-time as-of join (bidirectional): for each purchase,
     the same user's error closest in time in EITHER direction, ties to
     the earlier side.  The scalable composition extends
@@ -1098,13 +993,11 @@ def join_asof_nearest(
     |purchases|×|errors| per user.  The oracle IS that naive argmin,
     which is exactly the point.
 
-    Per-key skew gate (round-13): a cheap partial-agg stats pass
-    measures the hottest user; above ``hot_key_rows`` (default
-    :func:`hot_key_rows_threshold`) the carry dispatches to
-    :func:`_asof_carry_chunked` — output-identity-proven, and measured
-    158 s → 0.75 s on the 100× 90%-one-key fixture
-    (docs/skew_recipe_ab_r12.md) — so a 90% key at 100 TB gets the
-    bounded-task plan without the caller knowing the key profile."""
+    Skew: a hot user's rows share one window task, and both carries
+    are linear per partition, so that task costs one sort of the hot
+    key.  On the 100× 90%-one-user stress fixture (4 cores) this
+    single-sort carry took 0.8-1.0 s where the time-chunked
+    alternative (docs/SCALE.md) took 3.0-5.0 s."""
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         "user_id", "ts", "event_id", F.lit(1).alias("kind"),
@@ -1113,44 +1006,30 @@ def join_asof_nearest(
     errors = ev.where(F.col("event_type") == "error").select(
         "user_id", "ts", "event_id", F.lit(0).alias("kind"), F.col("ts").alias("err_ts")
     )
-    both = purchases.unionByName(errors)
-    threshold = hot_key_rows_threshold() if hot_key_rows is None else hot_key_rows
-    hot_n, lo, hi = _hot_key_stats(
-        both, ["user_id"], "ts", cache_key=("asof_both", sf_dir)
+    order = [F.col("ts").asc(), F.col("kind").asc(), F.col("event_id").asc()]
+    wb = (
+        Window.partitionBy("user_id").orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # lo is None when every ts is NULL (ADVICE r13: an alt fixture can
-    # null the column while one key still tops the count) — no chunk
-    # width is computable, and the plain carry degenerates gracefully.
-    if hot_n > threshold and lo is not None:
-        carried = _asof_carry_chunked(
-            both, _asof_chunk_width(hot_n, lo, hi, threshold)
-        )
-    else:
-        order = [F.col("ts").asc(), F.col("kind").asc(), F.col("event_id").asc()]
-        wb = (
-            Window.partitionBy("user_id").orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        # Forward carry as a DESCENDING running frame (reversed order,
-        # unboundedPreceding→currentRow, last ignorenulls) — identical
-        # rows to first(ignorenulls) over (currentRow,
-        # unboundedFollowing), but incremental O(n) per partition where
-        # the forward frame rescans O(run-length) per row on sparse
-        # err_ts (the r12 A/B's "bigger finding": 158 s for 108k rows
-        # in one task was the scan product, not the sort).  Costs one
-        # extra sort of the same exchange; removes the super-linear
-        # term from the BELOW-threshold branch too (a <10k-row key
-        # with long purchase runs no longer pays O(run²)).
-        order_desc = [
-            F.col("ts").desc(), F.col("kind").desc(), F.col("event_id").desc()
-        ]
-        wf = (
-            Window.partitionBy("user_id").orderBy(*order_desc)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        carried = both.withColumn(
-            "back_ts", F.last("err_ts", ignorenulls=True).over(wb)
-        ).withColumn("fwd_ts", F.last("err_ts", ignorenulls=True).over(wf))
+    # Forward carry as a DESCENDING running frame (reversed order,
+    # unboundedPreceding→currentRow, last ignorenulls) — identical rows
+    # to first(ignorenulls) over (currentRow, unboundedFollowing), but
+    # incremental O(n) per partition where the forward frame rescans
+    # O(run-length) per row on sparse err_ts (158 s for 108k rows in
+    # one task was that scan product, not the sort).  Costs one extra
+    # sort of the same exchange.
+    order_desc = [
+        F.col("ts").desc(), F.col("kind").desc(), F.col("event_id").desc()
+    ]
+    wf = (
+        Window.partitionBy("user_id").orderBy(*order_desc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    carried = (
+        purchases.unionByName(errors)
+        .withColumn("back_ts", F.last("err_ts", ignorenulls=True).over(wb))
+        .withColumn("fwd_ts", F.last("err_ts", ignorenulls=True).over(wf))
+    )
     tu = F.expr("unix_micros(ts)")
     back, fwd = F.col("back_ts"), F.col("fwd_ts")
     nearest = (
@@ -1209,13 +1088,13 @@ def _interval_join_user_bucketed(
     from the event time the watermark already tracks, so the identical
     spelling streams.  Cost: 2x purchase-side exchange rows — worth
     paying only for keys heavy enough that one partition's state scan
-    dominates, the same per-key gate as every salting recipe here.
+    dominates.
 
     Expects the registered query's column names (purchase_id, p_user,
     p_ts / error_id, e_user, e_ts).  Since round 13
     ``stream_stream_join`` carries the same spelling behind its static
-    hot-key gate (streams can't run a stats pre-pass, so the knob is
-    ``SPARK_GRAFT_STREAM_HOT_KEYS`` / an explicit argument);
+    hot-key gate (a stream cannot pre-scan its key profile, so the
+    knob is ``SPARK_GRAFT_STREAM_HOT_KEYS`` / an explicit argument);
     tests/test_relational.py proves output identity against the plain
     interval join, boundary and pre-epoch rows included."""
     bucket_us = interval_min * 60 * 1_000_000
@@ -1231,81 +1110,6 @@ def _interval_join_user_bucketed(
         & (e["e_ts"] >= p["p_ts"] - F.expr(f"INTERVAL {interval_min} MINUTES"))
         & (e["e_ts"] <= p["p_ts"]),
     ).select("purchase_id", "error_id", "p_user")
-
-
-def _asof_carry_chunked(both: DataFrame, chunk_us: int) -> DataFrame:
-    """The SCALE.md hot-user as-of recipe, executable: run
-    :func:`join_asof_nearest`'s carry passes inside fixed time CHUNKS
-    of the (user, time) sort, then stitch chunk boundaries with one
-    carry over the per-(user, chunk) SUMMARY frame — so a user holding
-    90% of the rows costs max(rows-per-chunk) per window task instead
-    of one task sorting everything (the round-12 skew bench measured
-    the single-sort carry at 10.4x under a 90%-one-user fixture,
-    docs/bench_skew_r12.json).
-
-    Pass 1 partitions the carry windows by (user, chunk): the
-    back/forward error carries are exact wherever the answer lives in
-    the same chunk and NULL at chunk edges.  Pass 2 aggregates each
-    chunk's first/last error once and carries those ACROSS chunks per
-    user — a frame whose per-user size is #chunks, bounded by
-    timespan/chunk_us and independent of row volume — and the edge
-    NULLs coalesce to the neighbor chunks' values.  Output-identical
-    to the single-sort carry: an in-chunk carry is nearer by
-    construction, and across chunks the nearest earlier (later) error
-    IS the last (first) error of the nearest earlier (later) non-empty
-    chunk.
-
-    Takes the unioned purchase+error frame the registered query builds
-    (user_id, ts, event_id, kind, err_ts — err_ts = ts on error rows,
-    NULL on purchases); returns it with back_ts/fwd_ts, ready for the
-    3-way nearest CASE.  Since round 13 this IS the branch
-    :func:`join_asof_nearest` dispatches to above
-    :func:`hot_key_rows_threshold` (VERDICT r12 ask #1);
-    tests/test_relational.py proves identity at two binding chunk
-    widths, error-less chunks and ties included, and forced-dispatch
-    oracle parity."""
-    order = [F.col("ts").asc(), F.col("kind").asc(), F.col("event_id").asc()]
-    b = both.withColumn(
-        "_chunk", F.floor(F.unix_micros("ts") / F.lit(chunk_us)).cast("long")
-    )
-    wb = (
-        Window.partitionBy("user_id", "_chunk")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wf = (
-        Window.partitionBy("user_id", "_chunk")
-        .orderBy(*order)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    local = b.withColumn(
-        "back_ts", F.last("err_ts", ignorenulls=True).over(wb)
-    ).withColumn("fwd_ts", F.first("err_ts", ignorenulls=True).over(wf))
-    summary = b.groupBy("user_id", "_chunk").agg(
-        F.min("err_ts").alias("_first_err"), F.max("err_ts").alias("_last_err")
-    )
-    ws_prev = (
-        Window.partitionBy("user_id")
-        .orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ws_next = (
-        Window.partitionBy("user_id")
-        .orderBy("_chunk")
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
-    stitched = summary.select(
-        "user_id",
-        "_chunk",
-        F.last("_last_err", ignorenulls=True).over(ws_prev).alias("_prev_last"),
-        F.first("_first_err", ignorenulls=True).over(ws_next).alias("_next_first"),
-    )
-    return (
-        local.join(stitched, ["user_id", "_chunk"])
-        .withColumn("back_ts", F.coalesce("back_ts", "_prev_last"))
-        .withColumn("fwd_ts", F.coalesce("fwd_ts", "_next_first"))
-        .drop("_chunk", "_prev_last", "_next_first")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2771,44 +2575,21 @@ FROM base LEFT JOIN r1 USING (cohort_week) LEFT JOIN r2 USING (cohort_week)
 RESAMPLE_BUCKET_US = 6 * 3600 * 1_000_000  # 6-hour buckets
 
 
-def _last_in_bucket(ev: DataFrame, skewed: bool) -> DataFrame:
+def _last_in_bucket(ev: DataFrame) -> DataFrame:
     """Pass 1 of the resample family: the last event per (user, bucket)
-    by (tu, event_id).  Two output-identical spellings, dispatched by
-    the per-key skew gate:
-
-    * plain (balanced keys): row_number over a (user, bucket) window —
-      one keyed sort, cheapest at driver-fixture cardinalities;
-    * skewed: ``max(struct(tu, event_id, value))`` grouped by
-      (user, bucket) — a HASH aggregate whose partial combines
-      MAP-SIDE, so a hot (user, bucket) reduces before the shuffle and
-      no task ever sorts the hot key's full row set.  Identical pick
-      because the struct orders lexicographically on (tu, event_id) —
-      the same total order as the window's (tu DESC, event_id DESC)
-      tie-break — and event_id is unique, so the trailing value field
-      never decides."""
-    if not skewed:
-        w_last = Window.partitionBy("user_id", "bucket").orderBy(
-            F.desc("tu"), F.desc("event_id")
-        )
-        return (
-            ev.withColumn("rn", F.row_number().over(w_last))
-            .where(F.col("rn") == 1)
-            .select("user_id", "bucket", "value")
-        )
+    by (tu, event_id) — a row_number over one keyed (user, bucket)
+    sort, whose value may be NULL (the newest row wins regardless)."""
+    w_last = Window.partitionBy("user_id", "bucket").orderBy(
+        F.desc("tu"), F.desc("event_id")
+    )
     return (
-        ev.groupBy("user_id", "bucket")
-        .agg(
-            F.max(
-                F.struct(F.col("tu"), F.col("event_id"), F.col("value"))
-            ).alias("_m")
-        )
-        .select("user_id", "bucket", F.col("_m.value").alias("value"))
+        ev.withColumn("rn", F.row_number().over(w_last))
+        .where(F.col("rn") == 1)
+        .select("user_id", "bucket", "value")
     )
 
 
-def events_resample_ffill(
-    spark: SparkSession, sf_dir: str, *, hot_key_rows: int | None = None
-) -> DataFrame:
+def events_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series resampling with forward fill: per user, a REGULAR
     6-hour grid from their first to last event, each point carrying the
     value of the last event at or before it — the gap-filling step
@@ -2821,10 +2602,7 @@ def events_resample_ffill(
     per (user, bucket), one per user — both keyed shuffles over EVENT
     rows only; the grid explodes from per-gap bounds AFTER the carry
     window (round 16 — see the inline note), so grid volume never
-    rides a sort or join.  The volume-sensitive piece is pass 1, so
-    the round-13 skew gate measures the hottest (user, bucket) and
-    dispatches :func:`_last_in_bucket` to its map-side-combining
-    aggregate spelling above :func:`hot_key_rows_threshold`."""
+    rides a sort or join."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -2832,11 +2610,7 @@ def events_resample_ffill(
         F.expr("unix_micros(ts)").alias("tu"),
         F.expr(f"unix_micros(ts) div {RESAMPLE_BUCKET_US}").alias("bucket"),
     )
-    threshold = hot_key_rows_threshold() if hot_key_rows is None else hot_key_rows
-    hot_n, _, _ = _hot_key_stats(
-        ev, ["user_id", "bucket"], cache_key=("resample_ev", sf_dir)
-    )
-    last_in = _last_in_bucket(ev, hot_n > threshold)
+    last_in = _last_in_bucket(ev)
     # Round 16 (guide §2.4/§1.2 "the distributed algorithm"): the
     # retired spelling exploded the per-user grid FIRST and then ran
     # the carry window over every grid row — at the 100× stress
@@ -2875,9 +2649,7 @@ def events_resample_ffill(
     ).select("user_id", "bucket", "value_ff")
 
 
-def events_resample_interpolate(
-    spark: SparkSession, sf_dir: str, *, hot_key_rows: int | None = None
-) -> DataFrame:
+def events_resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resampling with LINEAR INTERPOLATION — the arithmetic sibling of
     :func:`events_resample_ffill`: empty 6-hour grid buckets get
     ``prev + (next − prev) · frac`` between the neighboring known
@@ -2891,8 +2663,7 @@ def events_resample_interpolate(
     total.  Scale: identical to the ffill variant — the carry windows
     run over event-bucket rows only and the grid explodes from per-gap
     bounds afterwards (round 16, see the inline note); no grid-sized
-    join or sort anywhere.  Pass 1 carries the same per-key skew gate
-    (see :func:`events_resample_ffill`)."""
+    join or sort anywhere."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -2900,11 +2671,7 @@ def events_resample_interpolate(
         F.expr("unix_micros(ts)").alias("tu"),
         F.expr(f"unix_micros(ts) div {RESAMPLE_BUCKET_US}").alias("bucket"),
     )
-    threshold = hot_key_rows_threshold() if hot_key_rows is None else hot_key_rows
-    hot_n, _, _ = _hot_key_stats(
-        ev, ["user_id", "bucket"], cache_key=("resample_ev", sf_dir)
-    )
-    last_in = _last_in_bucket(ev, hot_n > threshold)
+    last_in = _last_in_bucket(ev)
     # Round 16 (guide §2.4/§1.2; same move as events_resample_ffill):
     # the retired spelling exploded the 36M-row grid FIRST, left-joined
     # the event buckets onto it and ran FOUR carried columns over two
@@ -5611,25 +5378,7 @@ def basket_sequence_rules(
         .where(F.col("rn") <= history_cap)
         .drop("rn")
     )
-    pairs = _sequence_pairs(cp)
-    return (
-        pairs.groupBy("x_part", "y_part")
-        .agg(
-            F.count(F.lit(1)).alias("support"),
-            F.round(
-                F.sum("min_gap").cast("double") / F.count(F.lit(1)), 6
-            ).alias("mean_min_gap_days"),
-        )
-        .orderBy(F.desc("support"), F.asc("x_part"), F.asc("y_part"))
-        .limit(SEQ_RULES_TOPK)
-    )
-
-
-def _sequence_pairs(cp: DataFrame) -> DataFrame:
-    """(cust, x_part, y_part, min_gap) from a (cust, part, d) history
-    table — the pair stage of :func:`basket_sequence_rules`, factored
-    so the salted spelling below can be property-tested against it."""
-    return (
+    pairs = (
         cp.alias("a")
         .join(
             cp.alias("b"),
@@ -5644,63 +5393,17 @@ def _sequence_pairs(cp: DataFrame) -> DataFrame:
         )
         .agg(F.min(F.col("b.d") - F.col("a.d")).alias("min_gap"))
     )
-
-
-def _sequence_pairs_salted(cp: DataFrame, salts: int = 8) -> DataFrame:
-    """The SCALE.md unbounded-history recipe, executable: split each
-    customer's self-join across ``salts`` shards so a power-law
-    customer's pair generation runs in ``salts`` tasks instead of one.
-
-    Standard skew-salting for a keyed self-join: the LEFT side gets a
-    deterministic per-row salt (md5 of the row content — rand() would
-    break replay determinism), the RIGHT side is replicated once per
-    salt value, and the join key becomes (cust, salt).  Each (cust,
-    x, y) pair is then produced exactly once per left-row occurrence —
-    the same multiset of (b.d - a.d) gaps as the unsalted join, just
-    partitioned differently — so the per-customer ``min`` re-merges
-    losslessly (min is salt-associative: min over shards == global
-    min).  Cost: the right side is shuffled ``salts``x; worth paying
-    only for genuinely heavy keys — production would gate it per-key
-    on a history-length count, exactly like AQE's skew-join split.
-
-    Unregistered (the registered query's SEQ_HISTORY_CAP makes the cap
-    the semantics); tests/test_relational.py proves output identity
-    against :func:`_sequence_pairs` on uncapped fixture histories."""
-    salted_a = cp.withColumn(
-        "salt",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("", "cust", "part", "d")), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-            % salts
-        ).cast("int"),
-    )
-    replicated_b = cp.join(
-        F.broadcast(
-            cp.sparkSession.range(salts).select(F.col("id").cast("int").alias("salt"))
+    return (
+        pairs.groupBy("x_part", "y_part")
+        .agg(
+            F.count(F.lit(1)).alias("support"),
+            F.round(
+                F.sum("min_gap").cast("double") / F.count(F.lit(1)), 6
+            ).alias("mean_min_gap_days"),
         )
+        .orderBy(F.desc("support"), F.asc("x_part"), F.asc("y_part"))
+        .limit(SEQ_RULES_TOPK)
     )
-    pairs = (
-        salted_a.alias("a")
-        .join(
-            replicated_b.alias("b"),
-            (F.col("a.cust") == F.col("b.cust"))
-            & (F.col("a.salt") == F.col("b.salt"))
-            & (F.col("a.d") < F.col("b.d"))
-            & (F.col("a.part") != F.col("b.part")),
-        )
-        .groupBy(
-            F.col("a.cust").alias("cust"),
-            F.col("a.part").alias("x_part"),
-            F.col("b.part").alias("y_part"),
-        )
-        .agg(F.min(F.col("b.d") - F.col("a.d")).alias("min_gap"))
-    )
-    return pairs
 
 
 _SEQ_RULES_ORACLE = f"""

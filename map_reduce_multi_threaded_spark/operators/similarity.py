@@ -1179,8 +1179,7 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     about direction, so the un-normalized sum IS the mean centroid) —
     one 64-column keyed aggregation per iteration, the only shuffle.
 
-    Driver state — the documented exception to the no-collect rule,
-    same class as the skew gate's 1-row ``.first()`` statistic:
+    Driver state — the documented exception to the no-collect rule:
     centroids live on the driver between iterations as a k×64 int64
     matrix (k ≤ 1024, so ≤ 65,536 values — bounded by the
     :func:`kmeans_k` clamp, independent of corpus size).  This is the
@@ -1281,33 +1280,6 @@ a{it + 1} AS (
         "WITH " + ",\n".join(parts)
         + f"\nSELECT vec_id, k AS cluster FROM a{KMEANS_ITERS}"
     )
-
-
-# ---------------------------------------------------------------------------
-# pandas_udf alternative (Arrow-vectorized Python path)
-# ---------------------------------------------------------------------------
-
-def cosine_pandas_udf():
-    """Arrow-batched cosine as a @pandas_udf — the Python-side
-    alternative to the JVM zip_with/aggregate fold used above.
-
-    Kept out of the hot query path (the JVM fold wins: no
-    serialization boundary), but this is the shape to reach for when
-    the per-element math outgrows SQL expressions (real models,
-    numpy/scipy kernels).  ~10-100× faster than a row-at-a-time Python
-    UDF because whole Arrow batches hit numpy at once."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cosine(a: pd.Series, b: pd.Series) -> pd.Series:
-        am = np.stack(a.to_numpy())
-        bm = np.stack(b.to_numpy())
-        dots = (am * bm).sum(axis=1)
-        norms = np.linalg.norm(am, axis=1) * np.linalg.norm(bm, axis=1)
-        return pd.Series(dots / norms)
-
-    return cosine
 
 
 # ---------------------------------------------------------------------------

@@ -2,9 +2,8 @@
 
 The stream-side skew gate (:func:`..streaming.queries.stream_hot_key_
 bucketing`) is a STATIC deployment knob — a stream cannot pre-scan its
-key profile the way the batch family's stats pre-pass does, so the
-bucketed join spelling only helps users who already know their key is
-hot.  This module closes that loop operationally:
+key profile, so the bucketed join spelling only helps users who already
+know their key is hot.  This module closes that loop operationally:
 
 - :func:`state_rows_per_batch` surfaces the per-micro-batch state-store
   row counts the drain telemetry (``windows.RECENT_PROGRESS``) already
@@ -75,10 +74,9 @@ def state_rows_per_batch(sink_name: str) -> list[dict]:
 def hot_key_batch_profile(batch_df: DataFrame, key_col: str) -> dict:
     """One micro-batch's key profile: total rows, the hottest key and
     its count/share.  ONE action over a map-side-combined per-key
-    count — the same partial-agg shape as the batch gate's
-    ``_hot_key_stats`` (operators/relational.py); total and hottest
-    key come from the same 1-row aggregate so the batch is scanned
-    once (ADVICE r14: the old orderBy().first() + count() pair
+    count (a partial aggregate: one shuffled row per key); total and
+    hottest key come from the same 1-row aggregate so the batch is
+    scanned once (ADVICE r14: the old orderBy().first() + count() pair
     recomputed the batch).  Tie-break: equal counts pick the smallest
     key (min over struct(-n, key))."""
     counts = batch_df.groupBy(key_col).agg(F.count(F.lit(1)).alias("_n"))

@@ -276,8 +276,8 @@ FROM events GROUP BY user_id
 
 
 #: static hot-key gate for the stream-stream interval join — a STREAM
-#: cannot run the batch family's stats pre-pass (the key profile isn't
-#: known until the data arrives), so the bucketed spelling is an
+#: cannot pre-scan its key profile (it isn't known until the data
+#: arrives), so the bucketed spelling is an
 #: explicit deployment knob, the static half of VERDICT r12 ask #1
 #: ("heavy-hitter pre-check OR a static threshold argument").  The
 #: round-12 skew bench measured the plain join's per-user state at

@@ -93,6 +93,19 @@ def test_query_builders_start_no_job_once_warm(spark, sf_dir):
         assert jobs == 0, name
 
 
+def test_asof_and_resample_builders_start_no_job(spark, sf_dir, tmp_path):
+    """The as-of and resample builders read no data at build time: on a
+    fresh directory (so no per-directory memo can hide a scan) with the
+    events schema already loaded, building all three starts no job."""
+    from map_reduce_multi_threaded_spark.operators import relational as R
+
+    shutil.copy(f"{sf_dir}/events.parquet", tmp_path / "events.parquet")
+    load_table(spark, str(tmp_path), "events")
+    builders = (R.join_asof_nearest, R.events_resample_ffill, R.events_resample_interpolate)
+    _, jobs = _jobs_started(spark, lambda: [fn(spark, str(tmp_path)) for fn in builders])
+    assert jobs == 0
+
+
 def test_worker_pythonpath_merges_package_parent():
     from map_reduce_multi_threaded_spark.session import _PACKAGE_PARENT, _worker_pythonpath
 

@@ -1,15 +1,10 @@
 """Engine infrastructure: multi-format sources, bucketed zero-shuffle
-joins, metrics/observe, plan helpers, pandas_udf equivalence."""
+joins, metrics/observe, plan helpers."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from map_reduce_multi_threaded_spark.operators.similarity import (
-    _DOT,
-    _to_double,
-    cosine_pandas_udf,
-)
 from map_reduce_multi_threaded_spark.plans.explain import (
     count_exchanges,
     executed_plan,
@@ -125,23 +120,6 @@ def test_observe_metrics_single_pass(spark, sf_dir):
 def test_pushed_filters_helper(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 25)
     assert "l_quantity" in pushed_filters(li)
-
-
-def test_pandas_udf_cosine_matches_jvm_fold(spark, sf_dir):
-    """The Arrow pandas_udf path and the JVM zip_with/aggregate fold
-    agree to float tolerance (different summation assoc is expected)."""
-    emb = load_table(spark, sf_dir, "embeddings").limit(50)
-    a = emb.select(F.col("vec_id").alias("ia"), _to_double("embedding").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("ib"), _to_double("embedding").alias("eb"))
-    pairs = a.join(b, F.col("ia") < F.col("ib"))
-    jvm = F.expr(_DOT.format(a="ea", b="eb")) / (
-        F.sqrt(F.expr(_DOT.format(a="ea", b="ea"))) * F.sqrt(F.expr(_DOT.format(a="eb", b="eb")))
-    )
-    cos = cosine_pandas_udf()
-    both = pairs.select("ia", "ib", jvm.alias("jvm"), cos("ea", "eb").alias("py")).collect()
-    assert len(both) > 0
-    for r in both:
-        assert abs(r["jvm"] - r["py"]) < 1e-9
 
 
 def test_oracle_harness_rejects_hugeint(spark, sf_dir):
@@ -634,9 +612,9 @@ def test_bench_regression_gate_has_a_baseline():
     """The bench regression gate must never silently compare against
     an EMPTY baseline (the r9 find: the driver's BENCH_r08.json shipped
     `parsed: null` + a truncated `tail`, so _previous_bench returned {}
-    and every run since r8 passed the 1.5x gate vacuously).  With the
-    docs/bench_full_*.json fallback, a committed builder artifact
-    always supplies per-query seconds at the default sf."""
+    and every run since r8 passed the 1.5x gate vacuously).  The newest
+    committed driver file must supply per-query seconds at the default
+    sf."""
     import importlib.util
     import os
 
@@ -649,51 +627,3 @@ def test_bench_regression_gate_has_a_baseline():
     prev = bench._previous_bench(0.1, "/root/testdata/sf0.1")
     assert len(prev) >= 100, len(prev)
     assert all(isinstance(v, (int, float)) and v >= 0 for v in prev.values())
-
-
-def test_bench_fallback_baseline_order_is_deterministic(tmp_path):
-    """ADVICE r10 fix pinned: the fallback baseline must be chosen by
-    the ROUND NUMBER encoded in the filename (then name), never file
-    mtime — on a fresh clone every committed artifact shares the
-    checkout mtime, which made the gating artifact (and so the
-    effective thresholds, ±35% per query between same-round runs)
-    arbitrary.  Build a fake docs/ dir where the LOWER round has the
-    NEWER mtime and assert the higher round still gates; within one
-    round, the lexicographically-last session suffix wins."""
-    import importlib.util
-    import json
-    import os
-    import time
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod2", os.path.join(root, "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    docs = tmp_path / "docs"
-    docs.mkdir()
-    sf_dir = "/root/testdata/sf0.1"
-
-    def art(name: str, marker: float) -> None:
-        (docs / name).write_text(json.dumps({
-            "sf": 0.1, "sf_dir": sf_dir, "queries": {"probe": marker},
-        }))
-
-    art("bench_full_r9_s3.json", 9.3)
-    art("bench_full_r10.json", 10.0)
-    art("bench_full_r10_run2.json", 10.2)
-    now = time.time()
-    # adversarial mtimes: the OLDEST round gets the NEWEST mtime
-    os.utime(docs / "bench_full_r9_s3.json", (now, now))
-    os.utime(docs / "bench_full_r10.json", (now - 600, now - 600))
-    os.utime(docs / "bench_full_r10_run2.json", (now - 1200, now - 1200))
-
-    # point the module at the fake repo root (no BENCH_r*.json there,
-    # so the driver-file path yields nothing and the fallback decides);
-    # _previous_bench resolves `here` from module-global __file__ at
-    # call time, so swapping it is enough — no os monkeypatching
-    bench.__file__ = str(tmp_path / "bench.py")
-    prev = bench._previous_bench(0.1, sf_dir)
-    assert prev == {"probe": 10.2}, prev  # round 10, last session suffix

@@ -290,39 +290,23 @@ def test_streaming_exchange_counts_within_budget(stream_plans):
 
 
 #: exchange budgets for the skew-gate DISPATCHED plans (round 13).  The
-#: recipes add exchanges BY DESIGN (chunked carry: +local-window shuffle
-#: +summary-stitch join; bucketed stream join: probe-bucket explode
-#: rides the existing state shuffle) — VERDICT r12 ask #7 says budget
-#: the gated plan explicitly rather than letting the registered
-#: budgets' slack absorb it.  Upper bounds, same contract as
-#: plan_budget.json.
+#: bucketed stream join's probe-bucket explode rides the existing state
+#: shuffle — VERDICT r12 ask #7 says budget the gated plan explicitly
+#: rather than letting the registered budgets' slack absorb it.  Upper
+#: bounds, same contract as plan_budget.json.
 _GATED_PLAN_BUDGET = {
-    "join_asof_nearest": 3,          # plain budget: 1
-    "events_resample_ffill": 2,      # same as plain (window → hash agg)
-    "events_resample_interpolate": 2,
     "stream_stream_join": 2,         # same as plain (keys widen, no new exchange)
 }
 
 
 @pytest.fixture(scope="module")
 def gated_plans(spark):
-    """Physical plans of the skew-gate DISPATCHED branches: the batch
-    family forced via hot_key_rows=0, the streaming join via its static
-    gate under PLAN_ONLY."""
-    from map_reduce_multi_threaded_spark.operators import relational as R
+    """Physical plans of the skew-gate DISPATCHED branches: the
+    streaming join via its static gate under PLAN_ONLY."""
     from map_reduce_multi_threaded_spark.streaming import queries as SQ
     from map_reduce_multi_threaded_spark.streaming import windows as W
 
     out = {}
-    for name, fn in (
-        ("join_asof_nearest", R.join_asof_nearest),
-        ("events_resample_ffill", R.events_resample_ffill),
-        ("events_resample_interpolate", R.events_resample_interpolate),
-    ):
-        out[name] = (
-            fn(spark, SF, hot_key_rows=0)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
     W.PLAN_ONLY = True
     try:
         SQ.stream_stream_join(spark, SF, hot_key_bucketing=True)
@@ -337,10 +321,8 @@ def test_skew_gated_plans_obey_policy(gated_plans):
     """The same ground rules over every skew-gate dispatched plan: no
     row-at-a-time Python eval, no cartesian product, no RDD scan,
     exchange counts within the explicit gated budget — plus the shape
-    each recipe exists for: the chunked carry actually partitions on
-    (user, chunk), the resample hot branch actually drops the pass-1
-    window sort, and the bucketed stream join actually keys its state
-    on the derived bucket."""
+    the recipe exists for: the bucketed stream join actually keys its
+    state on the derived bucket."""
     import re
 
     assert set(gated_plans) == set(_GATED_PLAN_BUDGET)
@@ -354,12 +336,6 @@ def test_skew_gated_plans_obey_policy(gated_plans):
             + plan.count("Exchange SinglePartition")
         )
         assert n <= _GATED_PLAN_BUDGET[name], (name, n)
-    assert re.search(
-        r"hashpartitioning\(user_id#\d+L?, _chunk#\d+L?",
-        gated_plans["join_asof_nearest"],
-    )
-    for name in ("events_resample_ffill", "events_resample_interpolate"):
-        assert "row_number" not in gated_plans[name], name
     assert "StreamingRelation" in gated_plans["stream_stream_join"]
     assert re.search(
         r"_b#\d+L?", gated_plans["stream_stream_join"]

@@ -479,64 +479,6 @@ def test_basket_sequence_history_cap_binds_and_bounds(spark, sf_oracle_dir):
     ).count() == 0
 
 
-def test_sequence_pairs_salted_recipe_is_lossless(spark, sf_oracle_dir):
-    """SCALE.md's unbounded-history skew recipe ('salt the cust key
-    8-16x and re-merge min_gap — min is salt-associative'), proven
-    executable (BACKLOG depth, round 10): over UNCAPPED fixture
-    histories the salted spelling must reproduce the unsalted pair
-    stage exactly — same (cust, x, y) key set, same min_gap on every
-    key — at two salt fan-outs, and the salted join must key on
-    (cust, salt) so a heavy customer's pair generation actually
-    splits across tasks."""
-    import pyspark.sql.functions as F
-
-    from map_reduce_multi_threaded_spark.sources.tables import load_table
-
-    cp = (
-        load_table(spark, sf_oracle_dir, "lineitem")
-        .join(
-            load_table(spark, sf_oracle_dir, "orders").select(
-                "o_orderkey", "o_custkey", "o_orderdate"
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            F.col("o_custkey").alias("cust"),
-            F.col("l_partkey").alias("part"),
-            F.datediff(
-                F.col("o_orderdate").cast("date"),
-                F.lit("1970-01-01").cast("date"),
-            ).alias("d"),
-        )
-        .distinct()
-    )
-    base = {
-        (r["cust"], r["x_part"], r["y_part"]): r["min_gap"]
-        for r in relational._sequence_pairs(cp).collect()
-    }
-    assert base  # uncapped histories produce evidence at this fixture
-    for salts in (2, 8):
-        salted_df = relational._sequence_pairs_salted(cp, salts=salts)
-        # the join must be KEYED on (cust, salt) — `"salt" in plan` is
-        # vacuous (the salt projection alone puts the token in the
-        # plan text; ADVICE r10).  Assert salt rides next to cust in
-        # the shuffle partitioning AND in the join's own key list, so
-        # a heavy customer's rows actually land in `salts` partitions.
-        plan = _plan(salted_df)
-        assert re.search(r"hashpartitioning\(cust#\d+L?, salt#\d+", plan), plan
-        assert re.search(
-            r"(SortMergeJoin|ShuffledHashJoin) \[cust#\d+L?, salt#\d+", plan
-        ), plan
-        salted = {
-            (r["cust"], r["x_part"], r["y_part"]): r["min_gap"]
-            for r in salted_df.collect()
-        }
-        assert salted == base, (
-            f"salted({salts}) diverged: "
-            f"{len(set(salted) ^ set(base))} key diffs"
-        )
-
-
 def _interval_join_plain(purchases, errors, interval_min=10):
     """The registered stream_stream_join/oracle spelling, batch form —
     the identity baseline for the bucketed recipe."""
@@ -619,149 +561,10 @@ def test_interval_join_bucketed_recipe_is_identical(spark, sf_oracle_dir):
     } == crafted_plain
 
 
-def test_asof_carry_chunked_recipe_is_identical(spark, sf_oracle_dir):
-    """SCALE.md's hot-user as-of recipe (round 12): the chunked carry
-    must reproduce the single-sort carry's back_ts/fwd_ts exactly at
-    two chunk widths that BIND on the fixture (many chunks per user),
-    its pass-1 windows must actually partition on (user, chunk), and
-    crafted error-less-chunk / same-ts-tie / pre-epoch rows must
-    stitch identically."""
-    import datetime
-
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    from map_reduce_multi_threaded_spark.sources.tables import load_table
-
-    def build_both(ev):
-        purchases = ev.where(F.col("event_type") == "purchase").select(
-            "user_id", "ts", "event_id", F.lit(1).alias("kind"),
-            F.lit(None).cast("timestamp").alias("err_ts"),
-        )
-        errors = ev.where(F.col("event_type") == "error").select(
-            "user_id", "ts", "event_id", F.lit(0).alias("kind"),
-            F.col("ts").alias("err_ts"),
-        )
-        return purchases.unionByName(errors)
-
-    def plain_carry(both):
-        order = [F.col("ts").asc(), F.col("kind").asc(), F.col("event_id").asc()]
-        wb = (
-            Window.partitionBy("user_id").orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        wf = (
-            Window.partitionBy("user_id").orderBy(*order)
-            .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        )
-        return both.withColumn(
-            "back_ts", F.last("err_ts", ignorenulls=True).over(wb)
-        ).withColumn("fwd_ts", F.first("err_ts", ignorenulls=True).over(wf))
-
-    def carries(df):
-        return {
-            r["event_id"]: (r["back_ts"], r["fwd_ts"])
-            for r in df.where(F.col("kind") == 1).collect()
-        }
-
-    both = build_both(load_table(spark, sf_oracle_dir, "events"))
-    base = carries(plain_carry(both))
-    assert base
-    for chunk_us in (86_400_000_000, 3_600_000_000):  # 1 day, 1 hour
-        chunked_df = relational._asof_carry_chunked(both, chunk_us)
-        # the recipe only shards if pass 1's windows key on (user, chunk)
-        assert re.search(
-            r"hashpartitioning\(user_id#\d+L?, _chunk#\d+L?", _plan(chunked_df)
-        ), chunk_us
-        # ...and only proves anything if chunking BINDS on this fixture
-        n_users, n_chunks = (
-            both.withColumn(
-                "_c", F.floor(F.unix_micros("ts") / F.lit(chunk_us))
-            )
-            .agg(
-                F.countDistinct("user_id"),
-                F.countDistinct("user_id", "_c"),
-            )
-            .first()
-        )
-        assert n_chunks > 2 * n_users, (chunk_us, n_users, n_chunks)
-        assert carries(chunked_df) == base, f"chunk_us={chunk_us} diverged"
-
-    # crafted: errors confined to one early chunk (the stitch must
-    # carry across error-less chunks), a same-ts tie (error sorts
-    # before the purchase: back_ts == ts), and pre-epoch rows
-    T = datetime.datetime
-    rows = [
-        # user 9: errors only in hour-chunk 0; purchases hours later
-        (9, T(1970, 1, 1, 0, 0, 0), 1, "error"),
-        (9, T(1970, 1, 1, 0, 5, 0), 2, "error"),
-        (9, T(1970, 1, 1, 3, 30, 0), 3, "purchase"),
-        (9, T(1970, 1, 1, 7, 0, 0), 4, "purchase"),
-        # user 8: tie — error at the purchase's exact ts, then one after
-        (8, T(1970, 1, 2, 12, 0, 0), 5, "purchase"),
-        (8, T(1970, 1, 2, 12, 0, 0), 6, "error"),
-        (8, T(1970, 1, 2, 12, 0, 0, 1), 7, "error"),
-        # user 7: pre-epoch purchase between two pre-epoch errors
-        (7, T(1969, 12, 31, 22, 0, 0), 8, "error"),
-        (7, T(1969, 12, 31, 23, 30, 0), 9, "purchase"),
-        (7, T(1969, 12, 31, 23, 45, 0), 10, "error"),
-    ]
-    ev = spark.createDataFrame(
-        rows, "user_id long, ts timestamp, event_id long, event_type string"
-    )
-    cboth = build_both(ev)
-    cbase = carries(plain_carry(cboth))
-    # spot-check the baseline itself so the identity isn't vacuous
-    e5 = T(1970, 1, 2, 12, 0, 0)
-    assert cbase[3] == (T(1970, 1, 1, 0, 5, 0), None)
-    assert cbase[5] == (e5, T(1970, 1, 2, 12, 0, 0, 1))
-    assert cbase[9] == (
-        T(1969, 12, 31, 22, 0, 0), T(1969, 12, 31, 23, 45, 0)
-    )
-    for chunk_us in (3_600_000_000, 600_000_000):  # 1 hour, 10 min
-        assert carries(
-            relational._asof_carry_chunked(cboth, chunk_us)
-        ) == cbase, f"crafted chunk_us={chunk_us} diverged"
-
-
-def test_asof_skew_gate_dispatches_and_matches_oracle(spark, sf_oracle_dir):
-    """Round-13 per-key skew gate (VERDICT r12 ask #1): the registered
-    join_asof_nearest must pick the plain single-sort carry at fixture
-    key cardinalities (~100 rows/user — cheapest plan there) and the
-    chunked carry when the hottest key crosses the threshold — proven
-    by forcing the threshold to 0 and hash-comparing the DISPATCHED
-    plan against the same DuckDB oracle the driver uses."""
-    spec = {s.name: s for s in relational.SPECS}["join_asof_nearest"]
-    plain = relational.join_asof_nearest(spark, sf_oracle_dir)
-    assert "_chunk" not in _plan(plain)  # fixture stays under threshold
-    hot = relational.join_asof_nearest(spark, sf_oracle_dir, hot_key_rows=0)
-    assert re.search(
-        r"hashpartitioning\(user_id#\d+L?, _chunk#\d+L?", _plan(hot)
-    ), "forced dispatch did not select the chunked carry"
-    compare(hot, spec.oracle, sf_oracle_dir)
-
-
-def test_resample_skew_gate_dispatches_and_matches_oracle(spark, sf_oracle_dir):
-    """The resample family's pass-1 gate: plain branch keeps the
-    row_number window; the hot branch replaces it with the map-side-
-    combining max(struct) aggregate (no per-partition sort of the hot
-    key), and the dispatched plan still hash-matches the oracle."""
-    specs = {s.name: s for s in relational.SPECS}
-    for name, fn in (
-        ("events_resample_ffill", relational.events_resample_ffill),
-        ("events_resample_interpolate", relational.events_resample_interpolate),
-    ):
-        assert "row_number" in _plan(fn(spark, sf_oracle_dir)), name
-        hot = fn(spark, sf_oracle_dir, hot_key_rows=0)
-        p = _plan(hot)
-        assert "row_number" not in p, f"{name}: pass 1 still a window sort"
-        compare(hot, specs[name].oracle, sf_oracle_dir)
-
-
 def test_last_in_bucket_spellings_identical(spark):
-    """The two pass-1 spellings must pick the SAME row on crafted
-    frames: null values (a null value must win if its (tu, event_id)
-    is newest), negative buckets (pre-epoch), and single-row groups."""
+    """Resample pass 1 must pick the newest (tu, event_id) row per
+    (user, bucket) on crafted frames: a NULL value wins when its row is
+    newest, a negative (pre-epoch) bucket, and a single-row group."""
     import pyspark.sql.functions as F
 
     rows = [
@@ -775,51 +578,11 @@ def test_last_in_bucket_spellings_identical(spark):
     ev = spark.createDataFrame(
         rows, "user_id long, bucket long, event_id long, value double"
     ).withColumn("tu", F.col("event_id") * 1000)
-    plain = {
+    got = {
         (r["user_id"], r["bucket"]): r["value"]
-        for r in relational._last_in_bucket(ev, skewed=False).collect()
+        for r in relational._last_in_bucket(ev).collect()
     }
-    skewed = {
-        (r["user_id"], r["bucket"]): r["value"]
-        for r in relational._last_in_bucket(ev, skewed=True).collect()
-    }
-    assert plain == {(1, 5): None, (1, -3): 2.5, (2, 7): 9.0}
-    assert skewed == plain
-
-
-def test_hot_key_stats_and_chunk_width(spark):
-    """Gate plumbing edges: empty input → (0, None, None) → plain
-    branch; chunk width stays positive at zero timespan and the chunk
-    count clamps to [16, 8192]."""
-    empty = spark.range(0).selectExpr(
-        "id AS user_id", "CAST(NULL AS timestamp) AS ts"
-    )
-    assert relational._hot_key_stats(empty, ["user_id"], "ts") == (0, None, None)
-    day = 86_400_000_000
-    # 108k hot rows over 100 days at an (r13-era) 10k threshold →
-    # ceil(108000*4/10000) = 44 chunks ≈ 2.3-day width
-    w = relational._asof_chunk_width(108_000, 0, 100 * day, 10_000)
-    assert 2 * day < w < 3 * day
-    # tiny hot count clamps to 16 chunks; huge clamps to 8192
-    assert relational._asof_chunk_width(1, 0, 160 * day, 10_000) == 10 * day
-    assert (
-        relational._asof_chunk_width(10**9, 0, 8192 * day, 1) == day
-    )
-    # zero timespan (frozen time) still yields a positive width
-    assert relational._asof_chunk_width(50_000, 7, 7, 10_000) == 1
-
-
-def test_hot_key_threshold_env_read_at_call_time(monkeypatch):
-    """ADVICE r13: the knob must take effect AFTER import (the old
-    module-level read froze it), and a malformed value must fail as a
-    scoped ValueError, not crash module import."""
-    monkeypatch.delenv("SPARK_GRAFT_HOT_KEY_ROWS", raising=False)
-    assert relational.hot_key_rows_threshold() == 1_000_000
-    monkeypatch.setenv("SPARK_GRAFT_HOT_KEY_ROWS", "123")
-    assert relational.hot_key_rows_threshold() == 123
-    monkeypatch.setenv("SPARK_GRAFT_HOT_KEY_ROWS", "lots")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_HOT_KEY_ROWS"):
-        relational.hot_key_rows_threshold()
+    assert got == {(1, 5): None, (1, -3): 2.5, (2, 7): 9.0}
 
 
 def test_stream_hot_key_knob_read_at_call_time(monkeypatch):
@@ -831,32 +594,10 @@ def test_stream_hot_key_knob_read_at_call_time(monkeypatch):
     assert SQ.stream_hot_key_bucketing() is True
 
 
-def test_hot_key_stats_memoized_per_cache_key(spark):
-    """With cache_key the pre-pass runs once per (tag, keys, ts_col)
-    per session — the resample pair shares one scan (VERDICT r13 ask
-    #4).  Proven by poisoning the memo and seeing the poisoned value
-    come back instead of a recomputation."""
-    relational._HOT_KEY_STATS_CACHE.clear()
-    df = spark.range(5).selectExpr("id % 2 AS user_id")
-    tag = ("test_memo", "/nonexistent")
-    r1 = relational._hot_key_stats(df, ["user_id"], cache_key=tag)
-    assert r1 == (3, None, None)
-    memo_key = (tag, ("user_id",), None)
-    assert relational._HOT_KEY_STATS_CACHE[memo_key] == r1
-    relational._HOT_KEY_STATS_CACHE[memo_key] = (999, None, None)
-    assert relational._hot_key_stats(df, ["user_id"], cache_key=tag) == (
-        999, None, None,
-    )
-    # no cache_key → always recomputed, memo untouched
-    assert relational._hot_key_stats(df, ["user_id"]) == (3, None, None)
-    relational._HOT_KEY_STATS_CACHE.clear()
-
-
 def test_asof_gate_all_null_ts_falls_back_plain(spark, tmp_path):
-    """ADVICE r13: every ts NULL but one key above the threshold must
-    fall back to the PLAIN carry (no chunk width is computable from a
-    null timespan), building a valid degenerate plan instead of
-    raising TypeError at plan-build time."""
+    """An events table whose ts is NULL on every row (an alt fixture
+    can null the column) must build and run: every purchase comes back
+    once, with no nearest error, instead of raising."""
     import pyspark.sql.functions as F
 
     rows = [(1, "purchase", i) for i in range(4)] + [(1, "error", 10)]
@@ -868,9 +609,7 @@ def test_asof_gate_all_null_ts_falls_back_plain(spark, tmp_path):
         .withColumn("value", F.lit(1.0))
     )
     ev.write.parquet(str(tmp_path / "events.parquet"))
-    out = relational.join_asof_nearest(spark, str(tmp_path), hot_key_rows=2)
-    assert "_chunk" not in _plan(out)
-    got = out.collect()
+    got = relational.join_asof_nearest(spark, str(tmp_path)).collect()
     assert len(got) == 4
     assert all(r["nearest_error_ts"] is None for r in got)
 
@@ -1365,7 +1104,7 @@ def test_resample_gap_explode_adversarial_oracle(spark, tmp_path):
     ALL NULL, a single-event user, multi-bucket gaps between known
     points, and a NULL-value event bucket INTERIOR to two knowns
     (must interpolate, not carry) — hash-compared against the
-    unchanged DuckDB oracle, on BOTH skew-gate branches."""
+    unchanged DuckDB oracle."""
     import datetime as dt
     import shutil
 
@@ -1427,6 +1166,3 @@ def test_resample_gap_explode_adversarial_oracle(spark, tmp_path):
         ("events_resample_interpolate", relational.events_resample_interpolate),
     ):
         compare(fn(spark, str(dst)), specs[name].oracle, str(dst))
-        compare(  # forced hot branch: same answer through max(struct)
-            fn(spark, str(dst), hot_key_rows=0), specs[name].oracle, str(dst)
-        )
