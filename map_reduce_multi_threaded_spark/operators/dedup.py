@@ -38,7 +38,7 @@ from ..functions.text import (
 _DUCK_LC_TEXT = duck_ascii_lower("trim(text, ' ')")
 _DUCK_LC_BTEXT = duck_ascii_lower("trim(b.text, ' ')")
 from ..registry import QuerySpec
-from ..sources.tables import load_table, spread_unsplittable_scan
+from ..sources.tables import load_table
 
 # ---------------------------------------------------------------------------
 # shared constants (must match between Spark plan and DuckDB oracle)
@@ -73,17 +73,8 @@ def shingles(spark: SparkSession, sf_dir: str, k: int = SHINGLE_K) -> DataFrame:
 
     JVM-side throughout: split → transform(sequence) window → distinct
     explode.  At 100 TB this is a narrow map stage; the only shuffle is
-    whatever consumes it.  Round 16 (guide §2.5): the scan is spread
-    first when the parquet layout cannot feed every core — the driver
-    fixtures are single-row-group files, so the shingle transform (and
-    every consumer's eager localCheckpoint of it) ran as ONE task,
-    measured 10.0 s of dedup_prefix_filter's stress build."""
-    return _shingles_from(
-        spread_unsplittable_scan(
-            spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-        ),
-        k,
-    )
+    whatever consumes it."""
+    return _shingles_from(load_table(spark, sf_dir, "documents", cpu_heavy=True), k)
 
 
 def _shingles_from(d: DataFrame, k: int = SHINGLE_K) -> DataFrame:

@@ -36,7 +36,7 @@ from ..functions.text import ascii_lower, duck_ascii_lower, duck_md5_long
 #: oracle-side casefold fragment from the ONE canonical helper (ADVICE r11)
 _DUCK_LC_TEXT = duck_ascii_lower("text")
 from ..registry import QuerySpec
-from ..sources.tables import load_table, spread_unsplittable_scan
+from ..sources.tables import load_table
 
 # --------------------------------------------------------------------------
 # deterministic aggregate helpers (Spark side)
@@ -2947,9 +2947,7 @@ def sql_collated_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import md5_long
 
     d = (
-        spread_unsplittable_scan(  # round 16: guide §2.5
-            spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-        )
+        load_table(spark, sf_dir, "documents", cpu_heavy=True)
         .select(
             "doc_id", F.posexplode(F.split("text", r"\s+")).alias("pos", "term")
         )
@@ -6875,9 +6873,7 @@ def agg_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import md5_bucket
 
     toks = (
-        spread_unsplittable_scan(  # round 16: guide §2.5 — 3 consumers of a 1-task token explode
-            spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-        )
+        load_table(spark, sf_dir, "documents", cpu_heavy=True)
         .select(F.explode(F.split(ascii_lower("text"), r"\s+")).alias("w"))
         .where(F.col("w") != "")
     )

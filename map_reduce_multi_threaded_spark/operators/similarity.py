@@ -29,7 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import QuerySpec
-from ..sources.tables import load_table, scan_max_tasks, spread_unsplittable_scan
+from ..sources.tables import load_table, scan_max_tasks
 
 DIM = 64
 K_NEIGHBORS = 5
@@ -90,12 +90,6 @@ def kmeans_k(n: int) -> int:
     )
 
 
-#: per-session corpus-count memo (same role as the relational skew
-#: gate's stats cache: one build-time scan per fixture dir, plan
-#: dispatch pinned to build time — fixture dirs are immutable).
-_CORPUS_COUNT_CACHE: dict[str, int] = {}
-
-
 def corpus_count(spark: SparkSession, sf_dir: str) -> int:
     """Embedding-corpus row count for the adaptive parameter formulas.
 
@@ -106,17 +100,14 @@ def corpus_count(spark: SparkSession, sf_dir: str) -> int:
     cost ~0.3 s of every first `dedup_semantic`/`kmeans_assign` build,
     and at 100 TB a footer read is O(files) driver metadata, not a
     cluster job.  The footer read is the engine's one stats reader,
-    ``tables.scan_max_tasks``.  Falls back to the count() job for any
-    layout it cannot resolve (nested dirs of a partitioned table,
-    non-local fs).  Fixture dirs are immutable, so the per-session memo
-    stands."""
-    if sf_dir not in _CORPUS_COUNT_CACHE:
-        stats = scan_max_tasks(sf_dir, "embeddings")
-        _CORPUS_COUNT_CACHE[sf_dir] = (
-            stats[1] if stats is not None
-            else load_table(spark, sf_dir, "embeddings").count()
-        )
-    return _CORPUS_COUNT_CACHE[sf_dir]
+    ``tables.scan_max_tasks``, memoized per file identity, so a file
+    rewritten at the same path is counted again.  Falls back to the
+    count() job for any layout it cannot resolve (nested dirs of a
+    partitioned table, non-local fs)."""
+    stats = scan_max_tasks(sf_dir, "embeddings")
+    if stats is not None:
+        return stats[1]
+    return load_table(spark, sf_dir, "embeddings").count()
 
 
 #: the two parameter formulas as DuckDB SQL — the exact expression
@@ -240,9 +231,7 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking exchange (guide §2.3).  This stays the EXACT ground-truth
     baseline for the recall harness — only the execution engine of
     the same fold changed, bit-identically (see _cos_scorer)."""
-    raw = spread_unsplittable_scan(  # round 16: single-row-group scan starves the Arrow maps (guide §2.5)
-        spark, load_table(spark, sf_dir, "embeddings"), sf_dir, "embeddings"
-    ).select("vec_id", "embedding")
+    raw = load_table(spark, sf_dir, "embeddings", cpu_heavy=True).select("vec_id", "embedding")
     q_rows = sorted(
         (int(r["vec_id"]), list(r["embedding"]))
         for r in raw.where(F.col("vec_id") < N_QUERIES).collect()
@@ -451,9 +440,7 @@ def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         b = (bits * weights).sum(axis=2)
         return pd.Series(list(b))
 
-    emb = spread_unsplittable_scan(  # round 16: single-row-group scan starves the Arrow maps (guide §2.5)
-        spark, load_table(spark, sf_dir, "embeddings"), sf_dir, "embeddings"
-    )
+    emb = load_table(spark, sf_dir, "embeddings", cpu_heavy=True)
     return emb.select(
         "vec_id", F.posexplode(buckets("embedding")).alias("t", "bucket")
     )
@@ -716,9 +703,7 @@ def knn_scalar_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     not just the score — hash-matches the oracle.  Composable with
     the LSH/IVF bucketing paths: this query certifies the
     compression, those certify the candidate pruning."""
-    raw = spread_unsplittable_scan(  # round 16: single-row-group scan starves the Arrow maps (guide §2.5)
-        spark, load_table(spark, sf_dir, "embeddings"), sf_dir, "embeddings"
-    ).select("vec_id", "embedding")
+    raw = load_table(spark, sf_dir, "embeddings", cpu_heavy=True).select("vec_id", "embedding")
     # ≤ N_QUERIES raw query embeddings: bounded driver state (the
     # documented no-collect exception class — see kmeans_assign).
     q_rows = sorted(
@@ -893,9 +878,7 @@ def _cell_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join of the 8-row centroid table against the corpus, then
     an argmax window per vector — the exact shape of IVF list-building
     on a cluster."""
-    emb = _with_norm(spread_unsplittable_scan(  # round 16: guide §2.5
-        spark, load_table(spark, sf_dir, "embeddings"), sf_dir, "embeddings"
-    ))
+    emb = _with_norm(load_table(spark, sf_dir, "embeddings", cpu_heavy=True))
     cents = F.broadcast(
         emb.where(
             (F.col("vec_id") >= _CENTROID_BASE)
@@ -933,9 +916,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     real clustered embeddings IVF recall is far above that floor; on
     unstructured data multi-table LSH (knn_lsh) or brute force is the
     better tool.  That trade-off is exactly why both paths exist."""
-    emb = _with_norm(spread_unsplittable_scan(  # round 16: guide §2.5
-        spark, load_table(spark, sf_dir, "embeddings"), sf_dir, "embeddings"
-    ))
+    emb = _with_norm(load_table(spark, sf_dir, "embeddings", cpu_heavy=True))
     assigned = _cell_assignments(spark, sf_dir)
     # per-query probe list: N_PROBE nearest centroids
     cents = F.broadcast(
@@ -1041,9 +1022,7 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     depend on partition/visit order while integer sums do not.  Scoring
     then uses ordered double folds (fixed per-row order — the proven
     cross-engine-identical shape)."""
-    emb = spread_unsplittable_scan(  # round 16: single-row-group scan starves the Arrow maps (guide §2.5)
-        spark, load_table(spark, sf_dir, "embeddings"), sf_dir, "embeddings"
-    )
+    emb = load_table(spark, sf_dir, "embeddings", cpu_heavy=True)
     qv = F.expr(
         f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {KMEANS_Q}) AS BIGINT))"
     )

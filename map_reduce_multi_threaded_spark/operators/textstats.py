@@ -19,7 +19,7 @@ from ..functions.text import ascii_lower, duck_ascii_lower
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import QuerySpec
-from ..sources.tables import load_table, spread_unsplittable_scan
+from ..sources.tables import load_table
 
 #: oracle-side casefold fragment from the ONE canonical helper (ADVICE r11)
 _DUCK_LC_TEXT = duck_ascii_lower("text")
@@ -236,14 +236,10 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     one JVM MessageDigest construction per character position."""
     from pyspark.sql.functions import pandas_udf
 
-    d = spread_unsplittable_scan(
-        spark,
-        # filter BEFORE the spread so the scan keeps its pushed filters
-        load_table(spark, sf_dir, "documents")
+    d = (
+        load_table(spark, sf_dir, "documents", cpu_heavy=True)
         .where(F.length("text") >= SHINGLE_CHARS)
-        .select("doc_id", "text"),
-        sf_dir,
-        "documents",
+        .select("doc_id", "text")
     )
     fp = pandas_udf("string")(_fp_batch())
     return d.select("doc_id", fp("text").alias("fingerprint"))
@@ -535,16 +531,7 @@ def text_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by document length, never corpus-wide.  Hash collisions
     (60-bit md5) are corpus-negligible and the oracle computes the
     identical hash, so parity is unconditional."""
-    # spread the single-row-group scan before the per-position gram
-    # transform (round 16, guide §2.5): the md5-per-gram map ran as
-    # ONE task — twice, once per consumer — measured 32.2 s at the
-    # 100× stress fixture with 31 idle cores
-    d = spread_unsplittable_scan(
-        spark,
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        sf_dir,
-        "documents",
-    )
+    d = load_table(spark, sf_dir, "documents", cpu_heavy=True).select("doc_id", "text")
     # materialize the token array ONCE per row before the per-position
     # lambda: referencing filter(split(text)) INSIDE transform()
     # re-tokenizes the document at every position — O(len²) per doc,
@@ -768,9 +755,7 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "i -> array_join(slice(t, i, {n}), ' '))"
     ).format(n=DECON_N, n1=DECON_N - 1)
     toks = (
-        spread_unsplittable_scan(  # round 16: single-row-group scan starves the gram map (guide §2.5)
-            spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-        )
+        load_table(spark, sf_dir, "documents", cpu_heavy=True)
         .select(
             "doc_id",
             F.expr(r"filter(split(text, '\\s+'), x -> length(x) > 0)").alias("t"),
@@ -831,9 +816,7 @@ def text_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "i -> array_join(slice(t, i, {n}), ' '))"
     ).format(n=DECON_N, n1=DECON_N - 1)
     return (
-        spread_unsplittable_scan(  # round 16: single-row-group scan starves the gram map (guide §2.5)
-            spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-        )
+        load_table(spark, sf_dir, "documents", cpu_heavy=True)
         .select(F.expr(r"filter(split(text, '\\s+'), x -> length(x) > 0)").alias("t"))
         .where(F.expr(f"size(t) >= {DECON_N}"))
         .select(F.explode(F.expr(grams_expr)).alias("gram"))
@@ -877,9 +860,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division is final, rounded to 9 dp so libm can't reorder
     anything."""
     toks = (
-        spread_unsplittable_scan(  # round 16: single-row-group scan starves the gram map (guide §2.5)
-            spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-        )
+        load_table(spark, sf_dir, "documents", cpu_heavy=True)
         .select(
             "doc_id",
             F.expr(r"filter(split(text, '\\s+'), x -> length(x) > 0)").alias("t"),
@@ -958,9 +939,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "i -> array_join(slice(t, i, {n}), ' '))"
     ).format(n=REP_N, n1=REP_N - 1)
     return (
-        spread_unsplittable_scan(  # round 16: single-row-group scan starves the gram map (guide §2.5)
-            spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-        )
+        load_table(spark, sf_dir, "documents", cpu_heavy=True)
         .select(
             "doc_id",
             F.expr(r"filter(split(text, '\\s+'), x -> length(x) > 0)").alias("t"),
@@ -1012,9 +991,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-doc OOV count is then a pure higher-order-function map —
     no explode, no second shuffle over the corpus.  The one double
     division is final."""
-    d = spread_unsplittable_scan(  # round 16: guide §2.5
-        spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-    ).select(
+    d = load_table(spark, sf_dir, "documents", cpu_heavy=True).select(
         "doc_id",
         F.expr(r"filter(split(text, '\\s+'), x -> length(x) > 0)").alias("t"),
     )
@@ -1151,9 +1128,7 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME keys — vocab-sized tables stay keyed shuffles, never
     broadcast (SCALE.md rule) — → one doc-keyed agg.  The model is
     two count tables; scoring is pure joins."""
-    d = spread_unsplittable_scan(  # round 16: guide §2.5
-        spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-    ).select(
+    d = load_table(spark, sf_dir, "documents", cpu_heavy=True).select(
         "doc_id",
         F.expr(r"filter(split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'), x -> length(x) > 0)").alias("t"),
     )

@@ -21,7 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import QuerySpec
-from ..sources.tables import load_table, spread_unsplittable_scan
+from ..sources.tables import load_table
 
 # NOTE: @pandas_udf / @udtf decorators run eagerly and need an active
 # SparkContext, so every decorated definition lives INSIDE its query
@@ -165,9 +165,7 @@ def udtf_top_terms_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
             vals = [t for t, _ in top[:n]]
             yield tuple(vals + [None] * (n - len(vals)))
 
-    spread_unsplittable_scan(  # round 16: guide §2.5 — per-doc Counter UDTF ran 1-task
-        spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-    ).createOrReplaceTempView("docs_poly")
+    load_table(spark, sf_dir, "documents", cpu_heavy=True).createOrReplaceTempView("docs_poly")
     spark.udtf.register("top_terms", TopTerms)
     return spark.sql(
         f"""

@@ -99,6 +99,7 @@ _REVERIFY_FIRST: dict[str, int] = {
     # round-16 rewrites (VERDICT r16 #2): no driver green since them
     "events_resample_ffill": 16,
     "events_resample_interpolate": 16,
+    "text_fingerprint": 16,
     "text_duplicate_spans": 16,
     "text_decontaminate": 16,
     "text_ngram_counts": 16,

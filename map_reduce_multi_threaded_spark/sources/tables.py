@@ -3,8 +3,10 @@
 Generalizes the reference's single directory-listing source
 (``map_reduce.cpp:477-495``) into a catalog of typed tables.  Spark's
 ``InMemoryFileIndex`` + task scheduler replace the reference's
-master-thread pull queue (``map_reduce.cpp:127-150``) wholesale — file
+master-thread pull queue (``map_reduce.cpp:127-150``) — file
 splits are assigned to tasks with locality and speculation for free.
+The one split decision left to this module is the spread of a scan
+too coarse to feed every core (``load_table(..., cpu_heavy=True)``).
 
 Scale note: at 100 TB these would be partitioned/bucketed tables, not
 single files; nothing else in the engine would change, because every
@@ -36,11 +38,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-#: Small dimension tables — safe to broadcast at any realistic scale
-#: (region/nation are bounded by geography; supplier stays ~1e4/sf).
-BROADCAST_SAFE = frozenset({"region", "nation", "supplier"})
-
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
     """Normalize ``events.ts`` to session-UTC ``TimestampType`` whatever
@@ -106,7 +103,20 @@ def file_identity(path: str) -> tuple | None:
     return path, tuple(sorted(listing))
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+#: Minimum rows each would-be task must receive for the spread to be
+#: worth an exchange: below ~1000 rows/core, task-launch and stage
+#: latency dominate any per-row work a narrow map could parallelize
+#: (measured: spreading the 2,000-row sf0.1 embeddings cost
+#: knn_scalar_quant +0.9 s of pure stage latency at the bench scale
+#: while buying nothing — the 80k-row stress corpus is where the same
+#: spread wins 2–4×).  Scale-neutral: compares data volume to the
+#: session's parallelism, not to any host constant.
+SPREAD_MIN_ROWS_PER_TASK = 1000
+
+
+def load_table(
+    spark: SparkSession, sf_dir: str, name: str, *, cpu_heavy: bool = False
+) -> DataFrame:
     """Load one test table (``events.ts`` → see normalize_event_ts).
 
     The first load of a file infers its schema (``spark.read.parquet``
@@ -118,7 +128,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     listing of those) plus the session's values of the confs that
     change inference (``_INFERENCE_CONFS``), so a rewritten file or a
     changed conf is inferred again.  Nested/partitioned layouts are
-    always inferred."""
+    always inferred.
+
+    ``cpu_heavy=True`` is the caller saying a CPU-heavy narrow map
+    (shingling, per-gram hashing, an Arrow scorer) consumes the scan.
+    Spark cannot split a parquet row group, so a table with fewer row
+    groups than ``defaultParallelism`` feeds that map with fewer tasks
+    than cores — every test fixture table is one row group, and
+    text_fingerprint ran 46.8 s as ONE task on the 100× stress fixture.
+    The scan is then round-robin repartitioned to
+    ``defaultParallelism`` when both hold (:func:`scan_max_tasks`, no
+    Spark job):
+
+    - footer row groups < ``defaultParallelism``, and
+    - footer rows >= ``SPREAD_MIN_ROWS_PER_TASK × defaultParallelism``.
+
+    The rows are the footer count BEFORE any filter the caller applies
+    (text_fingerprint keeps only texts of 8+ chars): the gate measures
+    the scan, not what survives it.  On a table with enough row groups
+    the gate is false and no exchange is added.  Filters and
+    projections written after the load still reach the scan: Catalyst
+    pushes them below the round-robin exchange, into the FileScan's
+    PushedFilters, DataFilters and ReadSchema.  Round-robin
+    repartition is retry-safe
+    (``spark.sql.execution.sortBeforeRepartition``).
+
+    The spread is opt-in because the scan cannot tell how heavy the
+    downstream map is, and an exchange in front of a cheap per-row
+    aggregate slows it (repartitioning lineitem before
+    q1_pricing_summary's integer aggregate measured 0.9 → 1.6 s at
+    sf0.1)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -136,6 +175,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = spark.read.schema(schema).parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
+    if cpu_heavy:
+        want = spark.sparkContext.defaultParallelism
+        stats = scan_max_tasks(sf_dir, name)
+        if (
+            stats is not None
+            and stats[0] < want
+            and stats[1] >= SPREAD_MIN_ROWS_PER_TASK * want
+        ):
+            return df.repartition(want)
     return df
 
 
@@ -181,48 +229,6 @@ def _footer_stats(path: str) -> tuple[int, int]:
     return groups, rows
 
 
-#: Minimum rows each would-be task must receive for the spread to be
-#: worth an exchange: below ~1000 rows/core, task-launch and stage
-#: latency dominate any per-row work a narrow map could parallelize
-#: (measured: spreading the 2,000-row sf0.1 embeddings cost
-#: knn_scalar_quant +0.9 s of pure stage latency at the bench scale
-#: while buying nothing — the 80k-row stress corpus is where the same
-#: spread wins 2–4×).  Scale-neutral: compares data volume to the
-#: session's parallelism, not to any host constant.
-SPREAD_MIN_ROWS_PER_TASK = 1000
-
-
-def spread_unsplittable_scan(
-    spark: SparkSession, df: DataFrame, sf_dir: str, name: str
-) -> DataFrame:
-    """Round 16 (guide §2.5 "input skew: one huge unsplittable file …
-    otherwise repartition immediately after the read"): when the
-    table's parquet layout cannot feed every core (row groups <
-    default parallelism), round-robin repartition right after the
-    scan so a CPU-heavy narrow map doesn't run as one straggler task.
-
-    Every driver fixture is a single-row-group file, so every
-    per-document pipeline (shingling, per-position md5, n-gram
-    explode) was bottlenecked on ONE task regardless of cluster size —
-    text_fingerprint measured 46.8 s single-task at the 100× stress
-    fixture with 31 idle cores.  The gate is scale-adaptive, not a
-    local[32] constant: on a production table with thousands of row
-    groups the condition is false and NO exchange is added; it fires
-    exactly when the scan's achievable parallelism starves the map
-    (the same condition at any scale).  Round-robin repartition is
-    retry-safe by default (spark.sql.execution.sortBeforeRepartition,
-    guide §2.5)."""
-    want = spark.sparkContext.defaultParallelism
-    stats = scan_max_tasks(sf_dir, name)
-    if (
-        stats is not None
-        and stats[0] < want
-        and stats[1] >= SPREAD_MIN_ROWS_PER_TASK * want
-    ):
-        return df.repartition(want)
-    return df
-
-
 def power10_base(df: DataFrame, key: str, alias: str = "idbase") -> DataFrame:
     """1-row frame with ``alias`` = smallest power of 10 strictly above
     ``max(df[key])`` — a scale-safe namespace for synthesized row ids.
@@ -237,10 +243,6 @@ def power10_base(df: DataFrame, key: str, alias: str = "idbase") -> DataFrame:
             f"CAST(power(10, ceil(log10(max({key}) + 1))) AS BIGINT)"
         ).alias(alias)
     )
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:

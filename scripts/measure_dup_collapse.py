@@ -92,15 +92,19 @@ def main() -> int:
     #    the probe set: the collapsed path must band at the plane
     #    count the full corpus chose, or borderline-cosine family
     #    pairs would collide differently and break the exact identity
-    #    below — so the corpus-count memo for the staged dir is
-    #    primed with the RAW corpus count.
+    #    below — so the corpus count of the staged dir is patched to
+    #    the RAW corpus count while the query is built.
     n_raw = emb.count()
     reps_dir = os.path.join("/tmp", "dup_collapse_reps")
     fams.select(F.col("rep_id").alias("vec_id"), "embedding",
                 F.lit(0).alias("label")) \
         .coalesce(1).write.mode("overwrite").parquet(f"{reps_dir}/embeddings.parquet")
-    S._CORPUS_COUNT_CACHE[reps_dir] = n_raw
-    rep_pairs = S.embedding_neardup_lsh(spark, reps_dir)
+    corpus_count = S.corpus_count
+    S.corpus_count = lambda sp, d: n_raw if d == reps_dir else corpus_count(sp, d)
+    try:
+        rep_pairs = S.embedding_neardup_lsh(spark, reps_dir)
+    finally:
+        S.corpus_count = corpus_count
 
     # 3. weighted readout: cross-family duplicate mass without ever
     #    materializing the pairs

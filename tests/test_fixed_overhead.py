@@ -2,7 +2,8 @@
 schema memo in ``load_table`` (no schema-inference job after a file's
 first load), lazy query builders (no Spark job at build time), and the
 worker daemon's zip-directory shim (no per-task re-read of an unchanged
-archive)."""
+archive); and the footer-stats reader with the scan-spread gate it
+feeds (plan-only, no Spark action)."""
 
 from __future__ import annotations
 
@@ -19,6 +20,7 @@ import pytest
 from map_reduce_multi_threaded_spark import worker_daemon
 from map_reduce_multi_threaded_spark.plans.explain import read_schema
 from map_reduce_multi_threaded_spark.sources.tables import (
+    SPREAD_MIN_ROWS_PER_TASK,
     TABLES,
     load_table,
     normalize_event_ts,
@@ -230,3 +232,54 @@ def test_footer_stats_unreadable_footer_warns(tmp_path, caplog):
     with caplog.at_level("WARNING", logger=tables.__name__):
         assert tables.scan_max_tasks(str(tmp_path), "documents") is None
     assert "cannot read parquet footers" in caplog.text
+
+
+def _documents_fixture(spark, sf_dir, rows, row_group_size, cpu_heavy):
+    """documents loaded from a pyarrow-written file of ``rows`` rows in
+    row groups of ``row_group_size``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf_dir.mkdir()
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(range(rows), pa.int64()),
+            "text": [f"document number {i}" if i % 3 else "short" for i in range(rows)],
+            "lang": ["en"] * rows,
+        }),
+        sf_dir / "documents.parquet",
+        row_group_size=row_group_size,
+    )
+    return load_table(spark, str(sf_dir), "documents", cpu_heavy=cpu_heavy)
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_cpu_heavy_load_spreads_only_a_starved_scan(spark, tmp_path):
+    """``load_table(..., cpu_heavy=True)`` round-robin spreads a scan
+    with fewer row groups than ``defaultParallelism`` and at least
+    ``SPREAD_MIN_ROWS_PER_TASK`` footer rows per would-be task, and
+    nothing else; a filter and projection written after the load
+    still reach the FileScan below the exchange.  No Spark action."""
+    import pyspark.sql.functions as F
+
+    p = spark.sparkContext.defaultParallelism
+    n = SPREAD_MIN_ROWS_PER_TASK * p
+
+    docs = _documents_fixture(spark, tmp_path / "spread", n, n, True)
+    plan = _plan(docs.where(F.length("text") >= 8).select("doc_id", "text"))
+    assert plan.count("Exchange") == 1
+    assert plan.count(f"RoundRobinPartitioning({p})") == 1
+    scan = next(line for line in plan.splitlines() if "FileScan parquet" in line)
+    assert "length(text" in scan.split("DataFilters: ")[1].split("], ")[0]
+    assert "ReadSchema: struct<doc_id:bigint,text:string>" in scan
+
+    for case, rows, group, heavy in (
+        ("few_rows", n - 1, n, True),
+        ("many_groups", n, SPREAD_MIN_ROWS_PER_TASK, True),
+        ("not_heavy", n, n, False),
+    ):
+        plan = _plan(_documents_fixture(spark, tmp_path / case, rows, group, heavy))
+        assert "Exchange" not in plan, case
