@@ -1066,52 +1066,6 @@ FROM j WHERE rn = 1
 """
 
 
-def _interval_join_user_bucketed(
-    purchases: DataFrame, errors: DataFrame, interval_min: int = 10
-) -> DataFrame:
-    """The SCALE.md hot-user interval-join recipe, executable: shard a
-    per-user interval join's hot key across coarse time buckets so one
-    dominant user no longer concentrates the join (or, streamed, the
-    stream-stream join STATE) in a single hash partition.
-
-    ``stream_stream_join``'s shape — purchases matched to the same
-    user's errors in the ``interval_min`` minutes before each purchase
-    — keys its shuffle and its state store on user alone; the round-12
-    skew bench measured 1.8-3.1x under a 90%-one-user fixture
-    (docs/bench_skew_r12.json).  With the bucket width equal to the
-    interval, every error matching a purchase in bucket b lies in
-    bucket b or b-1, so the purchase side EXPLODES to those two probe
-    buckets, the error side maps to exactly one, and the join runs as
-    an ordinary equi-join on (user, bucket): the hot user's rows spread
-    across distinct time buckets, and each matched pair is produced
-    exactly once because each error owns ONE bucket.  Both keys derive
-    from the event time the watermark already tracks, so the identical
-    spelling streams.  Cost: 2x purchase-side exchange rows — worth
-    paying only for keys heavy enough that one partition's state scan
-    dominates.
-
-    Expects the registered query's column names (purchase_id, p_user,
-    p_ts / error_id, e_user, e_ts).  Since round 13
-    ``stream_stream_join`` carries the same spelling behind its static
-    hot-key gate (a stream cannot pre-scan its key profile, so the
-    knob is ``SPARK_GRAFT_STREAM_HOT_KEYS`` / an explicit argument);
-    tests/test_relational.py proves output identity against the plain
-    interval join, boundary and pre-epoch rows included."""
-    bucket_us = interval_min * 60 * 1_000_000
-    pb = F.floor(F.unix_micros(F.col("p_ts")) / F.lit(bucket_us)).cast("long")
-    p = purchases.withColumn("_b", F.explode(F.array(pb, pb - F.lit(1))))
-    e = errors.withColumn(
-        "_b", F.floor(F.unix_micros(F.col("e_ts")) / F.lit(bucket_us)).cast("long")
-    )
-    return p.join(
-        e,
-        (p["p_user"] == e["e_user"])
-        & (p["_b"] == e["_b"])
-        & (e["e_ts"] >= p["p_ts"] - F.expr(f"INTERVAL {interval_min} MINUTES"))
-        & (e["e_ts"] <= p["p_ts"]),
-    ).select("purchase_id", "error_id", "p_user")
-
-
 # --------------------------------------------------------------------------
 # windows / sorts / top-k
 # --------------------------------------------------------------------------

@@ -113,6 +113,8 @@ _REVERIFY_FIRST: dict[str, int] = {
     "udtf_top_terms_poly": 16,
     # per-key skew gate retired: the single-sort carry is the only spelling
     "join_asof_nearest": 16,
+    # one stream-stream join spelling: the (user, time-bucket) equi-join
+    "stream_stream_join": 16,
 }
 
 

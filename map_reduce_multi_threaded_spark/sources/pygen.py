@@ -298,9 +298,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the finite stream stops advancing at ``n``) rather than
     availableNow, which Python stream sources don't implement
     admission control for.  ``sf_dir`` unused (generative source)."""
-    import os
-    import shutil
-    import tempfile
+    from .tables import tmpfs_scratch_dir
 
     register(spark)
     gen = (
@@ -313,10 +311,8 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("cnt"),
         F.min("i").alias("first_i"),
     )
-    ckpt_root = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    ckpt = tempfile.mkdtemp(prefix="sg_ckpt_pygen_", dir=ckpt_root)
     name = "stream_pygen_sink"
-    try:
+    with tmpfs_scratch_dir("sg_ckpt_pygen_") as ckpt:
         query = (
             agg.writeStream.queryName(name)
             .outputMode("complete")
@@ -327,8 +323,6 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         query.processAllAvailable()
         query.stop()
         query.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 

@@ -1,21 +1,20 @@
-"""Streaming hot-key observability (round 14, VERDICT r13 ask #7).
+"""Streaming hot-key observability.
 
-The stream-side skew gate (:func:`..streaming.queries.stream_hot_key_
-bucketing`) is a STATIC deployment knob — a stream cannot pre-scan its
-key profile, so the bucketed join spelling only helps users who already
-know their key is hot.  This module closes that loop operationally:
+``stream_stream_join`` keys its join state on (user, time bucket), so a
+hot user's state shards across arrival windows (see
+:func:`..streaming.queries._interval_join_streams`).  The outer stream
+joins (``stream_join_left_outer`` / ``stream_join_full_outer``) still
+keep their state keyed by user alone: the bucket explode would emit an
+unmatched outer row once per probe bucket.  A stream cannot pre-scan
+its key profile, so this module reports it per micro-batch:
 
 - :func:`state_rows_per_batch` surfaces the per-micro-batch state-store
   row counts the drain telemetry (``windows.RECENT_PROGRESS``) already
   captures — the "is my state growing?" metric.
 - :func:`run_hot_key_watch` drains a stream through a lightweight side
-  aggregation (per-key counts → one scalar per batch) and emits a
-  logged, documented RECOMMENDATION to enable
-  ``SPARK_GRAFT_STREAM_HOT_KEYS=1`` when one key's share of a batch
-  exceeds a threshold — so the static knob gets a data-driven trigger
-  without the engine silently re-planning a running stream (Spark has
-  no AQE for streaming; the decision stays with the operator, but it is
-  no longer blind).
+  aggregation (per-key counts → one scalar per batch) and logs a
+  warning when one key's share of a batch exceeds a threshold — the
+  share of the user-keyed state that lands in one state partition.
 
 Scale: the watch aggregation is a map-side-combined groupBy count per
 micro-batch — O(batch) scan, O(keys-in-batch) shuffle, ONE tiny
@@ -27,22 +26,20 @@ not a tax on the production query itself.
 from __future__ import annotations
 
 import logging
-import os
-import shutil
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..sources.tables import tmpfs_scratch_dir
 from . import windows as W
 
 logger = logging.getLogger(__name__)
 
-#: batch-share above which the recommendation fires.  A single key at
-#: >50% of a batch concentrates >50% of the join/agg state for that
+#: batch-share above which the watch fires.  A single key at >50% of a
+#: batch concentrates >50% of a user-keyed join/agg state for that
 #: arrival window in ONE state partition — the r12 skew bench measured
-#: the plain interval join's hot-key pair scan super-linear from there
-#: (docs/skew_recipe_ab_r12.md).
+#: the user-keyed interval join's hot-key pair scan super-linear from
+#: there (docs/skew_recipe_ab_r12.md).
 HOT_KEY_SHARE_THRESHOLD = 0.5
 
 #: batches smaller than this never fire (a 10-row batch with 6 rows on
@@ -109,11 +106,9 @@ def run_hot_key_watch(
 
     Each micro-batch is profiled with :func:`hot_key_batch_profile`;
     when the hottest key's share meets ``share_threshold`` on a batch
-    of at least ``min_rows`` rows, a warning is logged recommending
-    ``SPARK_GRAFT_STREAM_HOT_KEYS=1`` (the bucketed interval-join state
-    sharding, streaming/queries.py) and the batch record is marked
-    ``fired``.  The drain uses availableNow + a throwaway checkpoint,
-    like every other replay here."""
+    of at least ``min_rows`` rows, a warning is logged and the batch
+    record is marked ``fired``.  The drain uses availableNow + a
+    throwaway checkpoint, like every other replay here."""
     if W.PLAN_ONLY:
         raise W.PlanOnly("hot_key_watch", W.template_plan(stream_df), stream_df.schema)
     report: dict = {"batches": [], "fired": False}
@@ -128,10 +123,10 @@ def run_hot_key_watch(
             report["fired"] = True
             logger.warning(
                 "hot key %r holds %.0f%% of batch %d (%d of %d rows): "
-                "one state partition will carry that share of the "
-                "join/agg state. Consider SPARK_GRAFT_STREAM_HOT_KEYS=1 "
-                "(time-bucketed state sharding for per-key interval "
-                "joins; see streaming/queries.py and docs/SCALE.md).",
+                "one state partition will carry that share of any state "
+                "keyed by it (the outer stream joins and per-user "
+                "aggregations; stream_stream_join shards by time "
+                "bucket, see docs/SCALE.md).",
                 prof["hot_key"],
                 100.0 * prof["share"],
                 batch_id,
@@ -140,8 +135,7 @@ def run_hot_key_watch(
             )
         report["batches"].append(prof)
 
-    ckpt = tempfile.mkdtemp(prefix="sg_watch_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None)
-    try:
+    with tmpfs_scratch_dir("sg_watch_") as ckpt:
         query = (
             stream_df.writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
@@ -149,26 +143,4 @@ def run_hot_key_watch(
             .start()
         )
         query.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     return report
-
-
-def hot_key_remediation(report: dict) -> dict[str, str]:
-    """Map a watch report to the deployment-knob changes that remediate
-    it — the executable half of the recommendation
-    :func:`run_hot_key_watch` logs (round 15, VERDICT r14 ask #7: the
-    watch used to be advisory only; this closes the loop).
-
-    Returns ``{"SPARK_GRAFT_STREAM_HOT_KEYS": "1"}`` when any batch
-    fired, else ``{}``.  The caller applies the mapping to the
-    environment (or its deployment config) and RESTARTS the stream:
-    Spark has no AQE for streaming — a running query's plan is fixed at
-    ``start()`` — so hot-key remediation is by design a restart-time
-    decision, and the knob is read at CALL time by
-    :func:`..streaming.queries.stream_hot_key_bucketing` precisely so
-    a restart picks it up without re-importing anything.  The
-    end-to-end loop (skewed replay → fired watch → restart under the
-    returned env → oracle-exact bucketed drain) is pytest-gated in
-    tests/test_streaming.py."""
-    return {"SPARK_GRAFT_STREAM_HOT_KEYS": "1"} if report.get("fired") else {}

@@ -275,28 +275,11 @@ FROM events GROUP BY user_id
 """
 
 
-#: static hot-key gate for the stream-stream interval join — a STREAM
-#: cannot pre-scan its key profile (it isn't known until the data
-#: arrives), so the bucketed spelling is an
-#: explicit deployment knob, the static half of VERDICT r12 ask #1
-#: ("heavy-hitter pre-check OR a static threshold argument").  The
-#: round-12 skew bench measured the plain join's per-user state at
-#: 1.8-3.1x under a 90%-one-key fixture and the batch A/B put the plain
-#: spelling's quadratic hot-key pair scan at >600 s (capped) where the
-#: bucketed form took 0.44 s (docs/skew_recipe_ab_r12.md).
-def stream_hot_key_bucketing() -> bool:
-    """Resolve the knob at CALL time (ADVICE r13: the old module-level
-    read froze the env var at import, so setting it after importing the
-    package silently did nothing)."""
-    return os.environ.get("SPARK_GRAFT_STREAM_HOT_KEYS", "") == "1"
-
-#: the registered interval, shared by both spellings
+#: the registered interval; also the time-bucket width of the join key
 _SSJ_INTERVAL_MIN = 10
 
 
-def stream_stream_join(
-    spark: SparkSession, sf_dir: str, *, hot_key_bucketing: bool | None = None
-) -> DataFrame:
+def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: each purchase joined to the same
     user's error events in the 10 minutes before it.
 
@@ -304,22 +287,10 @@ def stream_stream_join(
     engine can discard an error row once no future purchase could
     reach back to it (ts + 10 min < watermark).  Single-batch drain
     makes the result equal the batch interval join (the oracle).
-
-    Hot-key gate (round 13): under :func:`stream_hot_key_bucketing`
-    (or ``hot_key_bucketing=True``) the join keys on
-    (user, 10-min time bucket) instead of user alone — the
-    ``_interval_join_user_bucketed`` recipe spelling
-    (operators/relational.py), output-identity-proven there.  The
-    purchase side explodes to its two probe buckets, each error owns
-    exactly one, so every matched pair is produced once and a 90% hot
-    user's join STATE shards across arrival windows instead of one
-    state-store partition.  Both bucket keys derive from the event
-    times the watermarks already track, so state expiry is unchanged."""
+    The join keys on (user, 10-min time bucket), see
+    :func:`_interval_join_streams`."""
     import pyspark.sql.functions as F
 
-    gate = (
-        stream_hot_key_bucketing() if hot_key_bucketing is None else hot_key_bucketing
-    )
     ev1 = W.read_events_stream(spark, sf_dir)
     purchases = (
         ev1.where(F.col("event_type") == "purchase")
@@ -340,40 +311,48 @@ def stream_stream_join(
         )
         .withWatermark("e_ts", "1 hour")
     )
-    joined = _interval_join_streams(purchases, errors, gate)
+    joined = _interval_join_streams(purchases, errors)
     return W.run_to_memory(joined, "stream_stream_join_sink", output_mode="append")
 
 
-def _interval_join_streams(
-    purchases: DataFrame, errors: DataFrame, bucketed: bool
-) -> DataFrame:
-    """The interval-join core shared by :func:`stream_stream_join` and
-    the fault-tolerance gates (tests drive THIS code path through a
-    checkpointed file-sink restart, so the recipe plan — not a test
-    copy — is what the exactly-once gate certifies).  Expects prepared,
-    watermarked purchase/error streams."""
+def _interval_join_streams(purchases: DataFrame, errors: DataFrame) -> DataFrame:
+    """The interval-join core of :func:`stream_stream_join`, also driven
+    by the fault-tolerance gates (tests run THIS code path through a
+    checkpointed file-sink restart, so the registered plan — not a test
+    copy — is what the exactly-once gate certifies).  Expects prepared
+    purchase (purchase_id, p_user, p_ts) and error (error_id, e_user,
+    e_ts) frames, streaming and watermarked or batch.
+
+    The join keys on (user, time bucket), not user alone.  A hash
+    partition on the user puts a 90% user in one partition, and its
+    error buffer is scanned once per purchase of that user: on the 100x
+    extreme-skew fixture the user-keyed join never finished a 600 s cap
+    where this one drains in 7.8 s (docs/skew_gate_ab_r13.md).  With
+    the bucket width equal to the interval, every error matching a
+    purchase in bucket b lies in bucket b or b-1, so the purchase side
+    explodes to those two probe buckets and each error owns exactly
+    one: every matched pair is produced once, and a hot user's rows
+    (and, streamed, its join STATE) shard across arrival windows.  Both
+    bucket keys derive from the event times the watermarks already
+    track, so state expiry is unchanged.  Cost: 2x purchase-side
+    exchange rows, no extra exchange."""
     import pyspark.sql.functions as F
 
+    bucket_us = _SSJ_INTERVAL_MIN * 60 * 1_000_000
+    pb = F.floor(F.unix_micros(F.col("p_ts")) / F.lit(bucket_us)).cast("long")
+    purchases = purchases.withColumn("_b", F.explode(F.array(pb, pb - F.lit(1))))
+    errors = errors.withColumn(
+        "_b", F.floor(F.unix_micros(F.col("e_ts")) / F.lit(bucket_us)).cast("long")
+    )
     cond = (
         (F.col("p_user") == F.col("e_user"))
+        & (F.col("purchases._b") == F.col("errors._b"))
         & (F.col("e_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {_SSJ_INTERVAL_MIN} MINUTES"))
         & (F.col("e_ts") <= F.col("p_ts"))
     )
-    if bucketed:
-        bucket_us = _SSJ_INTERVAL_MIN * 60 * 1_000_000
-        pb = F.floor(F.unix_micros(F.col("p_ts")) / F.lit(bucket_us)).cast("long")
-        purchases = purchases.withColumn(
-            "_b", F.explode(F.array(pb, pb - F.lit(1)))
-        )
-        errors = errors.withColumn(
-            "_b",
-            F.floor(F.unix_micros(F.col("e_ts")) / F.lit(bucket_us)).cast("long"),
-        )
-        cond = (F.col("purchases._b") == F.col("errors._b")) & cond
-        return purchases.alias("purchases").join(
-            errors.alias("errors"), cond
-        ).select("purchase_id", "error_id", "p_user")
-    return purchases.join(errors, cond).select("purchase_id", "error_id", "p_user")
+    return purchases.alias("purchases").join(
+        errors.alias("errors"), cond
+    ).select("purchase_id", "error_id", "p_user")
 
 
 _STREAM_STREAM_ORACLE = """
@@ -908,20 +887,18 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     one keyed max_by over the log — in production that log IS the
     table (compaction amortizes it); the localCheckpoint here only
     pins the harness result before the scratch log is deleted."""
-    import os
-    import shutil
-    import tempfile
-
     import pyspark.sql.functions as F
+
+    from ..sources.tables import tmpfs_scratch_dir
 
     staged, _cutoff = W.stage_events_multibatch(
         sf_dir, n_files=CDC_STREAM_FILES, n_sentinels=0
     )
     ev = W.read_staged_stream(spark, staged)
-    root = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    out = tempfile.mkdtemp(prefix="sg_cdc_log_", dir=root)
-    ckpt = tempfile.mkdtemp(prefix="sg_cdc_ckpt_", dir=root)
-    try:
+    with (
+        tmpfs_scratch_dir("sg_cdc_log_") as out,
+        tmpfs_scratch_dir("sg_cdc_ckpt_") as ckpt,
+    ):
         W.write_foreach_batch(ev, out, ckpt, transform=_cdc_batch_latest)
         # explicit schema, derived by pushing an empty frame through the
         # same per-batch transform: a 0-row events table yields 0-row
@@ -953,9 +930,6 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 _CDC_UPSERT_ORACLE = """

@@ -466,48 +466,39 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "complete") -> Da
     The state partition count is pinned to STREAM_STATE_PARTITIONS for
     the duration of query start (it is baked into the streaming plan at
     ``start()``); the session's batch shuffle setting is restored after."""
-    import os
-    import shutil
-    import tempfile
+    from ..sources.tables import tmpfs_scratch_dir
 
     if PLAN_ONLY:
         raise PlanOnly(name, template_plan(df), df.schema)
     spark = df.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    # checkpoint on tmpfs: state-store + offset-log commits are many
-    # small file ops per micro-batch; on this host's disk-backed /tmp
-    # they cost ~1.5 s/batch vs ~0.4 s on /dev/shm.  (On a real cluster
-    # the checkpoint must be durable shared storage — this tmpfs path is
-    # for the drain-and-discard oracle replay only.)
-    ckpt_root = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    ckpt = tempfile.mkdtemp(prefix="sg_ckpt_", dir=ckpt_root)
-    try:
-        query = (
-            df.writeStream.queryName(name)
-            .outputMode(output_mode)
-            .format("memory")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        # keep the per-micro-batch progress telemetry (durationMs,
-        # stateOperators commit times) for profiling: the replay-floor
-        # claims in BACKLOG are backed by these numbers, not guesses
+    with tmpfs_scratch_dir("sg_ckpt_") as ckpt:
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
         try:
-            import json as _json
-
-            RECENT_PROGRESS[name] = [
-                p if isinstance(p, dict) else _json.loads(p.json)
-                for p in query.recentProgress
-            ]
-            RECENT_PLANS[name] = (
-                query._jsq.explainInternal(False)  # noqa: SLF001
+            query = (
+                df.writeStream.queryName(name)
+                .outputMode(output_mode)
+                .format("memory")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-        except Exception:
-            pass  # telemetry must never fail the query
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            query.awaitTermination()
+            # keep the per-micro-batch progress telemetry (durationMs,
+            # stateOperators commit times) for profiling: the replay-floor
+            # claims in BACKLOG are backed by these numbers, not guesses
+            try:
+                import json as _json
+
+                RECENT_PROGRESS[name] = [
+                    p if isinstance(p, dict) else _json.loads(p.json)
+                    for p in query.recentProgress
+                ]
+                RECENT_PLANS[name] = (
+                    query._jsq.explainInternal(False)  # noqa: SLF001
+                )
+            except Exception:
+                pass  # telemetry must never fail the query
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
     return spark.table(name)

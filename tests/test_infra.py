@@ -627,3 +627,88 @@ def test_bench_regression_gate_has_a_baseline():
     prev = bench._previous_bench(0.1, "/root/testdata/sf0.1")
     assert len(prev) >= 100, len(prev)
     assert all(isinstance(v, (int, float)) and v >= 0 for v in prev.values())
+
+
+def test_stage_dirs_of_same_basename_fixtures_coexist(tmp_path, monkeypatch):
+    """Two fixtures whose dirs share a basename in different parents
+    (``a/sf``, ``b/sf``) must not prune each other's staging, while a
+    regenerated fixture still prunes its own stale staging.  No Spark:
+    the events files are written with pyarrow."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from map_reduce_multi_threaded_spark.sources import tables
+
+    monkeypatch.setattr(tables, "_STAGE_ROOT", str(tmp_path / "stage"), raising=False)
+
+    def write_events(sf, ids):
+        os.makedirs(sf, exist_ok=True)
+        pq.write_table(pa.table({"event_id": ids}), os.path.join(sf, "events.parquet"))
+
+    def stage(sf):
+        d = tables.stage_scratch_dir(sf, "events_multibatch", "events")
+        os.makedirs(d, exist_ok=True)
+        return d
+
+    sf_a, sf_b = str(tmp_path / "a" / "sf"), str(tmp_path / "b" / "sf")
+    write_events(sf_a, [1, 2, 3])
+    write_events(sf_b, [4, 5])
+    d_a = stage(sf_a)
+    d_b = stage(sf_b)
+    assert d_a != d_b
+    assert os.path.isdir(d_a), "staging b pruned a's staging"
+    assert stage(sf_a) == d_a
+    assert os.path.isdir(d_b), "staging a pruned b's staging"
+
+    # a regenerated fixture prunes only its own stale staging
+    write_events(sf_a, [1, 2, 3, 6])
+    d_a2 = stage(sf_a)
+    assert d_a2 != d_a
+    assert not os.path.exists(d_a)
+    assert os.path.isdir(d_b)
+
+
+def test_env_reads_are_only_the_session_knobs():
+    """The package reads exactly three environment variables, all in
+    session.py: core count, shuffle partitions and driver memory.  No
+    env var may switch a query's plan — a query has one spelling — so
+    a new read anywhere in the package fails here until it is argued
+    for.  Scans the source (no Spark)."""
+    import ast
+    import pathlib
+
+    import map_reduce_multi_threaded_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    reads = set()
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        parent = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.Name):
+                name = node.id
+            else:
+                continue
+            if name not in ("environ", "getenv"):
+                continue
+            # os.environ.get(K) / os.environ[K] / os.getenv(K)
+            up = parent.get(node)
+            if isinstance(up, ast.Attribute) and up.attr == "get":
+                up = parent.get(up)
+            if isinstance(up, ast.Call) and up.args:
+                key = up.args[0]
+            elif isinstance(up, ast.Subscript):
+                key = up.slice
+            else:
+                key = None
+            literal = isinstance(key, ast.Constant) and isinstance(key.value, str)
+            reads.add((path.relative_to(root).as_posix(), key.value if literal else None))
+    assert reads == {
+        ("session.py", "SPARK_GRAFT_CPUS"),
+        ("session.py", "SPARK_GRAFT_SHUFFLE"),
+        ("session.py", "SPARK_GRAFT_DRIVER_MEM"),
+    }, sorted(reads, key=str)

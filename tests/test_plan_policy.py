@@ -250,8 +250,12 @@ def test_checkpoint_whitelist_is_tight(plans):
 def test_streaming_template_plans_obey_policy(stream_plans):
     """The batch ground rules, over every streaming query's template
     plan (BACKLOG depth item, round 10): no row-at-a-time Python eval,
-    no cartesian product, and every registered streaming query must
-    actually BE streaming (a StreamingRelation scan in the plan)."""
+    no cartesian product, no RDD scan, and every registered streaming
+    query must actually BE streaming (a StreamingRelation scan in the
+    plan) — plus the stream-stream interval join keys its state on the
+    derived time bucket, so a hot user shards across arrival windows."""
+    import re
+
     assert len(stream_plans) == 20, sorted(stream_plans)
     bad_eval = [n for n, p in stream_plans.items() if "BatchEvalPython" in p]
     assert not bad_eval, bad_eval
@@ -261,6 +265,11 @@ def test_streaming_template_plans_obey_policy(stream_plans):
         n for n, p in stream_plans.items() if "StreamingRelation" not in p
     ]
     assert not not_streaming, not_streaming
+    rdd = [n for n, p in stream_plans.items() if "Scan ExistingRDD" in p]
+    assert not rdd, rdd
+    assert re.search(
+        r"_b#\d+L?", stream_plans["stream_stream_join"]
+    ), "bucket key missing from the streaming join template"
 
 
 def test_streaming_exchange_counts_within_budget(stream_plans):
@@ -287,59 +296,6 @@ def test_streaming_exchange_counts_within_budget(stream_plans):
         if n > budget[name]:
             over.append((name, n, budget[name]))
     assert not over, over
-
-
-#: exchange budgets for the skew-gate DISPATCHED plans (round 13).  The
-#: bucketed stream join's probe-bucket explode rides the existing state
-#: shuffle — VERDICT r12 ask #7 says budget the gated plan explicitly
-#: rather than letting the registered budgets' slack absorb it.  Upper
-#: bounds, same contract as plan_budget.json.
-_GATED_PLAN_BUDGET = {
-    "stream_stream_join": 2,         # same as plain (keys widen, no new exchange)
-}
-
-
-@pytest.fixture(scope="module")
-def gated_plans(spark):
-    """Physical plans of the skew-gate DISPATCHED branches: the
-    streaming join via its static gate under PLAN_ONLY."""
-    from map_reduce_multi_threaded_spark.streaming import queries as SQ
-    from map_reduce_multi_threaded_spark.streaming import windows as W
-
-    out = {}
-    W.PLAN_ONLY = True
-    try:
-        SQ.stream_stream_join(spark, SF, hot_key_bucketing=True)
-    except W.PlanOnly as e:
-        out["stream_stream_join"] = e.plan
-    finally:
-        W.PLAN_ONLY = False
-    return out
-
-
-def test_skew_gated_plans_obey_policy(gated_plans):
-    """The same ground rules over every skew-gate dispatched plan: no
-    row-at-a-time Python eval, no cartesian product, no RDD scan,
-    exchange counts within the explicit gated budget — plus the shape
-    the recipe exists for: the bucketed stream join actually keys its
-    state on the derived bucket."""
-    import re
-
-    assert set(gated_plans) == set(_GATED_PLAN_BUDGET)
-    for name, plan in gated_plans.items():
-        assert "BatchEvalPython" not in plan, name
-        assert "CartesianProduct" not in plan, name
-        assert "Scan ExistingRDD" not in plan, name
-        n = (
-            plan.count("Exchange hashpartitioning")
-            + plan.count("Exchange rangepartitioning")
-            + plan.count("Exchange SinglePartition")
-        )
-        assert n <= _GATED_PLAN_BUDGET[name], (name, n)
-    assert "StreamingRelation" in gated_plans["stream_stream_join"]
-    assert re.search(
-        r"_b#\d+L?", gated_plans["stream_stream_join"]
-    ), "bucket key missing from the streaming join template"
 
 
 def test_streaming_plans_obey_policy(spark):

@@ -480,8 +480,8 @@ def test_basket_sequence_history_cap_binds_and_bounds(spark, sf_oracle_dir):
 
 
 def _interval_join_plain(purchases, errors, interval_min=10):
-    """The registered stream_stream_join/oracle spelling, batch form —
-    the identity baseline for the bucketed recipe."""
+    """The oracle's user-keyed interval join, batch form — the identity
+    baseline for stream_stream_join's (user, time-bucket) spelling."""
     import pyspark.sql.functions as F
 
     return purchases.join(
@@ -512,20 +512,23 @@ def _purchase_error_frames(spark, sf_oracle_dir):
 
 
 def test_interval_join_bucketed_recipe_is_identical(spark, sf_oracle_dir):
-    """SCALE.md's hot-user interval-join recipe (round 12): the
-    (user, time-bucket) equi-join spelling must reproduce the plain
-    per-user interval join exactly — same matched-pair set on the
-    fixture AND on crafted rows sitting exactly ON the interval bounds,
-    on a bucket boundary, and BEFORE THE EPOCH (negative-microsecond
-    bucketing) — and the bucket must ride in the join's own equi-key
-    list, so a hot user's rows actually shard by arrival window."""
+    """stream_stream_join's join core (streaming/queries.py
+    _interval_join_streams, run here on batch frames): the
+    (user, time-bucket) equi-join must reproduce the plain per-user
+    interval join exactly — same matched-pair set on the fixture AND on
+    crafted rows sitting exactly ON the interval bounds, on a bucket
+    boundary, and BEFORE THE EPOCH (negative-microsecond bucketing) —
+    and the bucket must ride in the join's own equi-key list, so a hot
+    user's rows actually shard by arrival window."""
     import datetime
+
+    from map_reduce_multi_threaded_spark.streaming import queries as SQ
 
     purchases, errors = _purchase_error_frames(spark, sf_oracle_dir)
     fixture_plain = {
         tuple(r) for r in _interval_join_plain(purchases, errors).collect()
     }
-    bucketed_df = relational._interval_join_user_bucketed(purchases, errors)
+    bucketed_df = SQ._interval_join_streams(purchases, errors)
     assert re.search(
         r"Join [A-Za-z]*[Hh]ash[A-Za-z]* ?(Inner, )?\[p_user#\d+L?, _b#\d+L?\]",
         _plan(bucketed_df),
@@ -556,8 +559,7 @@ def test_interval_join_bucketed_recipe_is_identical(spark, sf_oracle_dir):
     crafted_plain = {tuple(r) for r in _interval_join_plain(cp, ce).collect()}
     assert crafted_plain == {(1, 101, 10), (1, 102, 10), (2, 105, 11)}
     assert {
-        tuple(r)
-        for r in relational._interval_join_user_bucketed(cp, ce).collect()
+        tuple(r) for r in SQ._interval_join_streams(cp, ce).collect()
     } == crafted_plain
 
 
@@ -583,15 +585,6 @@ def test_last_in_bucket_spellings_identical(spark):
         for r in relational._last_in_bucket(ev).collect()
     }
     assert got == {(1, 5): None, (1, -3): 2.5, (2, 7): 9.0}
-
-
-def test_stream_hot_key_knob_read_at_call_time(monkeypatch):
-    from map_reduce_multi_threaded_spark.streaming import queries as SQ
-
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_HOT_KEYS", raising=False)
-    assert SQ.stream_hot_key_bucketing() is False
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_HOT_KEYS", "1")
-    assert SQ.stream_hot_key_bucketing() is True
 
 
 def test_asof_gate_all_null_ts_falls_back_plain(spark, tmp_path):

@@ -485,30 +485,15 @@ def test_checkpoint_restart_exactly_once_python_state(
     assert both == uninterrupted
 
 
-def test_stream_stream_join_bucketed_matches_oracle(spark, sf_oracle_dir):
-    """The hot-key-gated spelling of the stream-stream interval join
-    (round-13 static skew gate) must hash-match the same DuckDB oracle
-    as the plain spelling — the (user, time-bucket) keying is a state
-    sharding, not a semantics change."""
-    spec = {s.name: s for s in SQ.SPECS}["stream_stream_join"]
-    compare(
-        SQ.stream_stream_join(spark, sf_oracle_dir, hot_key_bucketing=True),
-        spec.oracle,
-        sf_oracle_dir,
-    )
-
-
 def test_checkpoint_restart_exactly_once_bucketed_join(
     spark, sf_oracle_dir, tmp_path
 ):
-    """Checkpoint-restart exactly-once THROUGH a recipe-dispatched plan
-    (VERDICT r12 ask #5 — the prior 9 FT gates all ran plain
-    spellings): the bucketed stream-stream interval join — the state
-    key now includes the derived time bucket and the purchase side
-    explodes to two probe buckets — must survive a mid-replay restart
-    with every matched pair emitted exactly once.  Drives the
-    PRODUCT's join builder (queries._interval_join_streams), not a
-    test copy, over the standard time-ordered multibatch replay with a
+    """Checkpoint-restart exactly-once through the (user, time-bucket)
+    stream-stream interval join — the state key includes the derived
+    time bucket and the purchase side explodes to two probe buckets —
+    which must survive a mid-replay restart with every matched pair
+    emitted exactly once.  Drives the PRODUCT's join builder
+    (queries._interval_join_streams), not a test copy, over the standard time-ordered multibatch replay with a
     fault-tolerant file sink; the union of the two runs must equal the
     batch oracle's pair set with no pair committed twice."""
     import glob
@@ -546,7 +531,7 @@ def test_checkpoint_restart_exactly_once_bucketed_join(
             .withWatermark("e_ts", "1 hour")
         )
         q = (
-            SQ._interval_join_streams(purchases, errors, bucketed=True)
+            SQ._interval_join_streams(purchases, errors)
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)
@@ -594,47 +579,18 @@ def test_checkpoint_restart_exactly_once_bucketed_join(
     assert got == oracle
 
 
-def test_rocksdb_state_store_parity_bucketed_join(spark, sf_oracle_dir):
-    """RocksDB-vs-default state store parity for the recipe-dispatched
-    join state shape — the exploded (user, bucket) key must round-trip
-    both providers identically, like every plain state shape in
-    test_rocksdb_state_store_parity."""
-    provider = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    results = {}
-    for mode in ("default", "rocksdb"):
-        if mode == "rocksdb":
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", provider
-            )
-        try:
-            results[mode] = {
-                tuple(r)
-                for r in SQ.stream_stream_join(
-                    spark, sf_oracle_dir, hot_key_bucketing=True
-                ).collect()
-            }
-        finally:
-            if mode == "rocksdb":
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass"
-                )
-    assert results["default"], "empty result is vacuous"
-    assert results["rocksdb"] == results["default"]
-
-
 #: every distinct stateful-replay STATE SHAPE the registry relies on —
 #: watermarked window aggregation, dropDuplicates dedup state,
 #: applyInPandasWithState custom sessions, stream-stream full-outer
-#: join state, chained window-of-windows, and the foreachBatch CDC
-#: merge (round-12: parameterized family-wide per VERDICT r11 ask #6)
+#: join state, the (user, time-bucket) interval-join state, chained
+#: window-of-windows, and the foreachBatch CDC merge (round-12:
+#: parameterized family-wide per VERDICT r11 ask #6)
 _PARITY_QUERIES = [
     ("tumbling_multibatch", "stream_tumbling_multibatch"),
     ("ingest_dedup", "stream_ingest_dedup"),
     ("custom_sessions", "stream_custom_sessions"),
     ("join_full_outer", "stream_join_full_outer"),
+    ("stream_stream_join", "stream_stream_join"),
     ("windowed_rollup", "stream_windowed_rollup"),
     ("cdc_upsert", "stream_cdc_upsert"),
 ]
@@ -652,8 +608,9 @@ def test_rocksdb_state_store_parity(spark, sf_oracle_dir, name, query):
     run the default — this gate proves the choice is an ops knob, not a
     semantics change, across every stateful state shape the registry
     relies on (window agg, dedup state, applyInPandasWithState
-    sessions, stream-stream full-outer join, chained window-of-windows,
-    foreachBatch CDC merge)."""
+    sessions, stream-stream full-outer join, (user, time-bucket)
+    interval join, chained window-of-windows, foreachBatch CDC
+    merge)."""
     provider = (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
@@ -731,12 +688,11 @@ def test_watermark_floors_at_epoch(spark, tmp_path):
 
 
 def test_hot_key_watch_recommends_bucketing(spark, tmp_path, caplog):
-    """Round-14 observability gate (VERDICT r13 ask #7): the static
-    stream gate only helps users who know their key profile, so the
-    watch must RECOMMEND it from data — fire on a 90%-one-key batch
-    (with the documented SPARK_GRAFT_STREAM_HOT_KEYS pointer in the
-    log), stay silent on a balanced batch and on a skewed-but-tiny
-    batch below min_rows."""
+    """Round-14 observability gate (VERDICT r13 ask #7): a stream cannot
+    pre-scan its key profile, so the watch reports it from data — fire
+    on a 90%-one-key batch (logging the hot key and the user-keyed
+    state it concentrates), stay silent on a balanced batch and on a
+    skewed-but-tiny batch below min_rows."""
     import logging
 
     from map_reduce_multi_threaded_spark.streaming import monitor
@@ -772,23 +728,21 @@ def test_hot_key_watch_recommends_bucketing(spark, tmp_path, caplog):
     assert fired[0]["share"] == pytest.approx(0.9)
     quiet = [b for b in report["batches"] if not b["fired"]]
     assert {b["total"] for b in quiet} == {200, 10}
-    assert any("SPARK_GRAFT_STREAM_HOT_KEYS" in r.message for r in caplog.records)
+    warned = [r.getMessage() for r in caplog.records if r.name == monitor.logger.name]
+    assert len(warned) == 1 and "hot key 7 holds 90% of batch" in warned[0], warned
+    assert "outer stream joins" in warned[0], warned
 
 
-def test_hot_key_watch_closed_loop(spark, tmp_path_factory, monkeypatch):
-    """Round-15 loop closure (VERDICT r14 ask #7): the watch's
-    recommendation must be EXECUTABLE, not just advisory.  End to end
-    on a 90%-one-user fixture the queries have never seen:
+def test_hot_key_watch_closed_loop(spark, tmp_path_factory):
+    """End to end on a 90%-one-user fixture the queries have never
+    seen:
 
       1. replay the skewed event stream through the watch → it fires;
-      2. hot_key_remediation(report) returns the documented knob;
-      3. apply it to the environment and RESTART the join (the knob
-         is resolved at call time, so the restarted query dispatches
-         to the bucketed state-sharding spelling — asserted on the
-         executed plan);
-      4. the restarted drain is oracle-exact vs the same DuckDB batch
-         truth as the plain spelling (bucketing is a state sharding,
-         never a semantics change)."""
+      2. the registered stream_stream_join drains the same fixture
+         through the (user, time-bucket) state-sharding plan —
+         asserted on the executed plan;
+      3. that drain is oracle-exact vs the DuckDB batch truth
+         (bucketing is a state sharding, never a semantics change)."""
     import subprocess
     import sys
 
@@ -805,20 +759,12 @@ def test_hot_key_watch_closed_loop(spark, tmp_path_factory, monkeypatch):
         W.read_events_stream(spark, fix), "user_id"
     )
     assert report["fired"], report
-    # 2. the executable recommendation
-    env = monitor.hot_key_remediation(report)
-    assert env == {"SPARK_GRAFT_STREAM_HOT_KEYS": "1"}
-    # (a quiet report maps to no changes)
-    assert monitor.hot_key_remediation({"fired": False}) == {}
-    # 3. restart under the recommended environment
-    for k, v in env.items():
-        monkeypatch.setenv(k, v)
-    assert SQ.stream_hot_key_bucketing() is True
+    # 2. the registered join shards the hot user by time bucket
     spec = {s.name: s for s in SQ.SPECS}["stream_stream_join"]
     out = spec.fn(spark, fix)
     plan = W.RECENT_PLANS["stream_stream_join_sink"]
-    assert "_b" in plan, "restart did not dispatch the bucketed spelling"
-    # 4. oracle-exact drain through the remediated plan
+    assert "_b" in plan, "the join state is not keyed on the time bucket"
+    # 3. oracle-exact drain
     compare(out, spec.oracle, fix)
 
 
