@@ -13,25 +13,34 @@ Two paths, per the standard ANN playbook:
   shape that survives 100 TB: probes scale with bucket size, not
   corpus size.
 
-All vector math stays JVM-side (``zip_with`` + ``aggregate`` inside
-codegen — no Python UDF): elements are cast float→double (exact) and
-accumulated left-to-right, which DuckDB's ``list_sum(list_transform)``
-mirrors, so cosines are bit-identical and the driver's value-hash
-comparison holds.
+Every vector computation keeps one arithmetic contract: elements are
+cast float→double (exact) and accumulated per dimension, left to
+right, from a +0.0 seed — the order DuckDB's
+``list_sum(list_transform)`` folds in — so cosines, projections and
+norms are bit-identical across engines and the driver's value-hash
+comparison holds.  It runs in two places:
+
+* JVM Column expressions (``zip_with`` + ``aggregate`` inside codegen:
+  :func:`_with_norm`, :func:`_cosine`) verify candidate pairs;
+* seven Arrow batch functions (``pandas_udf``/``mapInArrow``) do every
+  corpus-scale scoring pass, reading batches and folding through the
+  one sequential-fold kernel, :mod:`.vector_fold`.
 """
 
 from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 import pandas as pd  # module-level: pandas_udf type-hint resolution
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import QuerySpec
 from ..sources.tables import load_table, scan_max_tasks
+from . import vector_fold as fold
+from .vector_fold import DIM
 
-DIM = 64
 K_NEIGHBORS = 5
 N_QUERIES = 10  # vec_id < 10 are the query vectors in the fixture
 COSINE_THRESHOLD = 0.4
@@ -150,11 +159,21 @@ def _to_double(col: str) -> F.Column:
 _DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 
 
+def _norm(emb: str) -> F.Column:
+    return F.sqrt(F.expr(_DOT.format(a=emb, b=emb)))
+
+
 def _with_norm(df: DataFrame) -> DataFrame:
     """Attach L2 norm; computed once per vector, reused across pairs."""
     return df.withColumn("emb_d", _to_double("embedding")).withColumn(
-        "norm", F.sqrt(F.expr(_DOT.format(a="emb_d", b="emb_d")))
+        "norm", _norm("emb_d")
     )
+
+
+def _cosine(a: str, na: str, b: str, nb: str) -> F.Column:
+    """Cosine of double vectors ``a``, ``b`` with norms ``na``, ``nb``:
+    the ordered dot divided by the norm product computed first."""
+    return F.expr(_DOT.format(a=a, b=b)) / (F.col(na) * F.col(nb))
 
 
 _DUCK_NORMS = """
@@ -179,45 +198,68 @@ def _cos_scorer(q_embs):
     §4.1/§4.2 — replaces the BroadcastNestedLoopJoin of interpreted
     64-term ``aggregate(zip_with(...))`` folds, n×queries of them).
 
-    Bit-exactness vs the retired fold and the unchanged oracle — the
-    :func:`_cluster_scorer` argument verbatim: dots and squared norms
-    accumulate SEQUENTIALLY over dimensions from a +0.0 seed (one
-    vectorized multiply-add per dim, each scalar correctly rounded
-    like the JVM/DuckDB left-to-right fold; numpy does not fuse the
-    multiply and add), sqrt is one IEEE op, and the cosine divides by
-    the PRODUCT q_norm·c_norm computed first — the same operand order
-    as the retired ``dot / (q_norm * c_norm)`` projection.
+    Bit-exact with the retired fold and the unchanged oracle through
+    the kernel (:mod:`.vector_fold`), with the cosine dividing by the
+    PRODUCT q_norm·c_norm computed first — the operand order of the
+    retired ``dot / (q_norm * c_norm)`` projection.  A zero-norm query
+    or corpus vector raises (``fold.norms``).
 
     Returns the PLAIN batch function (unit-tested without a Spark
     session in tests/test_similarity.py); :func:`knn_bruteforce`
     wraps it as a ``pandas_udf("array<double>")``."""
-    import numpy as np
-
-    qe = np.stack([np.asarray(q, dtype=np.float64) for q in q_embs])
-
-    def _norms(mat):
-        acc = np.zeros(mat.shape[0])
-        for j in range(DIM):
-            acc = acc + mat[:, j] * mat[:, j]
-        return np.sqrt(acc)
-
-    qn = _norms(qe)
+    qe = np.asarray(q_embs, dtype=np.float64)
+    qn = fold.norms(qe)
 
     def cosines(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype=object)
-        c = np.stack(emb.to_numpy()).astype(np.float64)
-        dots = np.zeros((c.shape[0], qe.shape[0]))
-        for j in range(DIM):
-            dots = dots + c[:, j : j + 1] * qe[:, j]
-        # orig: fold(q,c) / (q_norm * c_norm) — denominator is the
-        # q·c norm product computed first; elementwise order per
-        # (row, query) is identical (each op one correctly-rounded
-        # double)
-        denom = qn[None, :] * _norms(c)[:, None]
-        return pd.Series(list(dots / denom))
+        c = fold.batch_matrix(emb)
+        return pd.Series(list(fold.dots(c, qe) / (qn[None, :] * fold.norms(c)[:, None])))
 
     return cosines
+
+
+def _driver_queries(raw: DataFrame) -> list:
+    """The ≤{N_QUERIES} query vectors as sorted (vec_id, embedding)
+    pairs: bounded driver state, the documented no-collect exception
+    class (see kmeans_assign)."""
+    return sorted(
+        (int(r["vec_id"]), list(r["embedding"]))
+        for r in raw.where(F.col("vec_id") < N_QUERIES).collect()
+    )
+
+
+def _no_neighbors(raw: DataFrame, *score_cols: F.Column) -> DataFrame:
+    """The empty top-k result of a corpus without query vectors."""
+    return raw.select(
+        F.col("vec_id").alias("query_id"),
+        F.lit(1).alias("rank"),
+        F.col("vec_id").alias("neighbor_id"),
+        *score_cols,
+    ).where(F.lit(False))
+
+
+def _top_k_per_query(scored: DataFrame, q_rows: list, score: str) -> DataFrame:
+    """Rank (neighbor_id, scores) rows — ``scores`` holding one value
+    per driver-held query, in ``q_rows`` order — into each query's top
+    K_NEIGHBORS by ``score`` desc, neighbor_id asc, the query itself
+    excluded.  Only the NARROW (query_id, neighbor_id, score) rows
+    reach the ranking exchange (guide §2.3)."""
+    qid_arr = F.array(*[F.lit(i).cast("long") for i, _ in q_rows])
+    pairs = (
+        scored.select("neighbor_id", F.posexplode("scores").alias("pos", score))
+        .withColumn("query_id", F.element_at(qid_arr, F.col("pos") + 1))
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .drop("pos")
+    )
+    return _rank_top_k(pairs, score)
+
+
+def _rank_top_k(pairs: DataFrame, score: str) -> DataFrame:
+    """Each query_id's K_NEIGHBORS best (query_id, neighbor_id) pairs
+    by ``score`` desc, neighbor_id asc, numbered in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return pairs.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= K_NEIGHBORS
+    )
 
 
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,40 +267,18 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The corpus is scanned exactly once regardless of its size; one
     Arrow-batched narrow map scores every row against the driver-held
-    queries (:func:`_cos_scorer` — bounded ≤{N_QUERIES}-row collect,
-    the documented no-collect exception class, see kmeans_assign);
-    only NARROW (query_id, neighbor_id, cosine) rows reach the
-    ranking exchange (guide §2.3).  This stays the EXACT ground-truth
+    queries (:func:`_cos_scorer`, :func:`_driver_queries`), then
+    :func:`_top_k_per_query` ranks.  This stays the EXACT ground-truth
     baseline for the recall harness — only the execution engine of
     the same fold changed, bit-identically (see _cos_scorer)."""
     raw = load_table(spark, sf_dir, "embeddings", cpu_heavy=True).select("vec_id", "embedding")
-    q_rows = sorted(
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in raw.where(F.col("vec_id") < N_QUERIES).collect()
-    )
+    q_rows = _driver_queries(raw)
     if not q_rows:
-        return raw.select(
-            F.col("vec_id").alias("query_id"),
-            F.lit(1).alias("rank"),
-            F.col("vec_id").alias("neighbor_id"),
-            F.lit(0.0).alias("cosine"),
-        ).where(F.lit(False))
-    from pyspark.sql.functions import pandas_udf
-
-    cos = pandas_udf("array<double>")(_cos_scorer([e for _, e in q_rows]))
-    qid_arr = F.array(*[F.lit(i).cast("long") for i, _ in q_rows])
-    pairs = (
-        raw.select(F.col("vec_id").alias("neighbor_id"), cos("embedding").alias("coss"))
-        .select("neighbor_id", F.posexplode("coss").alias("pos", "cosine"))
-        .withColumn("query_id", F.element_at(qid_arr, F.col("pos") + 1))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .drop("pos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= K_NEIGHBORS)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+        return _no_neighbors(raw, F.lit(0.0).alias("cosine"))
+    cos = F.pandas_udf("array<double>")(_cos_scorer([e for _, e in q_rows]))
+    scored = raw.select(F.col("vec_id").alias("neighbor_id"), cos("embedding").alias("scores"))
+    return _top_k_per_query(scored, q_rows, "cosine").select(
+        "query_id", "rank", "neighbor_id", "cosine"
     )
 
 
@@ -303,10 +323,9 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("emb_d").alias("ea"), F.col("norm").alias("na")).repartition(par)
     b = emb.select(F.col("vec_id").alias("vec_b"), F.col("emb_d").alias("eb"), F.col("norm").alias("nb"))
-    sim = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cosine", sim)
+        .withColumn("cosine", _cosine("ea", "na", "eb", "nb"))
         .where(F.col("cosine") >= COSINE_THRESHOLD)
         .select("vec_a", "vec_b", "cosine")
     )
@@ -347,11 +366,10 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _with_norm(load_table(spark, sf_dir, "embeddings"))
     na = n.select(F.col("vec_id").alias("vec_a"), F.col("emb_d").alias("ea"), F.col("norm").alias("na"))
     nb = n.select(F.col("vec_id").alias("vec_b"), F.col("emb_d").alias("eb"), F.col("norm").alias("nb"))
-    sim = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
     return (
         cand.join(na, "vec_a")
         .join(nb, "vec_b")
-        .withColumn("cosine", sim)
+        .withColumn("cosine", _cosine("ea", "na", "eb", "nb"))
         .where(F.col("cosine") >= COSINE_THRESHOLD)
         .select("vec_a", "vec_b", "cosine")
     )
@@ -391,8 +409,6 @@ def _plane_signs(n_planes: int = N_PLANES):
     """(N_TABLES·n_planes, DIM) ±1.0 matrix from md5('plane:t:i:j') —
     the same digests the DuckDB oracle's literal masks are built from,
     so the planes exist nowhere as data files."""
-    import numpy as np
-
     s = np.empty((N_TABLES * n_planes, DIM))
     for t in range(N_TABLES):
         for i in range(n_planes):
@@ -402,24 +418,18 @@ def _plane_signs(n_planes: int = N_PLANES):
 
 
 def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, t, bucket): one 6-bit signature per hash table.
+    """(vec_id, t, bucket): one p-bit signature per hash table, with
+    p = :func:`lsh_planes` of the corpus size.
 
     Signature computation is a pure map — NO shuffle, which is the
     property that matters at 100 TB (the alternative, explode-dims +
-    join a planes table + re-aggregate, shuffles corpus×48 rows).
-    All 48 projections happen in ONE Arrow-batched numpy pandas_udf
-    (the 48 interpreted JVM `aggregate` folds this replaces were the
-    whole cost of the query: 12.9 s → ~1 s at sf0.1).
-
-    Determinism: the accumulation loops over dimensions SEQUENTIALLY
-    (one vectorized add per dim), so each (row, plane) scalar sees the
-    exact left-to-right IEEE addition order of the oracle's
-    ``list_sum(list_transform(...))`` — numpy's pairwise-summing
-    ``sum()``/``matmul`` would round differently and could flip a
-    near-zero projection's sign."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
+    join a planes table + re-aggregate, shuffles corpus×N_TABLES·p
+    rows).  All N_TABLES·p projections happen in ONE Arrow-batched
+    numpy pandas_udf (the interpreted JVM `aggregate` folds this
+    replaces were the whole cost of the query: 12.9 s → ~1 s at
+    sf0.1), each folded by the kernel (``fold.dots``), so every
+    (row, plane) scalar sees the oracle's left-to-right addition
+    order and a near-zero projection's sign agrees."""
     # adaptive plane count (round 14): one memoized build-time count
     # pins p = lsh_planes(n); the oracle computes the identical p in
     # SQL (_DUCK_LSH_PARAMS), so the driver gate still checks the
@@ -428,17 +438,10 @@ def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     signs = _plane_signs(p)
     weights = 1 << np.arange(p, dtype=np.int64)
 
-    @pandas_udf("array<long>")
+    @F.pandas_udf("array<long>")
     def buckets(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype=object)
-        e = np.stack(emb.to_numpy()).astype(np.float64)  # float32→float64 exact
-        acc = np.zeros((e.shape[0], N_TABLES * p))
-        for j in range(DIM):
-            acc += e[:, j : j + 1] * signs[:, j]
-        bits = (acc > 0).reshape(-1, N_TABLES, p)
-        b = (bits * weights).sum(axis=2)
-        return pd.Series(list(b))
+        bits = (fold.dots(fold.batch_matrix(emb), signs) > 0).reshape(-1, N_TABLES, p)
+        return pd.Series(list((bits * weights).sum(axis=2)))
 
     emb = load_table(spark, sf_dir, "embeddings", cpu_heavy=True)
     return emb.select(
@@ -489,18 +492,12 @@ def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("emb_d").alias("c_emb"),
         F.col("norm").alias("c_norm"),
     )
-    sim = F.expr(_DOT.format(a="q_emb", b="c_emb")) / (F.col("q_norm") * F.col("c_norm"))
     pairs = (
         cand.join(F.broadcast(nq), "query_id")
         .join(nc, "neighbor_id")
-        .withColumn("cosine", sim)
+        .withColumn("cosine", _cosine("q_emb", "q_norm", "c_emb", "c_norm"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= K_NEIGHBORS)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _rank_top_k(pairs, "cosine").select("query_id", "rank", "neighbor_id", "cosine")
 
 
 def _duck_proj(t: int, i: int) -> str:
@@ -574,32 +571,16 @@ SELECT query_id, rank, neighbor_id, cosine FROM (
 def _row_umax():
     """Arrow-batched per-row max|u| over the unit-normalized vector —
     the map side of the global quantization scale g = max over the
-    corpus of max|u| (round 15).  Norms accumulate SEQUENTIALLY over
-    dimensions (the :func:`_cluster_scorer` precedent: one vectorized
-    multiply-add per dim, each scalar rounded like the JVM/DuckDB
-    left-to-right fold), the division is elementwise IEEE, and
-    max/abs are order-free and exact — so feeding these row maxima to
-    an ordinary ``max()`` aggregate yields BIT-IDENTICAL g to the
-    retired interpreted ``aggregate(u, 0D, greatest(acc, abs(x)))``
-    fold (whose 0D seed is absorbed by max|u| ≥ 0)."""
-    import numpy as np
+    corpus of max|u| (round 15).  The norm is the kernel's
+    (``fold.unit``, which rejects a zero-norm row), the division is
+    elementwise IEEE, and max/abs are order-free and exact — so
+    feeding these row maxima to an ordinary ``max()`` aggregate
+    yields BIT-IDENTICAL g to the retired interpreted
+    ``aggregate(u, 0D, greatest(acc, abs(x)))`` fold (whose 0D seed
+    is absorbed by max|u| ≥ 0)."""
 
     def umax(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype="float64")
-        c = np.stack(emb.to_numpy()).astype(np.float64)
-        acc = np.zeros(c.shape[0])
-        for j in range(DIM):
-            acc = acc + c[:, j] * c[:, j]
-        if not np.all(acc > 0.0):
-            # ADVICE r15: a zero-norm vector would divide to NaN here
-            # and land in floor().astype(int64) downstream, whose
-            # result numpy leaves undefined — fail loudly instead (the
-            # DuckDB oracle diverges rather than matches on the same
-            # input, so silence could never be correct).
-            raise ValueError("zero-norm embedding: cosine space undefined")
-        u = c / np.sqrt(acc)[:, None]
-        return pd.Series(np.max(np.abs(u), axis=1))
+        return pd.Series(np.max(np.abs(fold.unit(fold.batch_matrix(emb))), axis=1))
 
     return umax
 
@@ -612,14 +593,12 @@ def _sq_dots_scorer(q_embs):
     measured 58.3 s at 80k vectors on the 100× stress fixture; this
     plus :func:`_row_umax` is two sub-second Arrow passes).
 
-    Per batch, with the broadcast scale g: normalize (sequential
-    per-dim accumulation + IEEE sqrt + elementwise divide — the
-    :func:`_cluster_scorer` bit-exactness argument), quantize
-    ``floor(u * 127 / g)`` in the same association the SQL spelled
-    (``(u * 127D) / g``, one correctly-rounded double op each), and
-    take all queries\' INTEGER dots in one matmul.  The query codes
-    are derived from ``q_embs`` inside the batch function by the
-    IDENTICAL normalize+quantize path, so engine and oracle agree by
+    Per batch, with the broadcast scale g: normalize (``fold.unit``),
+    quantize ``floor(u * 127 / g)`` in the same association the SQL
+    spelled (``(u * 127D) / g``, one correctly-rounded double op
+    each), and take all queries\' INTEGER dots in one matmul.  The
+    query codes come from ``q_embs`` by the IDENTICAL
+    normalize+quantize path, so engine and oracle agree by
     construction.  Integer dots are exact and order-free (|q| ≤ 127,
     {DIM} dims ⇒ |dot| ≤ ~1.03e6 ≪ int64).
 
@@ -627,34 +606,18 @@ def _sq_dots_scorer(q_embs):
     session in tests/test_similarity.py) — :func:`knn_scalar_quant`
     wraps it as a ``pandas_udf("array<bigint>")`` at plan-build
     time."""
-    import numpy as np
-
-    qe = np.stack([np.asarray(q, dtype=np.float64) for q in q_embs])
-
-    def _unit(mat):
-        acc = np.zeros(mat.shape[0])
-        for j in range(DIM):
-            acc = acc + mat[:, j] * mat[:, j]
-        if not np.all(acc > 0.0):
-            # ADVICE r15 — same loud failure as _row_umax: NaN/Inf
-            # into floor().astype(int64) is undefined in numpy.
-            raise ValueError("zero-norm embedding: cosine space undefined")
-        return mat / np.sqrt(acc)[:, None]
-
-    uq = _unit(qe)
+    uq = fold.unit(np.asarray(q_embs, dtype=np.float64))
     # ADVICE r15: g is ONE broadcast scalar, identical across batches —
     # quantize the query matrix once per (task, g), not per batch.
     qm_cache: dict[float, object] = {}
 
     def dots(emb: pd.Series, g: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype=object)
-        gv = float(g.iloc[0])
+        # an empty batch quantizes no row; 1.0 keeps its query codes finite
+        gv = float(next(iter(g), 1.0))
         qm = qm_cache.get(gv)
         if qm is None:
             qm = qm_cache[gv] = np.floor(uq * 127.0 / gv).astype(np.int64)
-        c = np.stack(emb.to_numpy()).astype(np.float64)
-        cq = np.floor(_unit(c) * 127.0 / gv).astype(np.int64)
+        cq = np.floor(fold.unit(fold.batch_matrix(emb)) * 127.0 / gv).astype(np.int64)
         return pd.Series(list(cq @ qm.T))
 
     return dots
@@ -684,8 +647,7 @@ def knn_scalar_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (round-15 spelling — measured 58.3 s → 6.9 s on the timed
     noop action at 80k vectors on the 100× stress fixture, 12.5 s
     including the bounded query-collect job): TWO Arrow passes over
-    the raw
-    parquet scan and nothing interpreted anywhere.  Pass 1
+    the raw parquet scan and nothing interpreted anywhere.  Pass 1
     (:func:`_row_umax`) computes per-row max|u| and collapses to the
     ONE scalar g, broadcast back in-plan (no collect).  Pass 2
     (:func:`_sq_dots_scorer`) normalizes, quantizes and scores every
@@ -704,47 +666,21 @@ def knn_scalar_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LSH/IVF bucketing paths: this query certifies the
     compression, those certify the candidate pruning."""
     raw = load_table(spark, sf_dir, "embeddings", cpu_heavy=True).select("vec_id", "embedding")
-    # ≤ N_QUERIES raw query embeddings: bounded driver state (the
-    # documented no-collect exception class — see kmeans_assign).
-    q_rows = sorted(
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in raw.where(F.col("vec_id") < N_QUERIES).collect()
-    )
+    q_rows = _driver_queries(raw)
     if not q_rows:
-        return raw.select(
-            F.col("vec_id").alias("query_id"),
-            F.lit(1).alias("rank"),
-            F.col("vec_id").alias("neighbor_id"),
+        return _no_neighbors(
+            raw,
             F.lit(0).cast("long").alias("approx_dot"),
             F.lit(0.0).alias("cosine"),
-        ).where(F.lit(False))
-    from pyspark.sql.functions import pandas_udf
-
-    umax = pandas_udf("double")(_row_umax())
-    gmax = raw.agg(F.max(umax("embedding")).alias("g"))
-    dots = pandas_udf("array<bigint>")(
-        _sq_dots_scorer([e for _, e in q_rows])
-    )
-    qid_arr = F.array(*[F.lit(i).cast("long") for i, _ in q_rows])
-    cand = raw.crossJoin(F.broadcast(gmax)).select(
-        F.col("vec_id").alias("neighbor_id"),
-        dots("embedding", "g").alias("dots"),
-    )
-    pairs = (
-        cand.select(
-            "neighbor_id", F.posexplode("dots").alias("pos", "approx_dot")
         )
-        .withColumn("query_id", F.element_at(qid_arr, F.col("pos") + 1))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .drop("pos")
+    umax = F.pandas_udf("double")(_row_umax())
+    gmax = raw.agg(F.max(umax("embedding")).alias("g"))
+    dots = F.pandas_udf("array<bigint>")(_sq_dots_scorer([e for _, e in q_rows]))
+    scored = raw.crossJoin(F.broadcast(gmax)).select(
+        F.col("vec_id").alias("neighbor_id"),
+        dots("embedding", "g").alias("scores"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_dot"), F.asc("neighbor_id")
-    )
-    top = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= K_NEIGHBORS)
-    )
+    top = _top_k_per_query(scored, q_rows, "approx_dot")
     # exact cosine of the ≤ queries×k winners: the SAME fold
     # expressions as the retired in-window spelling, evaluated AFTER
     # the join on the winner rows only — bit-identical values, and the
@@ -758,18 +694,13 @@ def knn_scalar_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_raw"),
     )
-    joined = (
-        cc.join(F.broadcast(top.join(F.broadcast(qq), "query_id")), "neighbor_id")
-        .withColumn("q_emb", F.transform(F.col("q_raw"), lambda x: x.cast("double")))
-        .withColumn("c_emb", F.transform(F.col("c_raw"), lambda x: x.cast("double")))
-        .withColumn("q_norm", F.sqrt(F.expr(_DOT.format(a="q_emb", b="q_emb"))))
-        .withColumn("c_norm", F.sqrt(F.expr(_DOT.format(a="c_emb", b="c_emb"))))
-    )
-    cos = F.expr(_DOT.format(a="q_emb", b="c_emb")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
     return (
-        joined.withColumn("cosine", cos)
+        cc.join(F.broadcast(top.join(F.broadcast(qq), "query_id")), "neighbor_id")
+        .withColumn("q_emb", _to_double("q_raw"))
+        .withColumn("c_emb", _to_double("c_raw"))
+        .withColumn("q_norm", _norm("q_emb"))
+        .withColumn("c_norm", _norm("c_emb"))
+        .withColumn("cosine", _cosine("q_emb", "q_norm", "c_emb", "c_norm"))
         .select("query_id", "rank", "neighbor_id", "approx_dot", "cosine")
     )
 
@@ -869,17 +800,12 @@ N_PROBE = 2  # cells searched per query
 _CENTROID_BASE = 10  # corpus vectors 10..17 serve as coarse centroids
 
 
-def _cell_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, cell, emb_d, norm): nearest coarse centroid by cosine.
-
-    Centroids are DATA (sampled corpus vectors — the degenerate first
-    k-means iteration; a trained quantizer would loop this assignment a
-    few times, one keyed shuffle per iteration).  Assignment is a
-    broadcast join of the 8-row centroid table against the corpus, then
-    an argmax window per vector — the exact shape of IVF list-building
-    on a cluster."""
-    emb = _with_norm(load_table(spark, sf_dir, "embeddings", cpu_heavy=True))
-    cents = F.broadcast(
+def _ivf_centroids(emb: DataFrame) -> DataFrame:
+    """(cell, cent_emb, cent_norm): the N_CELLS coarse centroids,
+    broadcast.  Centroids are DATA (sampled corpus vectors — the
+    degenerate first k-means iteration; a trained quantizer would loop
+    the assignment a few times, one keyed shuffle per iteration)."""
+    return F.broadcast(
         emb.where(
             (F.col("vec_id") >= _CENTROID_BASE)
             & (F.col("vec_id") < _CENTROID_BASE + N_CELLS)
@@ -889,11 +815,18 @@ def _cell_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("norm").alias("cent_norm"),
         )
     )
-    cos = F.expr(_DOT.format(a="emb_d", b="cent_emb")) / (F.col("norm") * F.col("cent_norm"))
+
+
+def _cell_assignments(emb: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, cell, emb_d, norm): nearest coarse centroid by cosine.
+
+    Assignment is a broadcast join of the centroid table against the
+    corpus, then an argmax window per vector — the exact shape of IVF
+    list-building on a cluster."""
     w = Window.partitionBy("vec_id").orderBy(F.desc("cent_cos"), F.asc("cell"))
     return (
         emb.join(cents)
-        .withColumn("cent_cos", cos)
+        .withColumn("cent_cos", _cosine("emb_d", "norm", "cent_emb", "cent_norm"))
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= 1)
         .select("vec_id", "cell", "emb_d", "norm")
@@ -917,33 +850,22 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     unstructured data multi-table LSH (knn_lsh) or brute force is the
     better tool.  That trade-off is exactly why both paths exist."""
     emb = _with_norm(load_table(spark, sf_dir, "embeddings", cpu_heavy=True))
-    assigned = _cell_assignments(spark, sf_dir)
+    cents = _ivf_centroids(emb)
+    assigned = _cell_assignments(emb, cents)
     # per-query probe list: N_PROBE nearest centroids
-    cents = F.broadcast(
-        emb.where(
-            (F.col("vec_id") >= _CENTROID_BASE)
-            & (F.col("vec_id") < _CENTROID_BASE + N_CELLS)
-        ).select(
-            (F.col("vec_id") - _CENTROID_BASE).alias("cell"),
-            F.col("emb_d").alias("cent_emb"),
-            F.col("norm").alias("cent_norm"),
-        )
-    )
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("emb_d").alias("q_emb"),
         F.col("norm").alias("q_norm"),
     )
-    qcos = F.expr(_DOT.format(a="q_emb", b="cent_emb")) / (F.col("q_norm") * F.col("cent_norm"))
     wq = Window.partitionBy("query_id").orderBy(F.desc("cent_cos"), F.asc("cell"))
     probes = (
         q.join(cents)
-        .withColumn("cent_cos", qcos)
+        .withColumn("cent_cos", _cosine("q_emb", "q_norm", "cent_emb", "cent_norm"))
         .withColumn("rn", F.row_number().over(wq))
         .where(F.col("rn") <= N_PROBE)
         .select("query_id", "q_emb", "q_norm", "cell")
     )
-    sim = F.expr(_DOT.format(a="q_emb", b="c_emb")) / (F.col("q_norm") * F.col("c_norm"))
     pairs = (
         assigned.select(
             F.col("vec_id").alias("neighbor_id"),
@@ -953,14 +875,9 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(probes), "cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", sim)
+        .withColumn("cosine", _cosine("q_emb", "q_norm", "c_emb", "c_norm"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= K_NEIGHBORS)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _rank_top_k(pairs, "cosine").select("query_id", "rank", "neighbor_id", "cosine")
 
 
 _KNN_IVF_ORACLE = f"""
@@ -1036,48 +953,28 @@ def _cluster_scorer(cent_ids, cent_mat):
     per Lloyd pass at 80k×157 on the stress fixture; this pass is
     sub-second).
 
-    Bit-exactness vs the SQL oracle, same argument as
-    :func:`lsh_buckets` (the oracle-proven precedent): the dot
-    accumulates SEQUENTIALLY over dimensions (one vectorized
-    multiply-add per dim, each scalar rounded like the JVM/DuckDB
-    left-to-right fold — numpy does not fuse the multiply and add),
-    centroid norms use the same per-dim Python fold + one IEEE sqrt,
-    and the score is one double division per (row, centroid).  Ties:
-    ``np.argmax`` returns the FIRST maximum, and ``cent_ids`` is
-    sorted ascending, so equal scores pick the LOWEST k — exactly the
-    retired ``max_by(struct(score, -k))`` tie-break and the oracle's
-    ``row_number ORDER BY score DESC, k ASC``.
+    Bit-exact with the SQL oracle through the kernel: the dots are
+    ``fold.dots``, the centroid norms ``fold.norms`` (a zero centroid
+    raises), and the score is one double division per (row,
+    centroid).  Ties: ``np.argmax`` returns the FIRST maximum, and
+    ``cent_ids`` is sorted ascending, so equal scores pick the LOWEST
+    k — exactly the retired ``max_by(struct(score, -k))`` tie-break
+    and the oracle's ``row_number ORDER BY score DESC, k ASC``.
 
     An empty cluster simply drops out of ``cent_ids`` (as it dropped
     out of the old broadcast side and drops out of the oracle's
-    ``c{it}`` CTE) — the matrix holds PRESENT centroids only, never a
-    zero row that would divide by zero.
+    ``c{it}`` CTE) — the matrix holds PRESENT centroids only.
 
     Returns the PLAIN batch function (unit-testable without a Spark
     session; tie-break and empty-cluster semantics are pinned in
     tests/test_similarity.py) — :func:`kmeans_assign` wraps it as a
     ``pandas_udf("long")`` at plan-build time."""
-    import math
-
-    import numpy as np
-
     ids = np.asarray(cent_ids, dtype=np.int64)
     cv = np.asarray(cent_mat, dtype=np.float64)  # |cv| < 2^53: exact
-    norms = np.empty(len(ids))
-    for c in range(len(ids)):
-        acc = 0.0
-        for j in range(DIM):
-            acc = acc + cv[c, j] * cv[c, j]
-        norms[c] = math.sqrt(acc)
+    norms = fold.norms(cv)
 
     def best_k(qv: pd.Series) -> pd.Series:
-        if len(qv) == 0:
-            return pd.Series([], dtype="int64")
-        q = np.stack(qv.to_numpy()).astype(np.float64)
-        acc = np.zeros((q.shape[0], len(ids)))
-        for j in range(DIM):
-            acc += q[:, j : j + 1] * cv[:, j]
-        scores = acc / norms
+        scores = fold.dots(fold.batch_matrix(qv), cv) / norms
         return pd.Series(ids[np.argmax(scores, axis=1)])
 
     return best_k
@@ -1101,7 +998,6 @@ def _member_sum_partials(cent_ids, cent_mat):
     query plan uses — so the collected centroid matrix is
     value-identical to the retired spelling, and the final assignment
     (the declared query result) is bit-identical."""
-    import numpy as np
     import pyarrow as pa
 
     score = _cluster_scorer(cent_ids, cent_mat)
@@ -1112,8 +1008,6 @@ def _member_sum_partials(cent_ids, cent_mat):
         seen = np.zeros(len(ids), dtype=bool)
         for b in batches:
             qv = b.column("qv").to_pandas()
-            if len(qv) == 0:
-                continue
             ks = score(qv).to_numpy()
             pos = np.searchsorted(ids, ks)
             # a k missing from ids would scatter-add into a neighbour
@@ -1124,8 +1018,7 @@ def _member_sum_partials(cent_ids, cent_mat):
                     f"scored cluster ids {sorted(set(ks[~hit].tolist()))} "
                     f"are not centroid ids {ids.tolist()}"
                 )
-            mat = np.stack(qv.to_numpy()).astype(np.int64)
-            np.add.at(acc, pos, mat)
+            np.add.at(acc, pos, fold.batch_matrix(qv, np.int64))
             seen[pos] = True
         if seen.any():
             idx = np.flatnonzero(seen)
@@ -1156,7 +1049,9 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     in ONE Arrow-batched narrow map (:func:`_cluster_scorer`), then
     rebuild centroids as exact integer member-sums (cosine only cares
     about direction, so the un-normalized sum IS the mean centroid) —
-    one 64-column keyed aggregation per iteration, the only shuffle.
+    one keyed aggregation of per-task partials per iteration, the only
+    shuffle.  The final assignment's UDF is built once, after the
+    loop.
 
     Driver state — the documented exception to the no-collect rule:
     centroids live on the driver between iterations as a k×64 int64
@@ -1184,36 +1079,29 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("vec_id") < _CENTROID_BASE + kk)
     ).collect()  # ≤ k ≤ 1024 rows (see docstring: bounded driver state)
     cents = sorted((int(r["vec_id"]) - _CENTROID_BASE, r["qv"]) for r in seed_rows)
-    from pyspark.sql.functions import pandas_udf
-
-    assign = None
-    for it in range(KMEANS_ITERS):
-        best_k = pandas_udf("long")(
-            _cluster_scorer([c[0] for c in cents], [c[1] for c in cents])
+    for _ in range(KMEANS_ITERS - 1):
+        # round 16 (guide §4.2): member-sums via one Arrow pass
+        # emitting per-task k×64 partials — the retired
+        # groupBy(64 × sum(element_at)) evaluated 64 interpreted
+        # array lookups per row and shuffled a 64-column agg over
+        # n rows; the keyed agg now runs over (tasks × k) partial
+        # rows.  Value-identical (integer sums are order-free;
+        # see _member_sum_partials).
+        partials = v.select("qv").mapInArrow(
+            _member_sum_partials([k for k, _ in cents], [c for _, c in cents]),
+            "k long, sums array<bigint>",
         )
-        assign = v.withColumn("k", best_k("qv"))
-        if it < KMEANS_ITERS - 1:
-            # round 16 (guide §4.2): member-sums via one Arrow pass
-            # emitting per-task k×64 partials — the retired
-            # groupBy(64 × sum(element_at)) evaluated 64 interpreted
-            # array lookups per row and shuffled a 64-column agg over
-            # n rows; the keyed agg now runs over (tasks × k) partial
-            # rows.  Value-identical (integer sums are order-free;
-            # see _member_sum_partials).
-            partials = v.select("qv").mapInArrow(
-                _member_sum_partials(
-                    [c[0] for c in cents], [c[1] for c in cents]
-                ),
-                "k long, sums array<bigint>",
-            )
-            sum_rows = partials.groupBy("k").agg(
-                *[F.sum(F.element_at("sums", i + 1)).alias(f"c{i}") for i in range(DIM)]
-            ).collect()  # ≤ k ≤ 1024 rows of integer member-sums
-            cents = sorted(
-                (int(r["k"]), [int(r[f"c{i}"]) for i in range(DIM)])
-                for r in sum_rows
-            )
-    return assign.select("vec_id", F.col("k").alias("cluster"))
+        sum_rows = partials.groupBy("k").agg(
+            *[F.sum(F.element_at("sums", i + 1)).alias(f"c{i}") for i in range(DIM)]
+        ).collect()  # ≤ k ≤ 1024 rows of integer member-sums
+        cents = sorted(
+            (int(r["k"]), [int(r[f"c{i}"]) for i in range(DIM)])
+            for r in sum_rows
+        )
+    best_k = F.pandas_udf("long")(
+        _cluster_scorer([k for k, _ in cents], [c for _, c in cents])
+    )
+    return v.select("vec_id", best_k("qv").alias("cluster"))
 
 
 def _kmeans_oracle() -> str:
@@ -1289,17 +1177,12 @@ def _pq_scorer(ks, books):
     Returns the PLAIN batch function (unit-tested without a Spark
     session in tests/test_similarity.py) — :func:`embedding_pq` wraps
     it as a struct-returning ``pandas_udf`` at plan-build time."""
-    import numpy as np
-
     ks_arr = np.asarray(ks, dtype=np.int64)
     cw = [np.asarray(b, dtype=np.int64) for b in books]  # M × (K, PQ_SUB)
     k_strs = [str(int(k)) for k in ks_arr]
 
     def assign(qv: pd.Series) -> pd.DataFrame:
-        if len(qv) == 0:
-            return pd.DataFrame({"code": pd.Series([], dtype=object),
-                                 "sq_err": pd.Series([], dtype="int64")})
-        q = np.stack(qv.to_numpy()).astype(np.int64)  # (rows, DIM)
+        q = fold.batch_matrix(qv, np.int64)
         best_ks = []
         sq_err = np.zeros(q.shape[0], dtype=np.int64)
         for m in range(PQ_M):
@@ -1365,9 +1248,7 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         [qv[m * PQ_SUB : (m + 1) * PQ_SUB] for _, qv in seed_rows]
         for m in range(PQ_M)
     ]
-    from pyspark.sql.functions import pandas_udf
-
-    assign = pandas_udf("code string, sq_err long")(_pq_scorer(ks, books))
+    assign = F.pandas_udf("code string, sq_err long")(_pq_scorer(ks, books))
     return v.select("vec_id", assign("qv").alias("a")).select(
         "vec_id", F.col("a.code").alias("code"), F.col("a.sq_err").alias("sq_err")
     )
@@ -1418,7 +1299,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning.
 
     Composes the registered stages: :func:`kmeans_assign`'s 3-Lloyd
-    clustering (broadcast centroids, exact integer centroid sums) and
+    clustering (driver-held centroids, exact integer centroid sums) and
     the near-dup family's ordered-fold cosine (bit-identical on both
     engines).
 
@@ -1446,11 +1327,10 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("emb_d").alias("eb"),
         F.col("norm").alias("nb"),
     )
-    sim = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
     return (
         a.join(b, ["cluster"])
         .where(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cosine", sim)
+        .withColumn("cosine", _cosine("ea", "na", "eb", "nb"))
         .where(F.col("cosine") >= SEMANTIC_TAU)
         .select(
             "cluster",
@@ -1497,7 +1377,7 @@ SPECS = [
     QuerySpec("knn_ivf", knn_ivf, _KNN_IVF_ORACLE,
               "ANN top-5 via IVF coarse cells with nprobe=2 (cell-partitioned scale path)"),
     QuerySpec("kmeans_assign", kmeans_assign, _kmeans_oracle(),
-              "3-iteration cosine k-means over quantized embeddings (broadcast centroids + 64-col keyed agg per iteration)"),
+              "3-iteration cosine k-means over quantized embeddings (driver-held centroids + one keyed member-sum agg per iteration)"),
     QuerySpec("dedup_semantic", dedup_semantic, _semantic_oracle(),
               "SemDeDup: k-means-pruned intra-cluster cosine≥τ duplicate "
               "pairs with keep-one policy (cluster-keyed, not corpus-quadratic)"),

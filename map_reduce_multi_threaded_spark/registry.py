@@ -115,6 +115,18 @@ _REVERIFY_FIRST: dict[str, int] = {
     "join_asof_nearest": 16,
     # one stream-stream join spelling: the (user, time-bucket) equi-join
     "stream_stream_join": 16,
+    # one Arrow-scorer pattern: every similarity query now runs the
+    # shared fold kernel, batch reader, query scaffold or cosine Column
+    "embedding_pq": 16,
+    "knn_bruteforce": 16,
+    "embedding_neardup": 16,
+    "embedding_neardup_lsh": 16,
+    "knn_lsh": 16,
+    "knn_recall_eval": 16,
+    "knn_scalar_quant": 16,
+    "knn_ivf": 16,
+    "kmeans_assign": 16,
+    "dedup_semantic": 16,
 }
 
 

@@ -2,29 +2,54 @@
 """Capture `explain("formatted")` for named queries into plan files.
 
 Usage:
-  python scripts/capture_plans.py --out plans/r16 --suffix before \
-      --sf /root/testdata/sf0.1 q1 q2 ...
+  python scripts/capture_plans.py --out plans/r17 --suffix before \
+      --sf SF_DIR q1 q2 ...
 
-Writes <out>/<query>_<suffix>.txt for each name — the committed
-evidence files the optimization-round judge diffs against the code
-(the judge cannot run Spark).
+Writes <out>/<query>_<suffix>.txt for each name — committed evidence
+files that show a plan change without running Spark.  Each file holds
+the plan of every DataFrame the query collects while it is built
+(driver-held queries, seeds, centroid sums), then the compiled plan of
+the query itself.
+
+Expression ids (``#123``), exchange plan ids (``plan_id=7``), RDD ids
+(``RDD[23]``), lambda-variable counters (``lambda x_8``) and the
+``--sf`` directory are replaced by stable tokens, so a before/after
+pair captured in different sessions or checkouts diffs clean with
+plain ``diff``.
 """
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import DataFrame
 
 from map_reduce_multi_threaded_spark.registry import collect_specs
 from map_reduce_multi_threaded_spark.session import get_spark
 
 
+def _formatted(df: DataFrame) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def _normalized(plan: str, sf: str) -> str:
+    plan = plan.replace(os.path.abspath(sf), "<sf>")
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+    plan = re.sub(r"(lambda [A-Za-z]+)_\d+", r"\1_N", plan)
+    return re.sub(r"#\d+", "#N", plan)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
-    ap.add_argument("--out", default="plans/r16")
+    ap.add_argument("--out", default="plans/r17")
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     a = ap.parse_args()
@@ -35,14 +60,27 @@ def main() -> int:
     spark = get_spark(app_name="capture_plans")
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(a.out, exist_ok=True)
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    collect = frame.collect
     for name in a.names:
-        df = specs[name].fn(spark, a.sf)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        built: list[str] = []
+
+        def recording_collect(df: DataFrame):
+            built.append(_formatted(df))
+            return collect(df)
+
+        frame.collect = recording_collect
+        try:
+            df = specs[name].fn(spark, a.sf)
+        finally:
+            frame.collect = collect
+        parts = [
+            f"== build-time collect {i + 1} ==\n{p}" for i, p in enumerate(built)
+        ]
+        plan = "\n".join(parts + [_formatted(df)])
         path = os.path.join(a.out, f"{name}_{a.suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(plan)
+            fh.write(_normalized(plan, a.sf))
         print(f"wrote {path} ({len(plan)} bytes)", flush=True)
     spark.stop()
     return 0

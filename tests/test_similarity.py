@@ -5,6 +5,8 @@ from __future__ import annotations
 import subprocess
 import sys
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from map_reduce_multi_threaded_spark.operators import similarity
@@ -661,3 +663,30 @@ def test_cos_scorer_matches_sequential_fold():
             want = seq_dot(q, v) / (qn * cn)
             assert out[r][qi] == want, (r, qi)
     assert list(_cos_scorer(queries)(pd.Series([], dtype=object))) == []
+
+
+_UNIT = [1.0] + [0.0] * (similarity.DIM - 1)
+_ZERO = [0.0] * similarity.DIM
+
+
+@pytest.mark.parametrize(
+    "score",
+    [
+        lambda: similarity._row_umax()(pd.Series([np.asarray(_UNIT), np.asarray(_ZERO)])),
+        lambda: similarity._sq_dots_scorer([_UNIT])(
+            pd.Series([np.asarray(_ZERO)]), pd.Series([1.0])
+        ),
+        lambda: similarity._sq_dots_scorer([_ZERO])(
+            pd.Series([np.asarray(_UNIT)]), pd.Series([1.0])
+        ),
+        lambda: similarity._cos_scorer([_UNIT])(pd.Series([np.asarray(_ZERO)])),
+        lambda: similarity._cos_scorer([_ZERO])(pd.Series([np.asarray(_UNIT)])),
+    ],
+    ids=["umax", "sq_corpus", "sq_query", "cos_corpus", "cos_query"],
+)
+def test_scorers_reject_zero_norm_rows(score):
+    """A zero-norm vector has no cosine: every scorer that normalizes
+    or divides by a norm raises instead of returning NaN, which
+    Spark's NaN-largest ordering would rank first for every query."""
+    with pytest.raises(ValueError, match="zero-norm embedding"):
+        score()
