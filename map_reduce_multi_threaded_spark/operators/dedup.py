@@ -490,13 +490,19 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exact but quadratic in co-occurring shingles — the correctness
     baseline that :func:`dedup_minhash_lsh` approximates at scale."""
-    return _jaccard_pairs_from(shingles(spark, sf_dir))
+    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
+    return (
+        _co_shingle_counts(shingles(spark, sf_dir))
+        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
+    )
 
 
-def _jaccard_pairs_from(sh: DataFrame) -> DataFrame:
-    """Jaccard≥τ pairs from a given shingle frame (lets composed
-    harnesses reuse ONE pinned shingle table for both truth and
-    signatures)."""
+def _co_shingle_counts(sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, common, na, nb) for EVERY co-shingled pair
+    (doc_a < doc_b): the all-pairs shingle self-join counted per pair,
+    plus both shingle-set sizes — the quadratic exact baseline shared
+    by the Jaccard and containment scorers."""
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     common = (
@@ -506,13 +512,7 @@ def _jaccard_pairs_from(sh: DataFrame) -> DataFrame:
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    return common.join(sa, "doc_a").join(sb, "doc_b")
 
 
 _NGRAM_JACCARD_ORACLE = f"""
@@ -557,8 +557,7 @@ def _prefix_candidates(sh: DataFrame) -> DataFrame:
       a random prefix collision near the END of both prefixes can
       no longer reach the required overlap.
 
-    Returns (doc_a, doc_b, na, nb) so verification reuses the sizes
-    without another join against the size table."""
+    Returns (doc_a, doc_b); :func:`_jaccard` verifies them."""
     # The three prunes below are integer-exact ONLY for τ = 1/2
     # (prefix length n - ceil(n/2) + 1, length filter 2·min ≥ max,
     # min-overlap ceil((na+nb)/3)).  Changing JACCARD_THRESHOLD
@@ -620,7 +619,7 @@ def _prefix_candidates(sh: DataFrame) -> DataFrame:
             + F.least(F.col("na") - F.col("ia"), F.col("nb") - F.col("jb"))
             >= F.expr("(na + nb + 2) div 3")
         )
-        .select("doc_a", "doc_b", "na", "nb")
+        .select("doc_a", "doc_b")
     )
 
 
@@ -640,38 +639,54 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the length + positional prunes (see
     :func:`_prefix_candidates`) drop candidates that provably cannot
     reach τ — the standard exact near-dup path (AllPairs/PPJoin)
-    when LSH's probabilistic recall is not acceptable.  Verification
-    ships each doc's shingle SET to its surviving candidate pairs
-    (two keyed joins) and intersects the two arrays inside codegen
-    (`array_intersect`) — the Vernica/Carey/Li SIGMOD'10 verify
-    shape: O(|candidates|) rows with bounded array payloads instead
-    of re-exploding every candidate's full shingle list through a
-    shuffle-and-count (r9: 5.2 → 2.9 s at sf0.1, identical output)."""
+    when LSH's probabilistic recall is not acceptable.  Only the
+    surviving candidates are verified, by :func:`_jaccard`."""
     sh = shingles(spark, sf_dir).localCheckpoint(eager=True)
     return _ppjoin_pairs_from(sh)
 
 
 def _ppjoin_pairs_from(sh: DataFrame) -> DataFrame:
     """Exact Jaccard ≥ τ pairs from a given (ideally pinned) shingle
-    frame via prefix filter + PPJoin prunes + array-intersect verify —
-    output-identical to :func:`_jaccard_pairs_from` (the all-pairs
+    frame via prefix filter + PPJoin prunes + :func:`_jaccard` —
+    output-identical to :func:`dedup_ngram_jaccard` (the all-pairs
     spelling) but never quadratic in co-occurring shingles, so
     composed harnesses can use it as an exact-but-scalable truth
     side."""
-    cand = _prefix_candidates(sh)
-    docsets = sh.groupBy("doc_id").agg(F.collect_list("s").alias("arr"))
-    arr_a = docsets.select(F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a"))
-    arr_b = docsets.select(F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b"))
-    common = F.size(F.array_intersect("arr_a", "arr_b"))
-    return (
-        cand.join(arr_a, "doc_a")
-        .join(arr_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (common / (F.col("na") + F.col("nb") - common)).alias("jaccard"),
+    return _jaccard(_prefix_candidates(sh), sh, sh).where(
+        F.col("jaccard") >= JACCARD_THRESHOLD
+    )
+
+
+def _jaccard(cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame) -> DataFrame:
+    """Exact shingle Jaccard of every candidate pair: (doc_a, doc_b,
+    jaccard), unthresholded — the ONE verify of every candidate →
+    verify pipeline (prefix filter, MinHash LSH, the ingest screen).
+    ``doc_a`` is looked up in the (doc_id, s) frame ``sh_a`` and
+    ``doc_b`` in ``sh_b`` (the same frame for a self-join).
+
+    Each doc's shingle SET ships to its candidate pairs (two keyed
+    joins) and the two arrays intersect inside codegen
+    (`array_intersect`); the set sizes are the array sizes.  This is
+    the Vernica/Carey/Li SIGMOD'10 verify shape: O(|candidates|) rows
+    with per-doc array payloads instead of re-exploding every
+    candidate's full shingle list through a shuffle-and-count (r9:
+    5.2 → 2.9 s at sf0.1 on the prefix filter, identical output).
+    The caveat is the payload: one pair row carries both documents'
+    whole shingle lists."""
+
+    def sets(sh: DataFrame, side: str) -> DataFrame:
+        # the aggregate is aliased identically on both sides so a
+        # self-join reuses one shuffle
+        return sh.groupBy("doc_id").agg(F.collect_list("s").alias("arr")).select(
+            F.col("doc_id").alias(f"doc_{side}"), F.col("arr").alias(f"arr_{side}")
         )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
+
+    common = F.size(F.array_intersect("arr_a", "arr_b"))
+    union = F.size("arr_a") + F.size("arr_b") - common
+    return (
+        cand.join(sets(sh_a, "a"), "doc_a")
+        .join(sets(sh_b, "b"), "doc_b")
+        .select("doc_a", "doc_b", (common / union).alias("jaccard"))
     )
 
 
@@ -762,13 +777,44 @@ def _signatures_from(sh: DataFrame) -> DataFrame:
     return hashed.groupBy("doc_id").agg(*mins)
 
 
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """48-wide MinHash signature per doc as columns m0..m47.
+def _bands(sig: DataFrame, n_bands: int = N_BANDS, rows: int = ROWS_PER_BAND) -> DataFrame:
+    """(doc_id, band_idx, band_hash) from a signature frame
+    (doc_id, m0..m47): band j is the md5 of signature slots
+    ``rows·j .. rows·j + rows - 1``.  Docs sharing any band become
+    candidates (:func:`_band_pairs`)."""
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(j).alias("band_idx"),
+                F.md5(
+                    F.concat_ws(
+                        ",",
+                        *[F.col(f"m{rows * j + r}").cast("string") for r in range(rows)],
+                    )
+                ).alias("band_hash"),
+            )
+            for j in range(n_bands)
+        ]
+    )
+    return sig.select("doc_id", F.explode(bands).alias("b")).select(
+        "doc_id", F.col("b.band_idx").alias("band_idx"), F.col("b.band_hash").alias("band_hash")
+    )
 
-    One shuffle (groupBy doc_id); each min-agg combines map-side.
-    Signature size is constant per doc — the property that lets this
-    run on 100 TB where all-pairs Jaccard cannot."""
-    return _signatures_from(shingles(spark, sf_dir))
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (doc_a < doc_b) sharing a band bucket
+    — the band self-join; quadratic only within a bucket."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
 
 
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -785,14 +831,17 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cost is O(batch): the batch side is shingled, signed and banded
     from scratch, but the corpus side is index lookups — band-bucket
     joins keyed on (band, hash) plus exact verification restricted to
-    candidates (never batch × corpus).  Both shingle frames are
-    pinned once (two consumers each: banding and verification).
+    candidates (never batch × corpus).  Verification is
+    :func:`_jaccard` with the batch shingles on the a-side and the
+    corpus shingles on the b-side; its unthresholded score feeds the
+    best-match window.  Both shingle frames are pinned once (two
+    consumers each: banding and verification).
 
     The corpus index is EXACT-COLLAPSED first (round 15 — SCALE.md
     rule 3 applied inside the operator): banding the raw corpus puts
     every member of an identical-text family into every one of its
     band buckets, so on a giant-family corpus the candidate join
-    yields ~batch×family rows and the shingle-verify join multiplies
+    yields ~batch×family rows and verification multiplies
     that by shingle count — measured: Java heap OOM (8 GB driver) at
     80k docs / 10k-member families (docs/dupgiant80k_r15.json).
     Instead the index holds one representative per DISTINCT text with
@@ -831,8 +880,8 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     batch = _ingest_batch(spark, sf_dir).unionByName(novel)
     batch_sh = _shingles_from(batch).localCheckpoint(eager=True)
-    cb = _lsh_bands_from(corpus_sh)
-    bb = _lsh_bands_from(batch_sh)
+    cb = _bands(_signatures_from(corpus_sh))
+    bb = _bands(_signatures_from(batch_sh))
     cand = (
         bb.alias("b")
         .join(
@@ -846,28 +895,20 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    nbs = batch_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nb"))
-    ncs = corpus_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nc"))
-    common = (
-        cand.join(batch_sh.alias("bs"), F.col("bs.doc_id") == F.col("batch_doc"))
-        .join(
-            corpus_sh.alias("cs"),
-            (F.col("cs.doc_id") == F.col("corpus_doc"))
-            & (F.col("cs.s") == F.col("bs.s")),
-        )
-        .groupBy("batch_doc", "corpus_doc")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
+    # a band collision with NO shared shingle (equal md5 % p residues)
+    # scores 0; the oracle's explode-and-count never sees such a pair,
+    # so it must not become a best match
     scored = (
-        common.join(nbs.select(F.col("doc_id").alias("batch_doc"), "nb"), "batch_doc")
-        .join(ncs.select(F.col("doc_id").alias("corpus_doc"), "nc"), "corpus_doc")
+        _jaccard(
+            cand.select(F.col("batch_doc").alias("doc_a"), F.col("corpus_doc").alias("doc_b")),
+            batch_sh,
+            corpus_sh,
+        )
+        .where(F.col("jaccard") > 0)
         .select(
-            "batch_doc",
-            "corpus_doc",
-            (
-                F.col("common")
-                / (F.col("nb") + F.col("nc") - F.col("common"))
-            ).alias("jac"),
+            F.col("doc_a").alias("batch_doc"),
+            F.col("doc_b").alias("corpus_doc"),
+            F.col("jaccard").alias("jac"),
         )
     )
     w = Window.partitionBy("batch_doc").orderBy(
@@ -1040,42 +1081,7 @@ def dedup_banding_sweep(
     )
     out = None
     for n_bands, rows in BANDING_SWEEP:
-        bands = F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("band_idx"),
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"m{rows * j + r}").cast("string")
-                                for r in range(rows)
-                            ],
-                        )
-                    ).alias("band_hash"),
-                )
-                for j in range(n_bands)
-            ]
-        )
-        bt = sig.select("doc_id", F.explode(bands).alias("b")).select(
-            "doc_id",
-            F.col("b.band_idx").alias("band_idx"),
-            F.col("b.band_hash").alias("band_hash"),
-        )
-        cand = (
-            bt.alias("x")
-            .join(
-                bt.alias("y"),
-                (F.col("x.band_idx") == F.col("y.band_idx"))
-                & (F.col("x.band_hash") == F.col("y.band_hash"))
-                & (F.col("x.doc_id") < F.col("y.doc_id")),
-            )
-            .select(
-                F.col("x.doc_id").alias("doc_a"),
-                F.col("y.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
+        cand = _band_pairs(_bands(sig, n_bands, rows))
         stats = (
             truth.join(cand.withColumn("hit", F.lit(1)), ["doc_a", "doc_b"], "left")
             .agg(
@@ -1153,33 +1159,6 @@ truth AS MATERIALIZED (
 """
 
 
-def _lsh_bands_from(sh: DataFrame) -> DataFrame:
-    sig = _signatures_from(sh)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band_idx"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[F.col(f"m{ROWS_PER_BAND * j + r}").cast("string") for r in range(ROWS_PER_BAND)],
-                    )
-                ).alias("band_hash"),
-            )
-            for j in range(N_BANDS)
-        ]
-    )
-    return sig.select("doc_id", F.explode(bands).alias("b")).select(
-        "doc_id", F.col("b.band_idx").alias("band_idx"), F.col("b.band_hash").alias("band_hash")
-    )
-
-
-def lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, band_idx, band_hash): md5 over each 4-slot signature
-    band.  Docs sharing any band become candidates."""
-    return _lsh_bands_from(shingles(spark, sf_dir))
-
-
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified with exact Jaccard.
 
@@ -1208,41 +1187,11 @@ def _minhash_lsh_pairs_from(sh: DataFrame) -> DataFrame:
     (:func:`dedup_recall_eval`) share ONE materialized shingle table
     between the truth and LSH pipelines instead of deriving it
     twice."""
-    bands = _lsh_bands_from(sh)
-    a, b = bands.alias("a"), bands.alias("b")
-    # candidate pairs are few (bucket collisions) — broadcast them into
-    # the verification joins so the shingle table shuffles only once
-    cand = F.broadcast(
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    sa_sh = sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("sa"))
-    sb_sh = sh.select(F.col("doc_id").alias("doc_b2"), F.col("s").alias("sb"))
-    common = (
-        cand.join(sa_sh, "doc_a")
-        .join(sb_sh, (F.col("doc_b") == F.col("doc_b2")) & (F.col("sa") == F.col("sb")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    # sizes is corpus-sized — never broadcast it; the candidate-pair
-    # side (bounded by bucket collisions, not corpus size) is the
-    # broadcast side and sizes streams through both joins
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    with_na = sa.join(F.broadcast(common), "doc_a")
-    return (
-        sb.join(F.broadcast(with_na), "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    # candidate pairs are few (bucket collisions, not corpus size) —
+    # broadcast them into the first verify join so the corpus-sized
+    # shingle sets stream
+    cand = F.broadcast(_band_pairs(_bands(_signatures_from(sh))))
+    return _jaccard(cand, sh, sh).where(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
 def _duck_minhash_cand_ctes() -> str:
@@ -1580,21 +1529,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: shingle self-join on the shingle key (co-occurrence only),
     then two broadcast-free size joins — identical plan shape to the
     Jaccard baseline."""
-    sh = shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     cont_a = F.col("common").cast("double") / F.col("na").cast("double")
     cont_b = F.col("common").cast("double") / F.col("nb").cast("double")
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _co_shingle_counts(shingles(spark, sf_dir))
         .select(
             "doc_a",
             "doc_b",

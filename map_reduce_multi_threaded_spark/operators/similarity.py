@@ -1078,6 +1078,11 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") >= _CENTROID_BASE)
         & (F.col("vec_id") < _CENTROID_BASE + kk)
     ).collect()  # ≤ k ≤ 1024 rows (see docstring: bounded driver state)
+    if not seed_rows:
+        # no vec_id in the seed range (a corpus of ≤ 10 vectors): no
+        # centroid, so no vector is assigned — the oracle's empty
+        # cross join against its empty seed set
+        return v.select("vec_id", F.lit(None).cast("long").alias("cluster")).where(F.lit(False))
     cents = sorted((int(r["vec_id"]) - _CENTROID_BASE, r["qv"]) for r in seed_rows)
     for _ in range(KMEANS_ITERS - 1):
         # round 16 (guide §4.2): member-sums via one Arrow pass

@@ -127,6 +127,15 @@ _REVERIFY_FIRST: dict[str, int] = {
     "knn_ivf": 16,
     "kmeans_assign": 16,
     "dedup_semantic": 16,
+    # one near-dup candidate → verify pipeline: these run the shared
+    # array-intersect Jaccard verify (dedup_prefix_filter is flagged above)
+    "dedup_minhash_lsh": 16,
+    "dedup_recall_eval": 16,
+    "dedup_incremental_lsh": 16,
+    "dedup_clusters": 16,
+    "dedup_cluster_keep": 16,
+    "graph_triangle_count": 16,
+    "dedup_banding_sweep": 16,
 }
 
 

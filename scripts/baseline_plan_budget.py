@@ -16,15 +16,13 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from map_reduce_multi_threaded_spark.session import get_spark
-from tests.test_plan_policy import SF, _STREAMING_MODULES, _batch_specs, _scan_cols
-
-
-def _exchange_count(plan: str) -> int:
-    return (
-        plan.count("Exchange hashpartitioning")
-        + plan.count("Exchange rangepartitioning")
-        + plan.count("Exchange SinglePartition")
-    )
+from tests.test_plan_policy import (
+    SF,
+    _STREAMING_MODULES,
+    _batch_specs,
+    _exchange_count,
+    _scan_cols,
+)
 
 
 def _write(path: str, budget: dict) -> None:

@@ -495,3 +495,44 @@ def test_incremental_lsh_verdicts_per_cohort(spark, sf_oracle_dir):
         else:  # token-mangled novel
             assert cohort == 3 and not r["is_near_dup"], r
             assert r["n_candidates"] == 0, r
+
+
+def test_incremental_lsh_band_collision_without_shared_shingle(
+    spark, sf_oracle_dir, tmp_path
+):
+    """A band collision is not a shared shingle.  Corpus doc 7 is
+    't186650 q r', so the screen's novel cohort holds 't186650~ q~ r~'
+    (doc 37); corpus doc 1 is 'u19835 v w'.  Both are single-shingle
+    docs whose shingle hashes md5_long(s) % p are equal, so every
+    MinHash band collides while the shingle sets are disjoint.  Like
+    the oracle, the screen counts the candidate but reports no best
+    match (Jaccard 0 is not a match)."""
+    import hashlib
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def residue(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % dedup.MINHASH_P
+
+    assert residue("t186650~ q~ r~") == residue("u19835 v w")
+    for f in os.listdir(sf_oracle_dir):
+        if f != "documents.parquet":
+            shutil.copy(os.path.join(sf_oracle_dir, f), tmp_path / f)
+    texts = ["u19835 v w", "t186650 q r"]
+    docs = pa.table({
+        "doc_id": pa.array([1, 7], pa.int64()),
+        "text": texts,
+        "lang": ["en", "en"],
+        "source": ["s", "s"],
+        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+    })
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    spec = {s.name: s for s in dedup.SPECS}["dedup_incremental_lsh"]
+    got = spec.fn(spark, str(tmp_path))
+    compare(got, spec.oracle, str(tmp_path))
+    (row,) = got.collect()
+    assert row["batch_doc"] == 37 and row["n_candidates"] == 1, row
+    assert row["best_match"] is None and not row["is_near_dup"], row

@@ -133,6 +133,17 @@ def test_rdd_scans_only_in_checkpointed_iteratives(plans):
     assert not offenders, offenders
 
 
+def _exchange_count(plan: str) -> int:
+    """Shuffle exchanges in a plan string — the unit of
+    tests/plan_budget.json (hash, range and single-partition
+    exchanges; broadcasts are not counted)."""
+    return (
+        plan.count("Exchange hashpartitioning")
+        + plan.count("Exchange rangepartitioning")
+        + plan.count("Exchange SinglePartition")
+    )
+
+
 def test_exchange_counts_within_budget(plans):
     """Shuffle-budget regression gate: every batch query's exchange
     count is bounded by the committed snapshot (tests/plan_budget.json,
@@ -151,11 +162,7 @@ def test_exchange_counts_within_budget(plans):
     for name, plan in plans.items():
         if name not in budget:
             continue  # new query: add a budget when baselining next
-        n = (
-            plan.count("Exchange hashpartitioning")
-            + plan.count("Exchange rangepartitioning")
-            + plan.count("Exchange SinglePartition")
-        )
+        n = _exchange_count(plan)
         if n > budget[name]:
             over.append((name, n, budget[name]))
     assert not over, over
@@ -288,11 +295,7 @@ def test_streaming_exchange_counts_within_budget(stream_plans):
     assert not missing, missing
     over = []
     for name, plan in stream_plans.items():
-        n = (
-            plan.count("Exchange hashpartitioning")
-            + plan.count("Exchange rangepartitioning")
-            + plan.count("Exchange SinglePartition")
-        )
+        n = _exchange_count(plan)
         if n > budget[name]:
             over.append((name, n, budget[name]))
     assert not over, over
