@@ -242,10 +242,16 @@ def _top_k_per_query(scored: DataFrame, q_rows: list, score: str) -> DataFrame:
     per driver-held query, in ``q_rows`` order — into each query's top
     K_NEIGHBORS by ``score`` desc, neighbor_id asc, the query itself
     excluded.  Only the NARROW (query_id, neighbor_id, score) rows
-    reach the ranking exchange (guide §2.3)."""
+    reach the ranking exchange (guide §2.3).
+
+    The ``_outer`` form is deliberate: for a plain ``posexplode``
+    Spark infers ``size(scores) > 0 AND isnotnull(scores)`` and pushes
+    it below the Generate, so the Arrow scorer ran once for that
+    filter and again for the value.  ``scores`` always holds
+    ``len(q_rows) ≥ 1`` values, so the rows are the same."""
     qid_arr = F.array(*[F.lit(i).cast("long") for i, _ in q_rows])
     pairs = (
-        scored.select("neighbor_id", F.posexplode("scores").alias("pos", score))
+        scored.select("neighbor_id", F.posexplode_outer("scores").alias("pos", score))
         .withColumn("query_id", F.element_at(qid_arr, F.col("pos") + 1))
         .where(F.col("query_id") != F.col("neighbor_id"))
         .drop("pos")
@@ -946,6 +952,25 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", qv.alias("qv"))
 
 
+def _seed_vectors(v: DataFrame, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """The seed vectors ``vec_id ∈ [_CENTROID_BASE, _CENTROID_BASE + n)``
+    of the quantized corpus ``v``, read to the driver as ascending ids
+    ``k = vec_id − _CENTROID_BASE`` and the matching (len(ids), {DIM})
+    int64 matrix.  At most n rows — bounded driver state, the
+    documented no-collect exception class (see kmeans_assign).  A seed
+    absent from the corpus is simply missing; a corpus without any
+    yields two empty arrays."""
+    rows = sorted(
+        (int(r["vec_id"]) - _CENTROID_BASE, r["qv"])
+        for r in v.where(
+            (F.col("vec_id") >= _CENTROID_BASE)
+            & (F.col("vec_id") < _CENTROID_BASE + n)
+        ).collect()
+    )
+    ids = np.array([k for k, _ in rows], dtype=np.int64)
+    return ids, np.array([qv for _, qv in rows], dtype=np.int64).reshape(len(ids), DIM)
+
+
 def _cluster_scorer(cent_ids, cent_mat):
     """Arrow-batched argmax-cosine scorer against the driver-held
     centroid matrix (round 15 — replaces the broadcast-join of
@@ -987,17 +1012,14 @@ def _member_sum_partials(cent_ids, cent_mat):
     raw int64 quantized vectors into a local k×{DIM} accumulator, and
     yield ONE small (k, sums) batch per task.
 
-    This replaces the retired per-iteration
-    ``groupBy("k").agg(64 × F.sum(element_at(qv, i)))`` — which
-    evaluated 64 interpreted array lookups per data row and shuffled a
-    64-column aggregate — with one vectorized pass; the downstream
-    aggregation then runs over (tasks × k) partial rows instead of n
-    data rows.  Exactness: integer sums are order-free, the clusters
-    that appear are exactly the non-empty ones (a task emits only ks
-    it saw), and the per-row assignment reuses the same scorer the
-    query plan uses — so the collected centroid matrix is
-    value-identical to the retired spelling, and the final assignment
-    (the declared query result) is bit-identical."""
+    One vectorized pass replaces 64 interpreted array lookups per
+    data row; :func:`_merged_member_sums` then merges (tasks × k)
+    partial rows instead of n data rows.  Exactness: integer sums are
+    order-free, the clusters that appear are exactly the non-empty
+    ones (a task emits only ks it saw), and the per-row assignment
+    reuses the same scorer the query plan uses — so the merged
+    centroid matrix equals the oracle's member sums, and the final
+    assignment (the declared query result) is bit-identical."""
     import pyarrow as pa
 
     score = _cluster_scorer(cent_ids, cent_mat)
@@ -1036,6 +1058,34 @@ def _member_sum_partials(cent_ids, cent_mat):
     return part
 
 
+def _merged_member_sums(partials: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Merge the per-task ``(k, sums)`` rows of
+    :func:`_member_sum_partials` into the next centroid matrix: one
+    keyed JVM aggregate, ``sum(s)`` grouped by ``(k, i)`` over the
+    posexploded sums, read to the driver through Arrow as
+    (present k)×{DIM} rows — never more, whatever the task count.
+    Returns the ascending present ids and their (len(ids), {DIM})
+    int64 member-sum matrix."""
+    t = (
+        partials.select("k", F.posexplode("sums").alias("i", "s"))
+        .groupBy("k", "i")
+        .agg(F.sum("s").alias("s"))
+        .toArrow()
+    )
+    k, i, sums = (t.column(c).to_numpy() for c in ("k", "i", "s"))
+    ids, row = np.unique(k, return_inverse=True)
+    # (k, i) is the group key, so rows are distinct; with this count
+    # and every i in range each matrix cell is written exactly once
+    if len(k) != len(ids) * DIM or ((i < 0) | (i >= DIM)).any():
+        raise ValueError(
+            f"centroid merge returned {len(k)} (k, i) rows for "
+            f"{len(ids)} clusters × {DIM} dims"
+        )
+    cents = np.zeros((len(ids), DIM), dtype=np.int64)
+    cents[row, i] = sums
+    return ids, cents
+
+
 def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cluster) after 3 Lloyd iterations of cosine k-means.
 
@@ -1048,24 +1098,34 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the current centroids (argmax cosine, lowest-k tie break)
     in ONE Arrow-batched narrow map (:func:`_cluster_scorer`), then
     rebuild centroids as exact integer member-sums (cosine only cares
-    about direction, so the un-normalized sum IS the mean centroid) —
-    one keyed aggregation of per-task partials per iteration, the only
-    shuffle.  The final assignment's UDF is built once, after the
-    loop.
+    about direction, so the un-normalized sum IS the mean centroid).
+    The final assignment's UDF is built once, after the loop.
+
+    Driver reads at plan-build: one seed collect
+    (:func:`_seed_vectors`, ≤ k rows), then ONE Arrow collect per
+    rebuild iteration (``KMEANS_ITERS − 1`` of them; a shuffle-map
+    job plus a result job under AQE).  In it the
+    :func:`_member_sum_partials` Arrow map emits one (k, sums) row per
+    cluster a task saw, ``posexplode`` turns those into narrow
+    (k, i, s) rows, a partial hash aggregate on (k, i) feeds the one
+    hash exchange, and the final ``sum(s)`` reaches the driver
+    (:func:`_merged_member_sums`).
 
     Driver state — the documented exception to the no-collect rule:
     centroids live on the driver between iterations as a k×64 int64
     matrix (k ≤ 1024, so ≤ 65,536 values — bounded by the
     :func:`kmeans_k` clamp, independent of corpus size).  This is the
     canonical distributed-Lloyd shape — Spark MLlib's own KMeans
-    collects cluster centers to the driver every iteration — and it
-    replaces shipping n×k joined rows through the scoring operator:
-    the r14-era broadcast-join spelling evaluated an interpreted
-    64-term fold per (vector, centroid) pair, n²/512 pairs per pass
-    at the adaptive k, measured ~245 s/pass at 80k vectors
-    (docs/stress100_r14/15).  The two collects per run move ≤ 2·k·64
-    integers; the scoring scan is O(n) rows with all 64·k
-    multiply-adds vectorized in one Arrow batch."""
+    merges per-task partial sums with one keyed aggregation and
+    collects the cluster centers every iteration.  The merge stays
+    keyed in the JVM rather than on the driver: each rebuild reads
+    exactly (present k)×64 values whatever the task count, whereas
+    collecting the raw partials would grow as tasks×k×64 with the
+    corpus.  The scoring scan is O(n) rows with all 64·k
+    multiply-adds vectorized in one Arrow batch; the r14-era
+    broadcast-join spelling instead evaluated an interpreted 64-term
+    fold per (vector, centroid) pair, measured ~245 s/pass at 80k
+    vectors (docs/stress100_r14/15)."""
     v = _quantized(spark, sf_dir).localCheckpoint(eager=False)
     # adaptive k (round 14): k = ceil(n/512) clamped [4, 1024] — the
     # SemDeDup composition's within-cluster pair scan is quadratic in
@@ -1073,39 +1133,18 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (k frozen at 4 capped >300 s at 80k vectors, docs/stress100_r14.md).
     # Driver fixtures (≤2000 vectors) keep the historical k = 4; the
     # oracle computes the identical k in SQL (_DUCK_KMEANS_PARAMS).
-    kk = kmeans_k(corpus_count(spark, sf_dir))
-    seed_rows = v.where(
-        (F.col("vec_id") >= _CENTROID_BASE)
-        & (F.col("vec_id") < _CENTROID_BASE + kk)
-    ).collect()  # ≤ k ≤ 1024 rows (see docstring: bounded driver state)
-    if not seed_rows:
+    ids, cents = _seed_vectors(v, kmeans_k(corpus_count(spark, sf_dir)))
+    if not len(ids):
         # no vec_id in the seed range (a corpus of ≤ 10 vectors): no
         # centroid, so no vector is assigned — the oracle's empty
         # cross join against its empty seed set
         return v.select("vec_id", F.lit(None).cast("long").alias("cluster")).where(F.lit(False))
-    cents = sorted((int(r["vec_id"]) - _CENTROID_BASE, r["qv"]) for r in seed_rows)
     for _ in range(KMEANS_ITERS - 1):
-        # round 16 (guide §4.2): member-sums via one Arrow pass
-        # emitting per-task k×64 partials — the retired
-        # groupBy(64 × sum(element_at)) evaluated 64 interpreted
-        # array lookups per row and shuffled a 64-column agg over
-        # n rows; the keyed agg now runs over (tasks × k) partial
-        # rows.  Value-identical (integer sums are order-free;
-        # see _member_sum_partials).
         partials = v.select("qv").mapInArrow(
-            _member_sum_partials([k for k, _ in cents], [c for _, c in cents]),
-            "k long, sums array<bigint>",
+            _member_sum_partials(ids, cents), "k long, sums array<bigint>"
         )
-        sum_rows = partials.groupBy("k").agg(
-            *[F.sum(F.element_at("sums", i + 1)).alias(f"c{i}") for i in range(DIM)]
-        ).collect()  # ≤ k ≤ 1024 rows of integer member-sums
-        cents = sorted(
-            (int(r["k"]), [int(r[f"c{i}"]) for i in range(DIM)])
-            for r in sum_rows
-        )
-    best_k = F.pandas_udf("long")(
-        _cluster_scorer([k for k, _ in cents], [c for _, c in cents])
-    )
+        ids, cents = _merged_member_sums(partials)
+    best_k = F.pandas_udf("long")(_cluster_scorer(ids, cents))
     return v.select("vec_id", best_k("qv").alias("cluster"))
 
 
@@ -1235,24 +1274,14 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # absent from the corpus drops its k column in every subspace,
     # exactly as it dropped out of the retired broadcast join and
     # drops out of the oracle's books CTE.
-    seed_rows = sorted(
-        (int(r["vec_id"]), list(r["qv"]))
-        for r in v.where(
-            (F.col("vec_id") >= _CENTROID_BASE)
-            & (F.col("vec_id") < _CENTROID_BASE + PQ_K)
-        ).collect()
-    )
-    if not seed_rows:
+    ks, seeds = _seed_vectors(v, PQ_K)
+    if not len(ks):
         return v.select(
             "vec_id",
             F.lit("").alias("code"),
             F.lit(0).cast("long").alias("sq_err"),
         ).where(F.lit(False))
-    ks = [vid - _CENTROID_BASE for vid, _ in seed_rows]
-    books = [
-        [qv[m * PQ_SUB : (m + 1) * PQ_SUB] for _, qv in seed_rows]
-        for m in range(PQ_M)
-    ]
+    books = [seeds[:, m * PQ_SUB : (m + 1) * PQ_SUB] for m in range(PQ_M)]
     assign = F.pandas_udf("code string, sq_err long")(_pq_scorer(ks, books))
     return v.select("vec_id", assign("qv").alias("a")).select(
         "vec_id", F.col("a.code").alias("code"), F.col("a.sq_err").alias("sq_err")

@@ -117,16 +117,18 @@ _REVERIFY_FIRST: dict[str, int] = {
     "stream_stream_join": 16,
     # one Arrow-scorer pattern: every similarity query now runs the
     # shared fold kernel, batch reader, query scaffold or cosine Column
-    "embedding_pq": 16,
-    "knn_bruteforce": 16,
     "embedding_neardup": 16,
     "embedding_neardup_lsh": 16,
     "knn_lsh": 16,
-    "knn_recall_eval": 16,
-    "knn_scalar_quant": 16,
     "knn_ivf": 16,
+    # one keyed (k, i) centroid merge per Lloyd iteration and one seed
+    # reader (kmeans, PQ); the top-k posexplode runs each kNN scorer once
     "kmeans_assign": 16,
     "dedup_semantic": 16,
+    "embedding_pq": 16,
+    "knn_bruteforce": 16,
+    "knn_scalar_quant": 16,
+    "knn_recall_eval": 16,
     # one near-dup candidate → verify pipeline: these run the shared
     # array-intersect Jaccard verify (dedup_prefix_filter is flagged above)
     "dedup_minhash_lsh": 16,

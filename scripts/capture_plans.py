@@ -2,14 +2,14 @@
 """Capture `explain("formatted")` for named queries into plan files.
 
 Usage:
-  python scripts/capture_plans.py --out plans/r17 --suffix before \
+  python scripts/capture_plans.py --out plans/r18 --suffix before \
       --sf SF_DIR q1 q2 ...
 
 Writes <out>/<query>_<suffix>.txt for each name — committed evidence
 files that show a plan change without running Spark.  Each file holds
 the plan of every DataFrame the query collects while it is built
-(driver-held queries, seeds, centroid sums), then the compiled plan of
-the query itself.
+(driver-held queries and seeds through ``collect``, centroid sums
+through ``toArrow``), then the compiled plan of the query itself.
 
 Expression ids (``#123``), exchange plan ids (``plan_id=7``), RDD ids
 (``RDD[23]``), lambda-variable counters (``lambda x_8``) and the
@@ -49,7 +49,7 @@ def _normalized(plan: str, sf: str) -> str:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
-    ap.add_argument("--out", default="plans/r17")
+    ap.add_argument("--out", default="plans/r18")
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     a = ap.parse_args()
@@ -61,19 +61,25 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(a.out, exist_ok=True)
     frame = type(spark.range(1))  # the session's concrete DataFrame class
-    collect = frame.collect
-    for name in a.names:
-        built: list[str] = []
+    actions = {m: getattr(frame, m) for m in ("collect", "toArrow")}
+    built: list[str] = []
 
-        def recording_collect(df: DataFrame):
+    def recording(action):
+        def run(df: DataFrame):
             built.append(_formatted(df))
-            return collect(df)
+            return action(df)
 
-        frame.collect = recording_collect
+        return run
+
+    for name in a.names:
+        built.clear()
+        for m, action in actions.items():
+            setattr(frame, m, recording(action))
         try:
             df = specs[name].fn(spark, a.sf)
         finally:
-            frame.collect = collect
+            for m, action in actions.items():
+                setattr(frame, m, action)
         parts = [
             f"== build-time collect {i + 1} ==\n{p}" for i, p in enumerate(built)
         ]

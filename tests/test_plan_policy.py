@@ -111,6 +111,29 @@ def test_no_row_at_a_time_python_eval(plans):
     assert not offenders, offenders
 
 
+#: each kNN query's Arrow scorers, by UDF name in the plan text
+_KNN_SCORERS = {
+    "knn_bruteforce": ("cosines",),
+    "knn_recall_eval": ("cosines",),
+    "knn_scalar_quant": ("umax", "dots"),
+}
+
+
+def test_knn_scorers_run_once_per_row(plans):
+    """Each kNN scorer sits in exactly one ArrowEvalPython node.  A
+    filter Spark infers below the top-k posexplode would evaluate the
+    scorer a second time for every corpus row."""
+    counts = {
+        (name, udf): sum(
+            "ArrowEvalPython" in line and f"{udf}(" in line
+            for line in plans[name].splitlines()
+        )
+        for name, udfs in _KNN_SCORERS.items()
+        for udf in udfs
+    }
+    assert counts == dict.fromkeys(counts, 1), counts
+
+
 def test_no_cartesian_product(plans):
     """A non-broadcast cartesian product is never acceptable — the
     deliberate bounded cross joins in the suite are all

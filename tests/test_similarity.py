@@ -630,6 +630,56 @@ def test_member_sum_partials_rejects_unknown_cluster_id(monkeypatch, bad_k):
         list(part(iter([batch])))
 
 
+@pytest.mark.parametrize("parts", [1, 4])
+def test_centroid_merge_matches_retired_groupby(spark, sf_oracle_dir, monkeypatch, parts):
+    """Every Lloyd rebuild's keyed (k, i) merge equals the retired
+    ``groupBy("k").agg(64 × sum(element_at(sums, i)))`` over the same
+    per-task partials, and reads exactly (present k)×64 Arrow rows to
+    the driver.  With 4 partitions the partials overlap in k, so the
+    merge really adds across tasks; the query stays oracle-exact."""
+    import pyspark.sql.functions as F
+
+    quantized, merge = similarity._quantized, similarity._merged_member_sums
+    monkeypatch.setattr(
+        similarity, "_quantized", lambda s, sf: quantized(s, sf).repartition(parts)
+    )
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    to_arrow, tables = frame.toArrow, []
+    monkeypatch.setattr(frame, "toArrow", lambda df: tables.append(to_arrow(df)) or tables[-1])
+
+    def checked(partials):
+        ids, cents = merge(partials)
+        retired = {
+            int(r["k"]): [int(r[f"c{i}"]) for i in range(similarity.DIM)]
+            for r in partials.groupBy("k").agg(*[
+                F.sum(F.element_at("sums", i + 1)).alias(f"c{i}")
+                for i in range(similarity.DIM)
+            ]).collect()
+        }
+        assert ids.tolist() == sorted(retired)
+        assert cents.tolist() == [retired[k] for k in ids.tolist()]
+        assert tables[-1].num_rows == len(ids) * similarity.DIM
+        n_partials = partials.count()
+        assert n_partials > len(ids) if parts > 1 else n_partials == len(ids)
+        return ids, cents
+
+    monkeypatch.setattr(similarity, "_merged_member_sums", checked)
+    spec = next(s for s in similarity.SPECS if s.name == "kmeans_assign")
+    compare(similarity.kmeans_assign(spark, sf_oracle_dir), spec.oracle, sf_oracle_dir)
+    assert len(tables) == similarity.KMEANS_ITERS - 1
+
+
+def test_centroid_merge_rejects_short_sums(spark):
+    """Partials whose sums miss a dimension leave matrix cells the
+    merge never wrote: it raises instead of returning zeros there."""
+    partials = spark.createDataFrame(
+        [(1, [1] * similarity.DIM), (2, [2] * (similarity.DIM - 1))],
+        "k long, sums array<bigint>",
+    )
+    with pytest.raises(ValueError, match="centroid merge returned"):
+        similarity._merged_member_sums(partials)
+
+
 def test_cos_scorer_matches_sequential_fold():
     """The round-16 knn_bruteforce Arrow scorer must equal the retired
     interpreted spelling bit-for-bit: sequential per-dim dot and
