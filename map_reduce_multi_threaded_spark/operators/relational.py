@@ -36,7 +36,7 @@ from ..functions.text import ascii_lower, duck_ascii_lower, duck_md5_long
 #: oracle-side casefold fragment from the ONE canonical helper (ADVICE r11)
 _DUCK_LC_TEXT = duck_ascii_lower("text")
 from ..registry import QuerySpec
-from ..sources.tables import load_table
+from ..sources.tables import load_table, staged
 
 # --------------------------------------------------------------------------
 # deterministic aggregate helpers (Spark side)
@@ -2766,15 +2766,11 @@ def source_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: format edges parallelize like parquet; the checksum is a
     decimal sum so executor/partition order cannot move a bit."""
-    import os
-
     from ..sources.formats import read_csv, read_json, read_orc, read_xml
-    from ..sources.tables import stage_scratch_dir
 
     c = load_table(spark, sf_dir, "customer")
-    base = stage_scratch_dir(sf_dir, "formats_v2", "customer")
-    marker = os.path.join(base, "_WRITTEN")
-    if not os.path.exists(marker):
+
+    def write(base: str) -> None:
         c.write.mode("overwrite").option("header", "true").csv(f"{base}/csv")
         c.write.mode("overwrite").json(f"{base}/json")
         c.write.mode("overwrite").orc(f"{base}/orc")
@@ -2783,8 +2779,8 @@ def source_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("rootTag", "rows").option("rowTag", "row")
             .format("xml").save(f"{base}/xml")
         )
-        with open(marker, "w") as f:
-            f.write("ok")
+
+    base = staged(sf_dir, "formats_v2", ("customer",), write)
     schema = c.schema
     frames = {
         "csv": read_csv(spark, f"{base}/csv", schema=schema),
@@ -2821,28 +2817,20 @@ def _stage_parted_events(spark: SparkSession, sf_dir: str) -> tuple[str, "Struct
     by the static-pruning and dynamic-pruning queries.  Returns the
     staged path AND the explicit read schema (a 0-row write emits no
     data files, so the reader cannot infer it — round-11 audit)."""
-    import os
-
-    from ..sources.tables import stage_scratch_dir
-
     ev = load_table(spark, sf_dir, "events")
-    staged = ev.withColumn("tu", F.expr("unix_micros(ts)")).drop("ts")
-    base = stage_scratch_dir(sf_dir, "parted", "events")
-    marker = os.path.join(base, "_WRITTEN")
-    if not os.path.exists(marker):
-        (
-            staged.write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(f"{base}/events")
-        )
-        with open(marker, "w") as f:
-            f.write("ok")
+    flat = ev.withColumn("tu", F.expr("unix_micros(ts)")).drop("ts")
+    base = staged(
+        sf_dir,
+        "parted",
+        ("events",),
+        lambda d: flat.write.mode("overwrite").partitionBy("event_type").parquet(f"{d}/events"),
+    )
     # the reader gets the EXPLICIT schema: a 0-row events table writes
     # no data files at all (only _SUCCESS), and schema inference on an
     # empty partitioned dir throws UNABLE_TO_INFER_SCHEMA (round-11
     # empty-table audit).  A production pipeline re-reading its own
     # output carries the schema for the same reason.
-    return f"{base}/events", staged.schema
+    return f"{base}/events", flat.schema
 
 
 def _read_parted_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2964,48 +2952,46 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     free, which is the difference between re-shuffling both fact
     tables per query and none.
 
-    Staging follows :func:`source_partition_prune`'s cached-scratch
-    contract (content-fingerprinted dir, marker file); because bucket
-    metadata lives in the session catalog — not the files — a session
-    that finds the files already staged re-registers them with CREATE
-    TABLE ... CLUSTERED BY ... LOCATION, which is metadata-only.
+    The files are staged once per fingerprint (``sources.tables.staged``);
+    the tables are registered once per session.  Bucket metadata lives
+    in the session catalog, not the files, so a session that finds the
+    files already staged registers them with CREATE TABLE ... CLUSTERED
+    BY ... LOCATION, which is metadata-only.
 
     Both merge hints pin the SMJ so the demo can't silently degrade to
     a broadcast join at toy scale."""
-    import os
+    keys = {"orders": "o_orderkey", "lineitem": "l_orderkey"}
 
-    from ..sources.tables import stage_scratch_dir
-
-    base = stage_scratch_dir(sf_dir, "bucketed", "orders", "lineitem")
-    handles = {}
-    for tbl, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+    def table_name(base: str, tbl: str) -> str:
         # table identifiers may not contain '.'; the staged dir is
         # already fingerprint-unique, so key the name on its basename
-        name = f"bkt_{tbl}_{os.path.basename(base).split('-')[-1]}"
-        path = os.path.join(base, tbl)
-        marker = os.path.join(base, f"_WRITTEN_{tbl}")
+        return f"bkt_{tbl}_{os.path.basename(base).split('-')[-1]}"
+
+    def write(base: str) -> None:
+        for tbl, key in keys.items():
+            (
+                load_table(spark, sf_dir, tbl)
+                .write.bucketBy(BUCKET_JOIN_N, key)
+                .sortBy(key)
+                .option("path", os.path.join(base, tbl))
+                .mode("overwrite")
+                .saveAsTable(table_name(base, tbl))
+            )
+
+    base = staged(sf_dir, "bucketed", tuple(keys), write)
+    handles = {}
+    for tbl, key in keys.items():
+        name = table_name(base, tbl)
         if not spark.catalog.tableExists(name):
-            df = load_table(spark, sf_dir, tbl)
-            if os.path.exists(marker):
-                cols = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}"
-                    for f in df.schema.fields
-                )
-                spark.sql(
-                    f"CREATE TABLE {name} ({cols}) USING PARQUET "
-                    f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-                    f"INTO {BUCKET_JOIN_N} BUCKETS LOCATION '{path}'"
-                )
-            else:
-                (
-                    df.write.bucketBy(BUCKET_JOIN_N, key)
-                    .sortBy(key)
-                    .option("path", path)
-                    .mode("overwrite")
-                    .saveAsTable(name)
-                )
-                with open(marker, "w") as f:
-                    f.write("ok")
+            cols = ", ".join(
+                f"{f.name} {f.dataType.simpleString()}"
+                for f in load_table(spark, sf_dir, tbl).schema.fields
+            )
+            spark.sql(
+                f"CREATE TABLE {name} ({cols}) USING PARQUET "
+                f"CLUSTERED BY ({key}) SORTED BY ({key}) "
+                f"INTO {BUCKET_JOIN_N} BUCKETS LOCATION '{os.path.join(base, tbl)}'"
+            )
         handles[tbl] = spark.table(name)
     o, li = handles["orders"], handles["lineitem"]
     rev = money("l_extendedprice") * ratio_complement("l_discount")
@@ -3044,15 +3030,10 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: schema merge is a FOOTER-metadata operation (one file
     footer per batch schema, not a data pass); the read itself stays a
     plain pruned parquet scan.  Staging follows the cached-scratch
-    contract."""
-    import os
-
-    from ..sources.tables import stage_scratch_dir
-
+    contract of ``sources.tables.staged``."""
     o = load_table(spark, sf_dir, "orders")
-    base = stage_scratch_dir(sf_dir, "evolved", "orders")
-    marker = os.path.join(base, "_WRITTEN")
-    if not os.path.exists(marker):
+
+    def write(base: str) -> None:
         (
             o.where(F.col("o_orderkey") % 2 == 0)
             .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
@@ -3071,8 +3052,8 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(f"{base}/orders/gen=1")
         )
-        with open(marker, "w") as f:
-            f.write("ok")
+
+    base = staged(sf_dir, "evolved", ("orders",), write)
     merged = spark.read.option("mergeSchema", "true").parquet(f"{base}/orders")
     return merged.groupBy("gen").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -3136,7 +3117,8 @@ def sort_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_id·256)/(max+1) — exact integer math, portable by
     construction.  The user-band predicate is applied EXACTLY the
     same multiplied-out way on both engines (user_id·4 vs max+1 —
-    no division).  Staging follows the cached-scratch contract.
+    no division).  Staging follows the cached-scratch contract of
+    ``sources.tables.staged``.
 
     The cluster boundaries are the EXPLICIT top-4-bit Z-ranges
     (``zval div 4096``, written ``partitionBy`` so every file holds
@@ -3147,10 +3129,6 @@ def sort_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     for once at write should be REPRODUCIBLE anyway.  Fixed top-4-bit
     ranges pin two day bits and two user bits per file: per-file
     spread ≤ ~1/4 of the global range in BOTH dims, deterministically."""
-    import os
-
-    from ..sources.tables import stage_scratch_dir
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -3158,8 +3136,6 @@ def sort_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast(DECM).alias("v"),
         F.expr("unix_micros(ts) div 86400000000").alias("day"),
     )
-    base = stage_scratch_dir(sf_dir, "zorder2", "events")
-    marker = os.path.join(base, "_WRITTEN")
     u = ev.agg((F.max("user_id") + 1).alias("u_n"))
     zed = (
         ev.crossJoin(F.broadcast(u))
@@ -3177,16 +3153,16 @@ def sort_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("zbucket", F.expr(f"zval div {65536 // Z_FILES}"))
         .drop("rel_day", "ub", "u_n")
     )
-    if not os.path.exists(marker):
-        (
-            zed.repartition(Z_FILES, "zbucket")
-            .sortWithinPartitions("zbucket", "zval")
-            .write.mode("overwrite")
-            .partitionBy("zbucket")
-            .parquet(f"{base}/events")
-        )
-        with open(marker, "w") as f:
-            f.write("ok")
+    base = staged(
+        sf_dir,
+        "zorder2",
+        ("events",),
+        lambda d: zed.repartition(Z_FILES, "zbucket")
+        .sortWithinPartitions("zbucket", "zval")
+        .write.mode("overwrite")
+        .partitionBy("zbucket")
+        .parquet(f"{d}/events"),
+    )
     # explicit schema: a 0-row events table writes no data files, and
     # inference on the empty dir throws (round-11 empty-table audit)
     z = spark.read.schema(zed.schema).parquet(f"{base}/events")
@@ -3862,32 +3838,26 @@ def source_csv_malformed_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaks into the contract.  Double→CSV→double round-trips exactly
     (shortest-round-trip formatting), which the revenue equality
     pins.  Scale: CSV parse is a narrow map; both reads stream."""
-    import os
-
-    from ..sources.tables import stage_scratch_dir
-
     o = load_table(spark, sf_dir, "orders")
-    base = stage_scratch_dir(sf_dir, "dirtycsv", "orders")
-    marker = os.path.join(base, "_WRITTEN")
-    if not os.path.exists(marker):
-        line = F.when(
-            F.col("o_orderkey") % CSV_CORRUPT_MOD == 0,
-            F.concat_ws(
-                ",",
-                F.col("o_orderkey"),
-                F.lit("NOT_A_NUMBER"),
-                F.col("o_orderstatus"),
-            ),
-        ).otherwise(
-            F.concat_ws(
-                ",", "o_orderkey", "o_totalprice", "o_orderstatus"
-            )
+    line = F.when(
+        F.col("o_orderkey") % CSV_CORRUPT_MOD == 0,
+        F.concat_ws(
+            ",",
+            F.col("o_orderkey"),
+            F.lit("NOT_A_NUMBER"),
+            F.col("o_orderstatus"),
+        ),
+    ).otherwise(
+        F.concat_ws(
+            ",", "o_orderkey", "o_totalprice", "o_orderstatus"
         )
-        o.select(line.alias("value")).write.mode("overwrite").text(
-            f"{base}/orders_csv"
-        )
-        with open(marker, "w") as f:
-            f.write("ok")
+    )
+    base = staged(
+        sf_dir,
+        "dirtycsv",
+        ("orders",),
+        lambda d: o.select(line.alias("value")).write.mode("overwrite").text(f"{d}/orders_csv"),
+    )
     schema = (
         "o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING, "
         "_corrupt_record STRING"
@@ -3957,16 +3927,11 @@ def table_compaction_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     the UPSTREAM read to 4 tasks.  File-count assertions live in the
     pytest (layout is not visible to SQL); this registered query gates
     the value-preservation half of the contract."""
-    import os
-
-    from ..sources.tables import stage_scratch_dir
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", F.col("value").cast(DECM).alias("v")
     )
-    base = stage_scratch_dir(sf_dir, "compacted", "events")
-    marker = os.path.join(base, "_WRITTEN")
-    if not os.path.exists(marker):
+
+    def write(base: str) -> None:
         (
             ev.repartition(COMPACT_SMALL_FILES, "event_id")
             .write.mode("overwrite")
@@ -3978,8 +3943,8 @@ def table_compaction_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(f"{base}/compacted")
         )
-        with open(marker, "w") as f:
-            f.write("ok")
+
+    base = staged(sf_dir, "compacted", ("events",), write)
     return (
         spark.read.parquet(f"{base}/compacted")
         .groupBy("event_type")

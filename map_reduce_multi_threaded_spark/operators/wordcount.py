@@ -48,27 +48,6 @@ from ..sources.tables import load_table
 from ..sources.text import tokens_from_text
 
 
-def words(spark: SparkSession, sf_dir: str, passes: int = 1) -> DataFrame:
-    """Normalized token stream from ``documents.text`` — reference
-    stages S4-S8 (tokenize → strip punct → drop empty → lowercase).
-
-    ``passes`` replays the corpus N times, the reference's
-    ``LOOP_OVER_DIRECTORY = 8`` benchmarking multiplier
-    (``map_reduce.cpp:36,130``) — its observable semantics were "every
-    count is 8× the true frequency".  Implemented as a crossJoin with a
-    broadcast N-row range: no data duplication on disk, no extra scan.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    toks = (
-        docs.select(F.explode(tokens_from_text(F.col("text"))).alias("tok"))
-        .select(normalize_token(F.col("tok")).alias("word"))
-        .where(F.length("word") > 0)
-    )
-    if passes > 1:
-        toks = toks.crossJoin(F.broadcast(spark.range(passes))).drop("id")
-    return toks
-
-
 def _normalized_counts(raw_tokens: DataFrame, tok_col: str = "tok") -> DataFrame:
     """count raw tokens FIRST, then normalize the distinct-token table
     and re-aggregate — the algebraic rewrite ``count ∘ normalize =
@@ -96,13 +75,25 @@ def _normalized_counts(raw_tokens: DataFrame, tok_col: str = "tok") -> DataFrame
     )
 
 
-def word_counts(spark: SparkSession, sf_dir: str, passes: int = 1) -> DataFrame:
-    """scan → tokenize → count raw → normalize distinct → final agg."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(tokens_from_text(F.col("text"))).alias("tok"))
+def _counts_of(lines: DataFrame, text_col: str, passes: int) -> DataFrame:
+    """tokenize ``text_col`` (S4) → replay → count raw → normalize
+    distinct (S5-S8) → final agg.
+
+    ``passes`` replays the corpus N times, the reference's
+    ``LOOP_OVER_DIRECTORY = 8`` benchmarking multiplier
+    (``map_reduce.cpp:36,130``) — its observable semantics were "every
+    count is 8× the true frequency".  Implemented as a crossJoin with a
+    broadcast N-row range: no data duplication on disk, no extra scan.
+    """
+    toks = lines.select(F.explode(tokens_from_text(F.col(text_col))).alias("tok"))
     if passes > 1:
-        toks = toks.crossJoin(F.broadcast(spark.range(passes))).drop("id")
+        toks = toks.crossJoin(F.broadcast(lines.sparkSession.range(passes))).drop("id")
     return _normalized_counts(toks)
+
+
+def word_counts(spark: SparkSession, sf_dir: str, passes: int = 1) -> DataFrame:
+    """Word counts over ``documents.text``."""
+    return _counts_of(load_table(spark, sf_dir, "documents"), "text", passes)
 
 
 def word_counts_sorted(spark: SparkSession, sf_dir: str, passes: int = 1) -> DataFrame:
@@ -123,12 +114,7 @@ def word_counts_from_text_dir(
     and sort within partitions anyway (the CLI path)."""
     from ..sources.text import read_text_dir
 
-    toks = read_text_dir(spark, path).select(
-        F.explode(tokens_from_text(F.col("value"))).alias("tok")
-    )
-    if passes > 1:
-        toks = toks.crossJoin(F.broadcast(spark.range(passes))).drop("id")
-    counts = _normalized_counts(toks)
+    counts = _counts_of(read_text_dir(spark, path), "value", passes)
     return counts.orderBy("word") if sort else counts
 
 

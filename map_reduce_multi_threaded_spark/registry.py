@@ -138,6 +138,27 @@ _REVERIFY_FIRST: dict[str, int] = {
     "dedup_cluster_keep": 16,
     "graph_triangle_count": 16,
     "dedup_banding_sweep": 16,
+    # one staging contract (tables.staged): these re-read a staged copy
+    # written through it.  source_partition_prune waits a round: the
+    # sweep window holds 50 live flags, and join_dpp_partition_pruned
+    # reads the same staged copy.
+    "source_formats_roundtrip": 16,
+    "join_dpp_partition_pruned": 16,
+    "join_bucketed_colocated": 16,
+    "source_schema_evolution": 16,
+    "sort_zorder_layout": 16,
+    "source_csv_malformed_modes": 16,
+    "table_compaction_small_files": 16,
+    "stream_custom_sessions": 16,
+    "stream_tumbling_multibatch": 16,
+    "stream_update_counts": 16,
+    "stream_windowed_rollup": 16,
+    "stream_window_winner": 16,
+    "stream_join_left_outer": 16,
+    "stream_join_full_outer": 16,
+    "stream_cdc_upsert": 16,
+    "stream_late_data_policy": 16,
+    "stream_wordcount": 16,
 }
 
 

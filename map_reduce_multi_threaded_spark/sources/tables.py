@@ -19,7 +19,7 @@ import contextlib
 import logging
 import os
 import stat
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -294,6 +294,42 @@ def stage_scratch_dir(sf_dir: str, kind: str, *source_tables: str) -> str:
     except OSError:
         pass
     return f"{ns}/{kind}-{fp}"
+
+
+#: written into a staged directory after its writer returns
+_MARKER = "_WRITTEN"
+
+
+def staged(
+    sf_dir: str, kind: str, sources: tuple[str, ...], write: Callable[[str], None]
+) -> str:
+    """The cached-scratch contract: a derived copy of the ``sources``
+    tables of ``sf_dir``, written once and re-read by every later call.
+
+    - The directory is :func:`stage_scratch_dir`'s, keyed by a content
+      fingerprint of the source files, so a regenerated fixture
+      re-stages (and prunes its own stale ``kind`` sibling).
+    - ``write(dir)`` runs only when ``dir`` holds no marker, always on
+      a fresh empty directory (a partial copy is deleted first).
+    - The marker is written only after ``write`` returns, so a writer
+      that raises leaves nothing a later call would trust.
+    - Files the writer names with a leading ``_`` (side values such
+      as a replay cutoff) are skipped by Spark's file sources.
+    - A writer whose output changes must bump its ``kind`` (e.g.
+      ``formats_v2``, ``zorder2``): the fingerprint covers the sources,
+      not the writer, so the old copy would otherwise be trusted.
+
+    Returns the directory."""
+    import shutil
+
+    d = stage_scratch_dir(sf_dir, kind, *sources)
+    marker = os.path.join(d, _MARKER)
+    if not os.path.exists(marker):
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+        write(d)
+        open(marker, "w").close()
+    return d
 
 
 @contextlib.contextmanager

@@ -5,8 +5,6 @@ not just the window expressions."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.text import duck_ascii_lower
@@ -402,31 +400,25 @@ def stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: complete-mode state is vocabulary-sized (each key one
     count), the same footprint as the batch aggregate's hash table;
     no watermark because word counts have no event time."""
-    import os
-
     import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
     from ..functions.text import normalize_token
-    from ..sources.tables import stage_scratch_dir
+    from ..sources.tables import staged
     from ..sources.text import tokens_from_text
 
-    staged = stage_scratch_dir(sf_dir, "docs_stream", "documents")
-    marker = os.path.join(staged, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(staged, exist_ok=True)
-        t = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-        half = t.num_rows // 2
-        for i, chunk in enumerate([t.slice(0, half), t.slice(half)]):
-            p = os.path.join(staged, f"d{i}.parquet")
-            pq.write_table(chunk, p)
-            os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
-        with open(marker, "w") as f:
-            f.write("ok")
+    docs_dir = staged(
+        sf_dir,
+        "docs_stream2",
+        ("documents",),
+        lambda d: W.write_replay(
+            d, pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]), 2
+        ),
+    )
     docs = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
+        .parquet(docs_dir)
     )
     counts = (
         docs.select(F.explode(tokens_from_text(F.col("text"))).alias("tok"))

@@ -122,24 +122,33 @@ def stage_events_multibatch(
     the filter would be SKIPPED via row-group stats and the watermark
     would never advance — sentinels must pass the stream's own filters.
 
-    The staged copy is cached per sf dir (content is a deterministic
-    function of events.parquet)."""
+    The staged copy is cached per sf dir (``sources.tables.staged``;
+    content is a deterministic function of events.parquet); the cutoff
+    is stored beside the files in ``_cutoff``, which the file source
+    skips."""
+    import os
+
+    from ..sources.tables import staged
+
+    out_dir = staged(
+        sf_dir,
+        f"events_multibatch{n_files}s{n_sentinels}",
+        ("events",),
+        lambda d: _write_multibatch(sf_dir, d, n_files, n_sentinels),
+    )
+    with open(os.path.join(out_dir, "_cutoff")) as f:
+        return out_dir, f.read()
+
+
+def _write_multibatch(sf_dir: str, out_dir: str, n_files: int, n_sentinels: int) -> None:
+    """Write :func:`stage_events_multibatch`'s replay files and its
+    ``_cutoff`` into ``out_dir``."""
     import os
 
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from ..sources.tables import stage_scratch_dir
-
-    out_dir = stage_scratch_dir(
-        sf_dir, f"events_multibatch{n_files}s{n_sentinels}", "events"
-    )
-    marker = os.path.join(out_dir, "_STAGED")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            return out_dir, f.read().strip()
-    os.makedirs(out_dir, exist_ok=True)
     t = pq.read_table(f"{sf_dir}/events.parquet")
     t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]))
     n = t.num_rows
@@ -163,14 +172,11 @@ def stage_events_multibatch(
         # leaving ~3 weeks of post-epoch margin instead of decades).
         max_ts = 19_600 * day_ticks
         cutoff = "1970-01-01 00:00:00"
-    chunks = [
-        t.slice(i * n // n_files, (i + 1) * n // n_files - i * n // n_files)
-        for i in range(n_files)
-    ]
+    sentinels = []
     for s in range(n_sentinels):
         base = SENTINEL_EVENT_ID + 10 * s
         sts = max_ts + (s + 1) * day_ticks
-        chunks.append(
+        sentinels.append(
             pa.table(
                 {
                     "event_id": pa.array([base, base + 1, base + 2], pa.int64()),
@@ -182,15 +188,31 @@ def stage_events_multibatch(
                 }
             ).cast(t.schema)
         )
-    for i, chunk in enumerate(chunks):
+    write_replay(out_dir, t, n_files, sentinels)
+    with open(os.path.join(out_dir, "_cutoff"), "w") as f:
+        f.write(cutoff)
+
+
+def write_replay(out_dir: str, t: "pa.Table", n_files: int, tail: list | tuple = ()) -> None:
+    """Write the pyarrow table ``t`` as ``n_files`` consecutive row
+    slices ``f000.parquet``, ``f001.parquet``, … followed by the
+    ``tail`` tables, one file each.  The file source orders batches by
+    (modification time, path), so file i's mtime is pinned to
+    ``1_700_000_000 + i``: a ``maxFilesPerTrigger=1`` stream replays
+    the files in this order."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    n = t.num_rows
+    chunks = [
+        t.slice(i * n // n_files, (i + 1) * n // n_files - i * n // n_files)
+        for i in range(n_files)
+    ]
+    for i, chunk in enumerate(chunks + list(tail)):
         path = os.path.join(out_dir, f"f{i:03d}.parquet")
         pq.write_table(chunk, path, store_schema=True)
-        # the file source orders batches by (modification time, path) —
-        # pin mtimes so replay order is the time order
         os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
-    with open(marker, "w") as f:
-        f.write(cutoff)
-    return out_dir, cutoff
 
 
 #: simulated transport delay bound for the ARRIVAL-ORDER replay:
@@ -216,23 +238,26 @@ def stage_events_arrival_order(sf_dir: str, n_files: int = 4) -> str:
     closes every window at or below the terminal watermark; windows
     above it stay open and are deliberately absent from the result —
     the oracle models both the per-batch drop rule and that terminal
-    emission frontier.  The staged copy is cached per sf dir."""
-    import os
+    emission frontier.  The staged copy is cached per sf dir
+    (``sources.tables.staged``)."""
+    from ..sources.tables import staged
 
+    return staged(
+        sf_dir,
+        f"events_arrival{n_files}j{LATE_JITTER_US // 10**6}",
+        ("events",),
+        lambda d: write_replay(d, _arrival_ordered(sf_dir), n_files),
+    )
+
+
+def _arrival_ordered(sf_dir: str):
+    """events.parquet sorted by simulated arrival time, then event_id."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from ..functions.text import py_md5_bucket
-    from ..sources.tables import stage_scratch_dir
 
-    out_dir = stage_scratch_dir(
-        sf_dir, f"events_arrival{n_files}j{LATE_JITTER_US // 10**6}", "events"
-    )
-    marker = os.path.join(out_dir, "_STAGED")
-    if os.path.exists(marker):
-        return out_dir
-    os.makedirs(out_dir, exist_ok=True)
     t = pq.read_table(f"{sf_dir}/events.parquet")
     unit = t.schema.field("ts").type.unit
     # arrival is computed in MICROSECONDS exactly (ns truncates like
@@ -249,18 +274,9 @@ def stage_events_arrival_order(sf_dir: str, n_files: int = 4) -> str:
     ]
     arr = pc.add(ts_us, pa.array(jitter, pa.int64()))
     t = t.append_column("_arr", arr)
-    t = t.take(
+    return t.take(
         pc.sort_indices(t, sort_keys=[("_arr", "ascending"), ("event_id", "ascending")])
     ).drop_columns(["_arr"])
-    n = t.num_rows
-    for i in range(n_files):
-        chunk = t.slice(i * n // n_files, (i + 1) * n // n_files - i * n // n_files)
-        path = os.path.join(out_dir, f"f{i:03d}.parquet")
-        pq.write_table(chunk, path, store_schema=True)
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
-    with open(marker, "w") as f:
-        f.write("arrival")
-    return out_dir
 
 
 def read_staged_stream(spark: SparkSession, staged_dir: str) -> DataFrame:

@@ -2,18 +2,20 @@
 """Capture `explain("formatted")` for named queries into plan files.
 
 Usage:
-  python scripts/capture_plans.py --out plans/r18 --suffix before \
+  python scripts/capture_plans.py --out plans/r19 --suffix before \
       --sf SF_DIR q1 q2 ...
 
 Writes <out>/<query>_<suffix>.txt for each name — committed evidence
 files that show a plan change without running Spark.  Each file holds
-the plan of every DataFrame the query collects while it is built
-(driver-held queries and seeds through ``collect``, centroid sums
-through ``toArrow``), then the compiled plan of the query itself.
+the plan of every DataFrame the query collects or pins while it is
+built (driver-held queries and seeds through ``collect``, centroid
+sums through ``toArrow``, pinned subplans such as PPJoin edges through
+``localCheckpoint``), then the compiled plan of the query itself.
 
 Expression ids (``#123``), exchange plan ids (``plan_id=7``), RDD ids
-(``RDD[23]``), lambda-variable counters (``lambda x_8``) and the
-``--sf`` directory are replaced by stable tokens, so a before/after
+(``RDD[23]``), lambda-variable counters (``lambda x_8``), the random
+part of streaming scratch dirs, the staging root and the ``--sf``
+directory are replaced by stable tokens, so a before/after
 pair captured in different sessions or checkouts diffs clean with
 plain ``diff``.
 """
@@ -30,6 +32,7 @@ from pyspark.sql import DataFrame
 
 from map_reduce_multi_threaded_spark.registry import collect_specs
 from map_reduce_multi_threaded_spark.session import get_spark
+from map_reduce_multi_threaded_spark.sources import tables
 
 
 def _formatted(df: DataFrame) -> str:
@@ -39,17 +42,20 @@ def _formatted(df: DataFrame) -> str:
 
 
 def _normalized(plan: str, sf: str) -> str:
+    plan = plan.replace(tables._STAGE_ROOT, "<stage>")
     plan = plan.replace(os.path.abspath(sf), "<sf>")
     plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
     plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
     plan = re.sub(r"(lambda [A-Za-z]+)_\d+", r"\1_N", plan)
+    # tables.tmpfs_scratch_dir names: prefix + 8 random mkdtemp chars
+    plan = re.sub(r"(/sg_[a-z_]*?_)[a-z0-9_]{8}(?=[\]/,\s])", r"\1N", plan)
     return re.sub(r"#\d+", "#N", plan)
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
-    ap.add_argument("--out", default="plans/r18")
+    ap.add_argument("--out", default="plans/r19")
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     a = ap.parse_args()
@@ -61,27 +67,27 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(a.out, exist_ok=True)
     frame = type(spark.range(1))  # the session's concrete DataFrame class
-    actions = {m: getattr(frame, m) for m in ("collect", "toArrow")}
-    built: list[str] = []
+    actions = {m: getattr(frame, m) for m in ("collect", "toArrow", "localCheckpoint")}
+    built: list[tuple[str, str]] = []
 
-    def recording(action):
-        def run(df: DataFrame):
-            built.append(_formatted(df))
-            return action(df)
+    def recording(m, action):
+        def run(df: DataFrame, *args, **kwargs):
+            built.append((m, _formatted(df)))
+            return action(df, *args, **kwargs)
 
         return run
 
     for name in a.names:
         built.clear()
         for m, action in actions.items():
-            setattr(frame, m, recording(action))
+            setattr(frame, m, recording(m, action))
         try:
             df = specs[name].fn(spark, a.sf)
         finally:
             for m, action in actions.items():
                 setattr(frame, m, action)
         parts = [
-            f"== build-time collect {i + 1} ==\n{p}" for i, p in enumerate(built)
+            f"== build-time {m} {i + 1} ==\n{p}" for i, (m, p) in enumerate(built)
         ]
         plan = "\n".join(parts + [_formatted(df)])
         path = os.path.join(a.out, f"{name}_{a.suffix}.txt")

@@ -630,14 +630,17 @@ def test_bench_regression_gate_has_a_baseline():
 
 
 def test_stage_dirs_of_same_basename_fixtures_coexist(tmp_path, monkeypatch):
-    """Two fixtures whose dirs share a basename in different parents
-    (``a/sf``, ``b/sf``) must not prune each other's staging, while a
-    regenerated fixture still prunes its own stale staging.  No Spark:
+    """``tables.staged`` runs its writer once per source fingerprint, and
+    a writer that raises leaves nothing a later call trusts.  Two
+    fixtures whose dirs share a basename in different parents (``a/sf``,
+    ``b/sf``) must not prune each other's staging, while a regenerated
+    fixture re-stages and prunes only its own stale staging.  No Spark:
     the events files are written with pyarrow."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    import pytest
 
     from map_reduce_multi_threaded_spark.sources import tables
 
@@ -647,10 +650,15 @@ def test_stage_dirs_of_same_basename_fixtures_coexist(tmp_path, monkeypatch):
         os.makedirs(sf, exist_ok=True)
         pq.write_table(pa.table({"event_id": ids}), os.path.join(sf, "events.parquet"))
 
-    def stage(sf):
-        d = tables.stage_scratch_dir(sf, "events_multibatch", "events")
-        os.makedirs(d, exist_ok=True)
-        return d
+    written = []
+
+    def write(d):
+        assert os.listdir(d) == []
+        written.append(d)
+        open(os.path.join(d, "f000.parquet"), "w").close()
+
+    def stage(sf, kind="events_multibatch", writer=write):
+        return tables.staged(sf, kind, ("events",), writer)
 
     sf_a, sf_b = str(tmp_path / "a" / "sf"), str(tmp_path / "b" / "sf")
     write_events(sf_a, [1, 2, 3])
@@ -658,16 +666,30 @@ def test_stage_dirs_of_same_basename_fixtures_coexist(tmp_path, monkeypatch):
     d_a = stage(sf_a)
     d_b = stage(sf_b)
     assert d_a != d_b
+    assert d_a == tables.stage_scratch_dir(sf_a, "events_multibatch", "events")
     assert os.path.isdir(d_a), "staging b pruned a's staging"
     assert stage(sf_a) == d_a
     assert os.path.isdir(d_b), "staging a pruned b's staging"
+    assert written == [d_a, d_b], "a staged copy was written twice"
 
-    # a regenerated fixture prunes only its own stale staging
+    # a writer that raises leaves no marker: the next call writes again,
+    # into an empty directory
+    def fail(d):
+        open(os.path.join(d, "f000.parquet"), "w").close()
+        raise OSError("disk full")
+
+    with pytest.raises(OSError):
+        stage(sf_b, "docs", fail)
+    d_docs = stage(sf_b, "docs")
+    assert written[-1] == d_docs
+    assert stage(sf_b, "docs") == d_docs and written.count(d_docs) == 1
+
+    # a regenerated fixture re-stages and prunes only its own stale staging
     write_events(sf_a, [1, 2, 3, 6])
     d_a2 = stage(sf_a)
-    assert d_a2 != d_a
+    assert d_a2 != d_a and written[-1] == d_a2
     assert not os.path.exists(d_a)
-    assert os.path.isdir(d_b)
+    assert os.path.isdir(d_b) and os.path.isdir(d_docs)
 
 
 def test_env_reads_are_only_the_session_knobs():

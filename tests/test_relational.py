@@ -290,17 +290,17 @@ def test_aqe_skew_join_split(spark, sf_dir):
     AQE weighs at real scale."""
     import os
 
-    from map_reduce_multi_threaded_spark.sources.tables import stage_scratch_dir
+    from map_reduce_multi_threaded_spark.sources.tables import staged
 
-    base = stage_scratch_dir(sf_dir, "aqe_skew", "events")
-    marker = os.path.join(base, "_WRITTEN")
-    if not os.path.exists(marker):
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        raw.repartition(8, "event_id").write.mode("overwrite").parquet(
-            os.path.join(base, "events.parquet")
-        )
-        with open(marker, "w") as f:
-            f.write("ok")
+    base = staged(
+        sf_dir,
+        "aqe_skew",
+        ("events",),
+        lambda d: spark.read.parquet(f"{sf_dir}/events.parquet")
+        .repartition(8, "event_id")
+        .write.mode("overwrite")
+        .parquet(os.path.join(d, "events.parquet")),
+    )
     confs = {
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.0",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "100b",

@@ -76,19 +76,19 @@ def test_passes_multiplier_invariant(spark, sf_dir):
 
 
 def test_repartition_invariance(spark, sf_dir):
-    base = wordcount.words(spark, sf_dir)
-    a = {
-        r["word"]: r["cnt"]
-        for r in base.groupBy("word").agg(F.count("*").alias("cnt")).collect()
-    }
-    b = {
-        r["word"]: r["cnt"]
-        for r in base.repartition(7)
-        .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    assert a == b
+    """The counts are a function of the raw-token multiset alone, not
+    of how its rows are partitioned."""
+    from map_reduce_multi_threaded_spark.sources.tables import load_table
+    from map_reduce_multi_threaded_spark.sources.text import tokens_from_text
+
+    toks = load_table(spark, sf_dir, "documents").select(
+        F.explode(tokens_from_text(F.col("text"))).alias("tok")
+    )
+    a, b = (
+        {r["word"]: r["cnt"] for r in wordcount._normalized_counts(t).collect()}
+        for t in (toks, toks.repartition(7))
+    )
+    assert a == b and len(a) > 0
 
 
 def test_text_dir_source_matches_parquet_path(spark, sf_dir, tmp_path):
