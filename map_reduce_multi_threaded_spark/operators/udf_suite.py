@@ -255,33 +255,6 @@ FROM stats
 """
 
 
-# ---------------------------------------------------------------------------
-# row-at-a-time UDF — the documented anti-pattern (bench contrast only)
-# ---------------------------------------------------------------------------
-
-def rowudf_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's S5+S7 normalize as a row-at-a-time Python UDF.
-    Exists to make the cost visible next to the built-in pipeline —
-    NOT registered as an oracle query; the bench compares it against
-    the codegen path."""
-    import string
-
-    punct = set(string.punctuation)
-
-    @F.udf("string")
-    def norm(tok: str) -> str:
-        return "".join(ch for ch in tok if ch not in punct).lower()
-
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select(F.explode(F.split("text", r"\s+")).alias("tok"))
-        .select(norm("tok").alias("word"))
-        .where(F.length("word") > 0)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
 def cogroup_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``cogroup().applyInPandas`` — align TWO keyed tables group-by-
     group in one pass: each user's events and their orders arrive as a

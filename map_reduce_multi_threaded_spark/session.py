@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Configs that must hold for correctness (not just speed).
@@ -139,6 +140,8 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
     for k, v in _PERF_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on a running session — keep going
+        except AnalysisException as e:
+            # a static conf on a running session keeps its value
+            if e.getCondition() != "CANNOT_MODIFY_STATIC_CONFIG":
+                raise
     return spark

@@ -297,7 +297,10 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     loses and duplicates nothing.  Drained with ``processAllAvailable``
     (the finite stream stops advancing at ``n``) rather than
     availableNow, which Python stream sources don't implement
-    admission control for.  ``sf_dir`` unused (generative source)."""
+    admission control for, so it skips ``windows.drain`` but stops at
+    the same drain-free plan capture.  ``sf_dir`` unused (generative
+    source)."""
+    from ..streaming import windows as W
     from .tables import tmpfs_scratch_dir
 
     register(spark)
@@ -312,6 +315,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("i").alias("first_i"),
     )
     name = "stream_pygen_sink"
+    W.check_plan_only(agg, name)
     with tmpfs_scratch_dir("sg_ckpt_pygen_") as ckpt:
         query = (
             agg.writeStream.queryName(name)

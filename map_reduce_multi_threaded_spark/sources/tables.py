@@ -257,6 +257,10 @@ def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
 _STAGE_ROOT = "/tmp/spark_graft_stage"
 
 
+#: symlink in each sf namespace to the absolute sf dir it stages
+_NS_SOURCE = "_SF_DIR"
+
+
 def stage_scratch_dir(sf_dir: str, kind: str, *source_tables: str) -> str:
     """Scratch directory for staged derivatives of ``sf_dir`` tables,
     keyed by a CONTENT fingerprint of the source parquet files
@@ -269,7 +273,10 @@ def stage_scratch_dir(sf_dir: str, kind: str, *source_tables: str) -> str:
     fingerprint) is pruned without touching other kinds' staging or
     another fixture's.  Two fixtures that share a basename in
     different parents get different namespaces and never prune each
-    other."""
+    other.  Each namespace records its sf dir in the symlink
+    ``_SF_DIR`` (created atomically, never rewritten); a namespace
+    whose link dangles (a deleted test fixture) is pruned by the next
+    call."""
     import hashlib
     import shutil
 
@@ -287,12 +294,17 @@ def stage_scratch_dir(sf_dir: str, kind: str, *source_tables: str) -> str:
         _STAGE_ROOT,
         f"{os.path.basename(abs_sf)}-{hashlib.md5(abs_sf.encode()).hexdigest()[:12]}",
     )
-    try:
-        for sub in os.listdir(ns):
-            if sub.startswith(f"{kind}-") and sub != f"{kind}-{fp}":
-                shutil.rmtree(os.path.join(ns, sub), ignore_errors=True)
-    except OSError:
-        pass
+    os.makedirs(_STAGE_ROOT, exist_ok=True)
+    for other in os.listdir(_STAGE_ROOT):
+        record = os.path.join(_STAGE_ROOT, other, _NS_SOURCE)
+        if os.path.islink(record) and not os.path.isdir(record):
+            shutil.rmtree(os.path.join(_STAGE_ROOT, other), ignore_errors=True)
+    os.makedirs(ns, exist_ok=True)
+    with contextlib.suppress(FileExistsError):
+        os.symlink(abs_sf, os.path.join(ns, _NS_SOURCE))
+    for sub in os.listdir(ns):
+        if sub.startswith(f"{kind}-") and sub != f"{kind}-{fp}":
+            shutil.rmtree(os.path.join(ns, sub), ignore_errors=True)
     return f"{ns}/{kind}-{fp}"
 
 

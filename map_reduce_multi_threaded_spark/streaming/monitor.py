@@ -30,7 +30,6 @@ import logging
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..sources.tables import tmpfs_scratch_dir
 from . import windows as W
 
 logger = logging.getLogger(__name__)
@@ -107,10 +106,8 @@ def run_hot_key_watch(
     Each micro-batch is profiled with :func:`hot_key_batch_profile`;
     when the hottest key's share meets ``share_threshold`` on a batch
     of at least ``min_rows`` rows, a warning is logged and the batch
-    record is marked ``fired``.  The drain uses availableNow + a
-    throwaway checkpoint, like every other replay here."""
-    if W.PLAN_ONLY:
-        raise W.PlanOnly("hot_key_watch", W.template_plan(stream_df), stream_df.schema)
+    record is marked ``fired``.  The stream drains through
+    :func:`windows.drain` as query ``hot_key_watch``."""
     report: dict = {"batches": [], "fired": False}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -135,12 +132,5 @@ def run_hot_key_watch(
             )
         report["batches"].append(prof)
 
-    with tmpfs_scratch_dir("sg_watch_") as ckpt:
-        query = (
-            stream_df.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    W.drain(stream_df, "hot_key_watch", lambda w: w.foreachBatch(sink))
     return report

@@ -234,7 +234,7 @@ def stream_custom_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .stateful import session_windows_custom
 
     staged, _ = W.stage_events_multibatch(sf_dir, n_files=2, n_sentinels=1)
-    ev = W.read_staged_stream(spark, staged).withWatermark("ts", "1 second")
+    ev = W.read_events_stream(spark, staged, "*.parquet").withWatermark("ts", "1 second")
     out = W.run_to_memory(
         session_windows_custom(ev), "stream_custom_sessions_sink", output_mode="append"
     )
@@ -372,7 +372,7 @@ def stream_tumbling_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     staged, cutoff = W.stage_events_multibatch(sf_dir)
-    ev = W.read_staged_stream(spark, staged)
+    ev = W.read_events_stream(spark, staged, "*.parquet")
     # NO pre-aggregation sentinel filter: any row-level filter here gets
     # pushed below the watermark as a parquet scan predicate and the
     # sentinel-only files would be stats-skipped, stalling the watermark.
@@ -464,7 +464,7 @@ def stream_update_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     update mode's emission volume is O(groups touched per batch), the
     cheapest of the three modes for high-cardinality rollups."""
     staged, _ = W.stage_events_multibatch(sf_dir, n_files=4, n_sentinels=0)
-    ev = W.read_staged_stream(spark, staged)
+    ev = W.read_events_stream(spark, staged, "*.parquet")
     return W.run_to_memory(
         W.tumbling_counts(ev.withWatermark("ts", "10 minutes")),
         "stream_update_sink",
@@ -519,7 +519,7 @@ def stream_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     staged, cutoff = W.stage_events_multibatch(sf_dir, n_files=2, n_sentinels=1)
-    ev = W.read_staged_stream(spark, staged).withWatermark("ts", "10 minutes")
+    ev = W.read_events_stream(spark, staged, "*.parquet").withWatermark("ts", "10 minutes")
     w10 = ev.groupBy(F.window("ts", "10 minutes").alias("w10"), "event_type").agg(
         F.count(F.lit(1)).alias("n10")
     )
@@ -575,7 +575,7 @@ def stream_window_winner(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     staged, cutoff = W.stage_events_multibatch(sf_dir, n_files=2, n_sentinels=1)
-    ev = W.read_staged_stream(spark, staged).withWatermark("ts", "10 minutes")
+    ev = W.read_events_stream(spark, staged, "*.parquet").withWatermark("ts", "10 minutes")
     counts = ev.groupBy(
         F.window("ts", "15 minutes").alias("w"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -638,13 +638,13 @@ def stream_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (user_id -1/-2) precisely so they SURVIVE these pushed-down type
     # filters and advance both streams' watermarks; their null-extended
     # join outputs are dropped by the p_user >= 0 filter at the end
-    ev1 = W.read_staged_stream(spark, staged).withWatermark("ts", "1 second")
+    ev1 = W.read_events_stream(spark, staged, "*.parquet").withWatermark("ts", "1 second")
     purchases = ev1.where(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("p_user"),
         F.col("ts").alias("p_ts"),
     )
-    ev2 = W.read_staged_stream(spark, staged).withWatermark("ts", "1 second")
+    ev2 = W.read_events_stream(spark, staged, "*.parquet").withWatermark("ts", "1 second")
     errors = ev2.where(F.col("event_type") == "error").select(
         F.col("event_id").alias("error_id"),
         F.col("user_id").alias("e_user"),
@@ -686,13 +686,13 @@ def stream_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     staged, _ = W.stage_events_multibatch(sf_dir, n_files=2, n_sentinels=1)
-    ev1 = W.read_staged_stream(spark, staged).withWatermark("ts", "1 second")
+    ev1 = W.read_events_stream(spark, staged, "*.parquet").withWatermark("ts", "1 second")
     purchases = ev1.where(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("p_user"),
         F.col("ts").alias("p_ts"),
     )
-    ev2 = W.read_staged_stream(spark, staged).withWatermark("ts", "1 second")
+    ev2 = W.read_events_stream(spark, staged, "*.parquet").withWatermark("ts", "1 second")
     errors = ev2.where(F.col("event_type") == "error").select(
         F.col("event_id").alias("error_id"),
         F.col("user_id").alias("e_user"),
@@ -782,7 +782,7 @@ def stream_late_data_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     that bounds streaming state at 100 TB, demonstrated rather than
     asserted."""
     staged = W.stage_events_arrival_order(sf_dir, n_files=4)
-    ev = W.read_staged_stream(spark, staged)
+    ev = W.read_events_stream(spark, staged, "*.parquet")
     # the aggregation IS tumbling_counts — only the watermark and the
     # out-of-order input differ from stream_tumbling
     agg = W.tumbling_counts(ev.withWatermark("ts", "5 minutes"))
@@ -879,6 +879,8 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     one keyed max_by over the log — in production that log IS the
     table (compaction amortizes it); the localCheckpoint here only
     pins the harness result before the scratch log is deleted."""
+    import os
+
     import pyspark.sql.functions as F
 
     from ..sources.tables import tmpfs_scratch_dir
@@ -886,12 +888,10 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged, _cutoff = W.stage_events_multibatch(
         sf_dir, n_files=CDC_STREAM_FILES, n_sentinels=0
     )
-    ev = W.read_staged_stream(spark, staged)
-    with (
-        tmpfs_scratch_dir("sg_cdc_log_") as out,
-        tmpfs_scratch_dir("sg_cdc_ckpt_") as ckpt,
-    ):
-        W.write_foreach_batch(ev, out, ckpt, transform=_cdc_batch_latest)
+    ev = W.read_events_stream(spark, staged, "*.parquet")
+    with tmpfs_scratch_dir("sg_cdc_log_") as scratch:
+        out = os.path.join(scratch, "stream_cdc_upsert_log")
+        W.write_foreach_batch(ev, out, transform=_cdc_batch_latest)
         # explicit schema, derived by pushing an empty frame through the
         # same per-batch transform: a 0-row events table yields 0-row
         # micro-batches, dynamic partition overwrite then writes NO

@@ -8,9 +8,11 @@ eviction instead of spin/usleep).
 
 Each operator is expressed once over a DataFrame that may be batch or
 streaming — the same plan runs both ways, which is how the streaming
-results are oracle-checked: replay the parquet through a file source,
-drain with ``trigger(availableNow)`` into a memory sink, compare to the
-batch/DuckDB answer.
+results are oracle-checked: replay the parquet through a file source
+(:func:`read_events_stream`), drain it into a memory sink through the
+one availableNow drain (:func:`drain`), compare to the batch/DuckDB
+answer.  :func:`capture_template` builds any streaming query drain-free
+and returns its template plan instead.
 
 Scale: streaming state (window aggregates, dedup keys) is partitioned
 by group key across executors exactly like a batch shuffle; watermarks
@@ -20,8 +22,14 @@ forever.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
     DataType,
     DoubleType,
@@ -32,6 +40,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
     TimestampType,
 )
+
+from ..sources.tables import normalize_event_ts, staged, tmpfs_scratch_dir
 
 
 def _raw_ts_type(parquet_path: str) -> DataType:
@@ -71,18 +81,23 @@ def events_schema(ts_type: DataType) -> StructType:
     )
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source replay of events.parquet as a stream."""
-    from ..sources.tables import normalize_event_ts
-
+def read_events_stream(
+    spark: SparkSession, src_dir: str, pattern: str = "events.parquet"
+) -> DataFrame:
+    """File-source replay of the events files in ``src_dir`` that match
+    ``pattern``, one file per micro-batch: ``events.parquet`` of an sf
+    dir, or ``"*.parquet"`` for a staged multi-file replay
+    (:func:`stage_events_multibatch`, :func:`stage_events_arrival_order`).
+    The file source requires a directory, so the glob filter picks the
+    files; staged files keep the source fixture's ts type, so any one
+    matching file declares it."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # the file source requires a directory; select just events.parquet
-    # from the sf dir via glob filter
+    sample = sorted(glob.glob(os.path.join(glob.escape(src_dir), pattern)))[0]
     raw = (
-        spark.readStream.schema(events_schema(_raw_ts_type(f"{sf_dir}/events.parquet")))
+        spark.readStream.schema(events_schema(_raw_ts_type(sample)))
         .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        .option("pathGlobFilter", pattern)
+        .parquet(src_dir)
     )
     return normalize_event_ts(raw)
 
@@ -126,10 +141,6 @@ def stage_events_multibatch(
     content is a deterministic function of events.parquet); the cutoff
     is stored beside the files in ``_cutoff``, which the file source
     skips."""
-    import os
-
-    from ..sources.tables import staged
-
     out_dir = staged(
         sf_dir,
         f"events_multibatch{n_files}s{n_sentinels}",
@@ -143,8 +154,6 @@ def stage_events_multibatch(
 def _write_multibatch(sf_dir: str, out_dir: str, n_files: int, n_sentinels: int) -> None:
     """Write :func:`stage_events_multibatch`'s replay files and its
     ``_cutoff`` into ``out_dir``."""
-    import os
-
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -200,8 +209,6 @@ def write_replay(out_dir: str, t: "pa.Table", n_files: int, tail: list | tuple =
     (modification time, path), so file i's mtime is pinned to
     ``1_700_000_000 + i``: a ``maxFilesPerTrigger=1`` stream replays
     the files in this order."""
-    import os
-
     import pyarrow.parquet as pq
 
     n = t.num_rows
@@ -240,8 +247,6 @@ def stage_events_arrival_order(sf_dir: str, n_files: int = 4) -> str:
     the oracle models both the per-batch drop rule and that terminal
     emission frontier.  The staged copy is cached per sf dir
     (``sources.tables.staged``)."""
-    from ..sources.tables import staged
-
     return staged(
         sf_dir,
         f"events_arrival{n_files}j{LATE_JITTER_US // 10**6}",
@@ -277,25 +282,6 @@ def _arrival_ordered(sf_dir: str):
     return t.take(
         pc.sort_indices(t, sort_keys=[("_arr", "ascending"), ("event_id", "ascending")])
     ).drop_columns(["_arr"])
-
-
-def read_staged_stream(spark: SparkSession, staged_dir: str) -> DataFrame:
-    """Stream the staged multi-file replay, one file per micro-batch."""
-    import glob
-
-    from ..sources.tables import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # staged files preserve the source fixture's ts type (cast to the
-    # source schema in stage_events_multibatch) — sample any one file
-    sample = sorted(glob.glob(f"{staged_dir}/*.parquet"))[0]
-    raw = (
-        spark.readStream.schema(events_schema(_raw_ts_type(sample)))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(staged_dir)
-    )
-    return normalize_event_ts(raw)
 
 
 def tumbling_counts(events: DataFrame) -> DataFrame:
@@ -367,10 +353,128 @@ def dedup_counts(events: DataFrame) -> DataFrame:
     )
 
 
+
+
+#: State partition count for streaming queries started here.  Streaming
+#: state (window aggs, dedup keys, applyInPandasWithState) is hash-
+#: partitioned at query start using spark.sql.shuffle.partitions, and
+#: each state partition pays a fixed per-micro-batch cost (state-store
+#: commit + an Arrow channel / Python worker for stateful UDFs) that
+#: dominates small replays: stream_stateful_counts at sf0.1 runs 6.0 s
+#: with 32 partitions vs 2.5 s with 8.  This is a deployment knob — a
+#: real 100 TB cluster raises it to O(cores) just like batch shuffle —
+#: so it is a module constant, not a buried literal.
+STREAM_STATE_PARTITIONS = 8
+
+#: Per-query-name micro-batch progress JSON from the last drain.
+RECENT_PROGRESS: dict[str, list[dict]] = {}
+
+#: Per-query-name executed physical plan text from the last drain —
+#: the complement of the template plan :func:`capture_template` returns.
+RECENT_PLANS: dict[str, str] = {}
+
+#: True only inside :func:`capture_template`.
+PLAN_ONLY = False
+
+
+class PlanOnly(Exception):
+    """Raised by :func:`check_plan_only` under :func:`capture_template`;
+    carries the query's name, template plan and result schema."""
+
+    def __init__(self, name: str, plan: str, schema=None):
+        super().__init__(name)
+        self.name = name
+        self.plan = plan
+        self.schema = schema
+
+
+def template_plan(df: DataFrame) -> str:
+    """Physical plan text of an UNSTARTED streaming DataFrame."""
+    jvm = df.sparkSession._jvm  # noqa: SLF001
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    return df._jdf.queryExecution().explainString(mode)  # noqa: SLF001
+
+
+def check_plan_only(df: DataFrame, name: str) -> None:
+    """Every streaming sink calls this before it starts a query: under
+    :func:`capture_template` it raises :class:`PlanOnly` with ``df``'s
+    template plan, otherwise it returns."""
+    if PLAN_ONLY:
+        raise PlanOnly(name, template_plan(df), df.schema)
+
+
+def capture_template(spec, spark: SparkSession, sf_dir: str) -> PlanOnly:
+    """Build the streaming query of ``spec`` (a registry ``QuerySpec``)
+    drain-free and return the :class:`PlanOnly` its sink raised.
+
+    ``QueryExecution.explainString`` plans a streaming DataFrame
+    without starting it, and that template already holds every
+    Exchange, StateStore*, EventTimeWatermark and Python-eval node the
+    micro-batches will execute — so the plan gates cover every
+    streaming query without paying a replay per query.  A query fn
+    that returns without reaching a sink raises ``RuntimeError``: its
+    plan would escape those gates."""
+    global PLAN_ONLY
+    PLAN_ONLY = True
+    try:
+        spec.fn(spark, sf_dir)
+    except PlanOnly as e:
+        return e
+    finally:
+        PLAN_ONLY = False
+    raise RuntimeError(f"{spec.name} returned without reaching a streaming sink")
+
+
+def drain(
+    df: DataFrame,
+    name: str,
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
+    checkpoint: str | None = None,
+) -> None:
+    """The one availableNow drain: start ``df`` as query ``name`` with
+    the writer ``sink`` configures (format, output mode or
+    foreachBatch), process everything available, wait for it to stop.
+
+    - Under :func:`capture_template` it raises instead of starting.
+    - The checkpoint is a throwaway tmpfs dir unless the caller passes
+      its own (a restart test reuses one).
+    - The state partition count is pinned to STREAM_STATE_PARTITIONS
+      for the query start (it is baked into the streaming plan at
+      ``start()``); the session's batch shuffle setting is restored
+      after.
+    - The micro-batch progress and the last executed plan are kept in
+      RECENT_PROGRESS / RECENT_PLANS under ``name``."""
+    check_plan_only(df, name)
+    spark = df.sparkSession
+    with tmpfs_scratch_dir("sg_ckpt_") as tmp:
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
+        try:
+            query = (
+                sink(df.writeStream.queryName(name))
+                .option("checkpointLocation", checkpoint or tmp)
+                .trigger(availableNow=True)
+                .start()
+            )
+            query.awaitTermination()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+    RECENT_PROGRESS[name] = [json.loads(p.json) for p in query.recentProgress]
+    RECENT_PLANS[name] = query._jsq.explainInternal(False)  # noqa: SLF001
+
+
+def run_to_memory(df: DataFrame, name: str, output_mode: str = "complete") -> DataFrame:
+    """Drain a streaming DataFrame into the in-memory table ``name`` and
+    return it as a batch DataFrame — the bridge that lets the driver's
+    oracle harness gate streaming operators like any other query."""
+    drain(df, name, lambda w: w.outputMode(output_mode).format("memory"))
+    return df.sparkSession.table(name)
+
+
 def write_foreach_batch(
     df: DataFrame,
     path: str,
-    checkpoint: str,
+    checkpoint: str | None = None,
     transform=None,
 ) -> None:
     """Production streaming sink shape: ``foreachBatch`` with a
@@ -379,7 +483,8 @@ def write_foreach_batch(
     crash after the write but before the batch commit replays the
     batch on restart), so each batch OVERWRITES its own ``batch_id``
     partition via dynamic partition overwrite — a replayed batch
-    rewrites identical data instead of appending a duplicate.
+    rewrites identical data instead of appending a duplicate.  The
+    query is named after the last component of ``path``.
 
     ``transform`` (optional ``DataFrame -> DataFrame``) runs as an
     ordinary BATCH transformation on each micro-batch before the write
@@ -391,10 +496,6 @@ def write_foreach_batch(
     any batch writer (partitioned parquet, JDBC upsert, merge) without
     a dedicated streaming connector; whatever it is must stay
     idempotent per batch_id for the exactly-once claim to hold."""
-    if PLAN_ONLY:
-        import os
-
-        raise PlanOnly(os.path.basename(path), template_plan(df), df.schema)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -412,109 +513,4 @@ def write_foreach_batch(
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
 
-    query = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
-#: State partition count for streaming queries started here.  Streaming
-#: state (window aggs, dedup keys, applyInPandasWithState) is hash-
-#: partitioned at query start using spark.sql.shuffle.partitions, and
-#: each state partition pays a fixed per-micro-batch cost (state-store
-#: commit + an Arrow channel / Python worker for stateful UDFs) that
-#: dominates small replays: stream_stateful_counts at sf0.1 runs 6.0 s
-#: with 32 partitions vs 2.5 s with 8.  This is a deployment knob — a
-#: real 100 TB cluster raises it to O(cores) just like batch shuffle —
-#: so it is a module constant, not a buried literal.
-STREAM_STATE_PARTITIONS = 8
-
-#: Per-sink-name micro-batch progress JSON from the last drain
-#: (telemetry only — see run_to_memory).
-RECENT_PROGRESS: dict[str, list[dict]] = {}
-
-#: Drain-free plan capture (round 10).  When PLAN_ONLY is True, the
-#: streaming sinks below (run_to_memory, write_foreach_batch) capture
-#: the UNSTARTED streaming DataFrame's TEMPLATE physical plan —
-#: ``QueryExecution.explainString`` plans a streaming DF without
-#: starting it, and the template already contains every Exchange,
-#: StateStore*, EventTimeWatermark and Python-eval node the
-#: micro-batches will execute — then abort the query fn by raising
-#: :class:`PlanOnly`.  This is how tests/test_plan_policy.py extends
-#: its exchange-count ratchet to all streaming queries without paying
-#: a multi-second replay per query (the executed-plan capture in
-#: RECENT_PLANS still exists for the drains the oracle tests run).
-PLAN_ONLY = False
-
-
-class PlanOnly(Exception):
-    """Raised by streaming sinks under PLAN_ONLY; carries the plan and
-    the result schema (schema added r11 for the FP-order audit)."""
-
-    def __init__(self, name: str, plan: str, schema=None):
-        super().__init__(name)
-        self.name = name
-        self.plan = plan
-        self.schema = schema
-
-
-def template_plan(df: DataFrame) -> str:
-    """Physical plan text of an UNSTARTED streaming DataFrame."""
-    jvm = df.sparkSession._jvm  # noqa: SLF001
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    return df._jdf.queryExecution().explainString(mode)  # noqa: SLF001
-
-
-#: Per-sink-name executed physical plan text from the last drain —
-#: the complementary EXECUTED-plan capture the policy gate's
-#: representative-drain test uses.
-RECENT_PLANS: dict[str, str] = {}
-
-
-def run_to_memory(df: DataFrame, name: str, output_mode: str = "complete") -> DataFrame:
-    """Drain a streaming DataFrame into an in-memory table and return
-    it as a batch DataFrame — the bridge that lets the driver's oracle
-    harness gate streaming operators like any other query.
-
-    The state partition count is pinned to STREAM_STATE_PARTITIONS for
-    the duration of query start (it is baked into the streaming plan at
-    ``start()``); the session's batch shuffle setting is restored after."""
-    from ..sources.tables import tmpfs_scratch_dir
-
-    if PLAN_ONLY:
-        raise PlanOnly(name, template_plan(df), df.schema)
-    spark = df.sparkSession
-    with tmpfs_scratch_dir("sg_ckpt_") as ckpt:
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-        try:
-            query = (
-                df.writeStream.queryName(name)
-                .outputMode(output_mode)
-                .format("memory")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-            # keep the per-micro-batch progress telemetry (durationMs,
-            # stateOperators commit times) for profiling: the replay-floor
-            # claims in BACKLOG are backed by these numbers, not guesses
-            try:
-                import json as _json
-
-                RECENT_PROGRESS[name] = [
-                    p if isinstance(p, dict) else _json.loads(p.json)
-                    for p in query.recentProgress
-                ]
-                RECENT_PLANS[name] = (
-                    query._jsq.explainInternal(False)  # noqa: SLF001
-                )
-            except Exception:
-                pass  # telemetry must never fail the query
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.table(name)
+    drain(df, os.path.basename(path), lambda w: w.foreachBatch(sink), checkpoint)

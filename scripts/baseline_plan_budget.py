@@ -16,13 +16,9 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from map_reduce_multi_threaded_spark.session import get_spark
-from tests.test_plan_policy import (
-    SF,
-    _STREAMING_MODULES,
-    _batch_specs,
-    _exchange_count,
-    _scan_cols,
-)
+from map_reduce_multi_threaded_spark.registry import collect_specs
+from map_reduce_multi_threaded_spark.streaming import windows as W
+from tests.test_plan_policy import SF, _batch_specs, _exchange_count, _scan_cols
 
 
 def _write(path: str, budget: dict) -> None:
@@ -68,38 +64,15 @@ def main() -> int:
     if sc_added:
         sc_budget.update(sc_added)
         _write(sc_path, sc_budget)
-    # Streaming pass (ADVICE r10): test_streaming_exchange_counts_
-    # within_budget hard-requires EVERY streaming query to carry a
-    # plan_budget.json entry, so new streaming queries need a scripted
-    # baseline too.  Mirrors the tests' stream_plans fixture: under
-    # windows.PLAN_ONLY the sink raises PlanOnly carrying the
-    # unstarted template plan — no drain needed.  Streaming queries
-    # are exchange-budget-only (the scan/pushdown ratchets are batch
-    # gates; streaming scans read in-memory replay sources).
-    from map_reduce_multi_threaded_spark.registry import collect_specs
-    from map_reduce_multi_threaded_spark.streaming import windows as W
-
-    stream_specs = [
-        s for s in collect_specs()
-        if s.fn.__module__ in _STREAMING_MODULES and s.name not in ex_budget
-    ]
-    W.PLAN_ONLY = True
-    try:
-        for s in stream_specs:
-            try:
-                s.fn(spark, SF)
-            except W.PlanOnly as e:
-                n = _exchange_count(e.plan)
-                ex_added[s.name] = n
-                ex_budget[s.name] = n
-                print(f"ADD exchange (streaming) {s.name}: {n}", flush=True)
-            else:
-                print(
-                    f"WARN {s.name}: no streaming sink reached under "
-                    f"PLAN_ONLY — not baselined", flush=True,
-                )
-    finally:
-        W.PLAN_ONLY = False
+    # Streaming pass: test_streaming_exchange_counts_within_budget
+    # requires EVERY streaming query to carry a plan_budget.json entry,
+    # taken from its drain-free template plan.  Streaming queries are
+    # exchange-budget-only (the scan/pushdown ratchets are batch gates).
+    for s in collect_specs():
+        if s.streaming and s.name not in ex_budget:
+            n = _exchange_count(W.capture_template(s, spark, SF).plan)
+            ex_added[s.name] = ex_budget[s.name] = n
+            print(f"ADD exchange (streaming) {s.name}: {n}", flush=True)
     if ex_added:
         _write(ex_path, ex_budget)
     if pf_added:

@@ -45,8 +45,7 @@ from pyspark.sql import types as T
 
 from map_reduce_multi_threaded_spark.registry import collect_specs
 from map_reduce_multi_threaded_spark.session import get_spark
-
-_STREAMING_MODULES = {"map_reduce_multi_threaded_spark.streaming.queries"}
+from map_reduce_multi_threaded_spark.streaming import windows as W
 
 RUN_A = {
     "spark.sql.shuffle.partitions": "1",
@@ -103,8 +102,8 @@ def main() -> int:
     report: dict[str, dict] = {}
     n_float = n_bit = n_gate_only = n_drift = 0
     for s in specs:
-        if s.fn.__module__ in _STREAMING_MODULES:
-            continue  # streaming specs are enumerated via a PLAN_ONLY pass
+        if s.streaming:
+            continue  # enumerated from their template plans below
         df = s.fn(spark, a.sf_dir)
         floats = []
         for f in df.schema.fields:
@@ -135,27 +134,16 @@ def main() -> int:
         print(f"{verdict:>14}  {s.name}  ({', '.join(floats)})", flush=True)
 
     # streaming: enumerate float outputs from drain-free template plans
-    from map_reduce_multi_threaded_spark.streaming import windows as W
     stream_float = {}
-    W.PLAN_ONLY = True
-    try:
-        for s in specs:
-            if s.fn.__module__ not in _STREAMING_MODULES:
-                continue
-            try:
-                s.fn(spark, a.sf_dir)
-            except W.PlanOnly as e:
-                sch = getattr(e, "schema", None)
-                floats = []
-                if sch is not None:
-                    for f in sch.fields:
-                        floats.extend(_float_fields(f.dataType, f.name))
-                if floats:
-                    stream_float[s.name] = floats
-                    print(f"   streaming-61  {s.name}  ({', '.join(floats)})",
-                          flush=True)
-    finally:
-        W.PLAN_ONLY = False
+    for s in specs:
+        if not s.streaming:
+            continue
+        floats = []
+        for f in W.capture_template(s, spark, a.sf_dir).schema.fields:
+            floats.extend(_float_fields(f.dataType, f.name))
+        if floats:
+            stream_float[s.name] = floats
+            print(f"   streaming-61  {s.name}  ({', '.join(floats)})", flush=True)
 
     summary = {
         "batch_with_float_output": n_float,

@@ -692,6 +692,58 @@ def test_stage_dirs_of_same_basename_fixtures_coexist(tmp_path, monkeypatch):
     assert os.path.isdir(d_b) and os.path.isdir(d_docs)
 
 
+def test_stage_namespaces_of_deleted_fixtures_are_pruned(tmp_path, monkeypatch):
+    """Each staging namespace records its absolute sf dir; once that dir
+    is deleted (a test fixture under a per-run tmp path), the next
+    staging call anywhere prunes the namespace.  A namespace without a
+    record and the namespaces of live fixtures stay.  No Spark."""
+    import os
+    import shutil
+
+    from map_reduce_multi_threaded_spark.sources import tables
+
+    root = tmp_path / "stage"
+    monkeypatch.setattr(tables, "_STAGE_ROOT", str(root), raising=False)
+    sf_a, sf_b = tmp_path / "a" / "sf", tmp_path / "b" / "sf"
+    for sf in (sf_a, sf_b):
+        os.makedirs(sf)
+    ns_a = os.path.dirname(tables.stage_scratch_dir(str(sf_a), "parted", "events"))
+    ns_b = os.path.dirname(tables.stage_scratch_dir(str(sf_b), "parted", "events"))
+    assert os.readlink(os.path.join(ns_a, tables._NS_SOURCE)) == str(sf_a)
+    unrecorded = root / "degen-000000000000"
+    os.makedirs(unrecorded / "parted-000000000000")
+
+    shutil.rmtree(tmp_path / "a")
+    tables.stage_scratch_dir(str(sf_b), "docs", "documents")
+    assert not os.path.exists(ns_a), "a deleted fixture's namespace survived"
+    assert os.path.isdir(ns_b) and os.path.isdir(unrecorded)
+
+
+def test_package_has_no_broad_except():
+    """No ``except Exception``, ``except BaseException`` or bare
+    ``except`` in the package: a broad handler can quietly switch an
+    optimization or a record off.  Catch the one error a call is known
+    to raise.  Scans the source (no Spark)."""
+    import ast
+    import pathlib
+
+    import map_reduce_multi_threaded_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    broad = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.ExceptHandler):
+                continue
+            types = node.type.elts if isinstance(node.type, ast.Tuple) else [node.type]
+            if any(
+                t is None or (isinstance(t, ast.Name) and t.id in ("Exception", "BaseException"))
+                for t in types
+            ):
+                broad.append(f"{path.relative_to(root).as_posix()}:{node.lineno}")
+    assert not broad, broad
+
+
 def test_env_reads_are_only_the_session_knobs():
     """The package reads exactly three environment variables, all in
     session.py: core count, shuffle partitions and driver memory.  No

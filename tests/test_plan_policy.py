@@ -4,14 +4,14 @@ rather than asserted per-query.  A new query that sneaks in a
 row-at-a-time Python eval, an unbroadcast cartesian product, or an
 unexplained RDD scan fails here the day it lands.
 
-Streaming queries join the same gates through the drain-free
-PLAN_ONLY path (round 10): the sinks in streaming/windows.py capture
-the unstarted streaming DataFrame's template physical plan — which
-already contains every Exchange / StateStore / Python-eval node the
-micro-batches will execute — and abort before starting the query, so
-all 20 streaming plans build in ~13 s instead of draining ~80 s of
-replays.  Plans are built at sf0.001 so checkpoint-based iteratives
-stay cheap.
+Streaming queries (``QuerySpec.streaming``) join the same gates
+through the drain-free plan capture (``windows.capture_template``):
+their sinks return the unstarted streaming DataFrame's template
+physical plan — which already contains every Exchange / StateStore /
+Python-eval node the micro-batches will execute — and abort before
+starting the query, so all 21 streaming plans build in ~13 s instead
+of draining ~80 s of replays.  Plans are built at sf0.001 so
+checkpoint-based iteratives stay cheap.
 """
 
 from __future__ import annotations
@@ -21,9 +21,6 @@ import pytest
 from map_reduce_multi_threaded_spark.registry import collect_specs
 
 SF = "/root/testdata/sf0.001"
-
-#: queries whose fn() executes a streaming drain (module-based)
-_STREAMING_MODULES = {"map_reduce_multi_threaded_spark.streaming.queries"}
 
 #: queries that legitimately contain `Scan ExistingRDD`: iterative
 #: algorithms whose loops localCheckpoint to cut lineage (JVM RDD
@@ -57,10 +54,7 @@ _CHECKPOINT_OK = {
 
 
 def _batch_specs():
-    return [
-        s for s in collect_specs()
-        if s.fn.__module__ not in _STREAMING_MODULES
-    ]
+    return [s for s in collect_specs() if not s.streaming]
 
 
 @pytest.fixture(scope="module")
@@ -77,30 +71,14 @@ def plans(spark):
 @pytest.fixture(scope="module")
 def stream_plans(spark):
     """Template physical plan for every registered STREAMING query,
-    captured drain-free via windows.PLAN_ONLY (the sink raises
-    PlanOnly carrying the unstarted DataFrame's plan)."""
+    captured drain-free."""
     from map_reduce_multi_threaded_spark.streaming import windows as W
 
-    out = {}
-    stream_specs = [
-        s for s in collect_specs()
-        if s.fn.__module__ in _STREAMING_MODULES
-    ]
-    W.PLAN_ONLY = True
-    try:
-        for s in stream_specs:
-            try:
-                s.fn(spark, SF)
-            except W.PlanOnly as e:
-                out[s.name] = e.plan
-            else:
-                pytest.fail(
-                    f"{s.name} returned without reaching a streaming "
-                    f"sink under PLAN_ONLY — its plan escaped the gate"
-                )
-    finally:
-        W.PLAN_ONLY = False
-    return out
+    return {
+        s.name: W.capture_template(s, spark, SF).plan
+        for s in collect_specs()
+        if s.streaming
+    }
 
 
 def test_no_row_at_a_time_python_eval(plans):
@@ -286,7 +264,7 @@ def test_streaming_template_plans_obey_policy(stream_plans):
     derived time bucket, so a hot user shards across arrival windows."""
     import re
 
-    assert len(stream_plans) == 20, sorted(stream_plans)
+    assert len(stream_plans) == 21, sorted(stream_plans)
     bad_eval = [n for n, p in stream_plans.items() if "BatchEvalPython" in p]
     assert not bad_eval, bad_eval
     bad_cart = [n for n, p in stream_plans.items() if "CartesianProduct" in p]
@@ -305,8 +283,8 @@ def test_streaming_template_plans_obey_policy(stream_plans):
 def test_streaming_exchange_counts_within_budget(stream_plans):
     """Extends the shuffle ratchet to streaming: template-plan exchange
     counts bounded by the committed tests/plan_budget.json snapshot —
-    with PLAN_ONLY there is no longer a drain cost excusing the
-    exemption.  Every streaming query MUST have a budget entry (unlike
+    with the drain-free capture there is no longer a drain cost
+    excusing the exemption.  Every streaming query MUST have a budget entry (unlike
     batch, the streaming set is small enough to require it)."""
     import json
     import os
@@ -327,7 +305,7 @@ def test_streaming_exchange_counts_within_budget(stream_plans):
 def test_streaming_plans_obey_policy(spark):
     """Extends the plan gate to streaming (BACKLOG depth item):
     streaming physical plans only exist per micro-batch, so
-    run_to_memory records each drain's executed plan
+    windows.drain records each drain's executed plan
     (windows.RECENT_PLANS) and this test drains three representative
     queries — plain stateful agg, watermarked out-of-order agg,
     stream-static join — then asserts the same ground rules: no

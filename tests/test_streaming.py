@@ -123,7 +123,7 @@ def test_multibatch_replay_progresses_watermark(spark, sf_oracle_dir):
     queries exist to exercise (a single-batch drain would trivially
     equal the batch answer without testing eviction)."""
     staged, _ = W.stage_events_multibatch(sf_oracle_dir)
-    ev = W.read_staged_stream(spark, staged).withWatermark("ts", "10 minutes")
+    ev = W.read_events_stream(spark, staged, "*.parquet").withWatermark("ts", "10 minutes")
     agg = W.tumbling_counts(ev)
     import shutil
     import tempfile
@@ -324,7 +324,7 @@ def test_checkpoint_restart_exactly_once(
         shutil.copy2(f, replay / os.path.basename(f))  # copy2 keeps mtimes
 
     def drain() -> None:
-        ev = W.read_staged_stream(spark, str(replay))
+        ev = W.read_events_stream(spark, str(replay), "*.parquet")
         q = (
             builder(ev.withWatermark("ts", "10 minutes"))
             .writeStream.outputMode("append")
@@ -410,7 +410,7 @@ def test_checkpoint_restart_exactly_once_python_state(
     out = str(tmp_path / "out")
 
     def drain() -> None:
-        ev = W.read_staged_stream(spark, str(replay)).withWatermark(
+        ev = W.read_events_stream(spark, str(replay), "*.parquet").withWatermark(
             "ts", "1 second"
         )
         q = (
@@ -511,7 +511,7 @@ def test_checkpoint_restart_exactly_once_bucketed_join(
 
     def drain() -> None:
         purchases = (
-            W.read_staged_stream(spark, str(replay))
+            W.read_events_stream(spark, str(replay), "*.parquet")
             .where(F.col("event_type") == "purchase")
             .select(
                 F.col("event_id").alias("purchase_id"),
@@ -521,7 +521,7 @@ def test_checkpoint_restart_exactly_once_bucketed_join(
             .withWatermark("p_ts", "1 hour")
         )
         errors = (
-            W.read_staged_stream(spark, str(replay))
+            W.read_events_stream(spark, str(replay), "*.parquet")
             .where(F.col("event_type") == "error")
             .select(
                 F.col("event_id").alias("error_id"),
@@ -780,3 +780,67 @@ def test_state_rows_per_batch_metric(spark):
     assert any(r["num_rows_total"] > 0 for r in rows)
     assert all({"batch_id", "num_rows_total", "num_rows_updated"} <= set(r) for r in rows)
     assert monitor.state_rows_per_batch("never_drained_sink") == []
+
+
+def _pinned_session_partitions(spark):
+    """Set the session's batch shuffle width to a value that is not
+    STREAM_STATE_PARTITIONS, so a drain that forgets the pin shows."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(W.STREAM_STATE_PARTITIONS + 3))
+    return old
+
+
+def test_foreach_batch_drain_pins_partitions_and_records_progress(spark, sf_dir, tmp_path):
+    """write_foreach_batch drains through windows.drain: every
+    micro-batch runs with STREAM_STATE_PARTITIONS shuffle partitions,
+    the session's own width is back afterwards, and the progress and
+    executed plan are kept under the query name (the output path's
+    last component)."""
+    seen = []
+
+    def recording(batch_df):
+        seen.append(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        return batch_df
+
+    old = _pinned_session_partitions(spark)
+    try:
+        W.write_foreach_batch(
+            W.read_events_stream(spark, sf_dir), str(tmp_path / "fb_pin_sink"),
+            transform=recording,
+        )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(W.STREAM_STATE_PARTITIONS + 3)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert seen and set(seen) == {str(W.STREAM_STATE_PARTITIONS)}, seen
+    progress = W.RECENT_PROGRESS["fb_pin_sink"]
+    assert [p["batchId"] for p in progress] == list(range(len(seen)))
+    assert all(p["name"] == "fb_pin_sink" for p in progress)
+    assert W.RECENT_PLANS["fb_pin_sink"]
+
+
+def test_hot_key_watch_drain_pins_partitions_and_records_progress(spark, sf_dir, monkeypatch):
+    """run_hot_key_watch drains through windows.drain as query
+    ``hot_key_watch``: each batch profile runs with
+    STREAM_STATE_PARTITIONS shuffle partitions, and the progress is
+    kept under that name, one record per profiled batch."""
+    from map_reduce_multi_threaded_spark.streaming import monitor
+
+    seen = []
+    profile = monitor.hot_key_batch_profile
+
+    def recording(batch_df, key_col):
+        seen.append(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        return profile(batch_df, key_col)
+
+    monkeypatch.setattr(monitor, "hot_key_batch_profile", recording)
+    old = _pinned_session_partitions(spark)
+    try:
+        report = monitor.run_hot_key_watch(W.read_events_stream(spark, sf_dir))
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(W.STREAM_STATE_PARTITIONS + 3)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert seen and set(seen) == {str(W.STREAM_STATE_PARTITIONS)}, seen
+    progress = W.RECENT_PROGRESS["hot_key_watch"]
+    assert [p["batchId"] for p in progress] == [b["batch_id"] for b in report["batches"]]
+    assert all(p["name"] == "hot_key_watch" for p in progress)
+    assert W.RECENT_PLANS["hot_key_watch"]
