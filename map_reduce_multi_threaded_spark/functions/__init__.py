@@ -1,6 +1,6 @@
 """Scalar function library (column expressions only — JVM-side,
 whole-stage-codegen friendly; no Python UDFs here)."""
 
-from .text import normalize_token, strip_punct, to_lower, md5_long, md5_bucket
+from .text import ascii_lower, normalize_token, strip_punct, md5_long, md5_bucket
 
-__all__ = ["normalize_token", "strip_punct", "to_lower", "md5_long", "md5_bucket"]
+__all__ = ["ascii_lower", "normalize_token", "strip_punct", "md5_long", "md5_bucket"]

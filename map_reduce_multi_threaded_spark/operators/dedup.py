@@ -29,8 +29,10 @@ from ..functions.text import (
     ascii_lower,
     duck_ascii_lower,
     duck_md5_long,
+    duck_tokens,
     md5_bucket,
     md5_long,
+    tokens,
 )
 
 #: oracle-side casefold fragments, built from the ONE canonical helper so
@@ -82,7 +84,7 @@ def _shingles_from(d: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     share the exact corpus shingle definition."""
     parts = ", ".join(f"t[i+{j}]" for j in range(k))
     return (
-        d.select("doc_id", F.split("text", r"\s+").alias("t"))
+        d.select("doc_id", tokens("text").alias("t"))
         .where(F.size("t") >= k)
         .select(
             "doc_id",
@@ -96,7 +98,7 @@ def _shingles_from(d: DataFrame, k: int = SHINGLE_K) -> DataFrame:
 
 
 _DUCK_SHINGLES = f"""
-  toks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM documents),
+  toks AS (SELECT doc_id, {duck_tokens('text')} AS t FROM documents),
   sh AS (SELECT DISTINCT doc_id, concat_ws(' ', {", ".join(f"t[i+{j+1}]" for j in range(SHINGLE_K))}) AS s
          FROM toks, unnest(generate_series(0, len(t)-{SHINGLE_K})) AS g(i)
          WHERE len(t) >= {SHINGLE_K})
@@ -398,7 +400,7 @@ def dedup_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("txt"),
     )
     lines = (
-        composed.select("doc_id", F.split("txt", r"\s+").alias("t"))
+        composed.select("doc_id", tokens("txt").alias("t"))
         .select(
             "doc_id",
             F.explode(F.expr(f"sequence(1, size(t), {LINE_TOKENS})")).alias("start"),
@@ -453,7 +455,7 @@ WITH composed AS (
                    text) AS txt
   FROM documents
 ),
-toks AS (SELECT doc_id, string_split_regex(txt, '\\s+') AS t FROM composed),
+toks AS (SELECT doc_id, {duck_tokens('txt')} AS t FROM composed),
 lines AS (
   SELECT doc_id, i AS start,
          array_to_string(t[i : i + {LINE_TOKENS - 1}], ' ') AS line,
@@ -970,7 +972,7 @@ batch2 AS (
          regexp_replace(text, '(\\S+)', '\\1~', 'g')
   FROM documents, ib WHERE doc_id % 7 = 0
 ),
-btoks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM batch2),
+btoks AS (SELECT doc_id, {duck_tokens('text')} AS t FROM batch2),
 bsh AS (SELECT DISTINCT doc_id,
                concat_ws(' ', {", ".join(f"t[i+{j + 1}]" for j in range(SHINGLE_K))}) AS s
         FROM btoks, unnest(generate_series(0, len(t)-{SHINGLE_K})) AS g(i)
@@ -1260,7 +1262,7 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     half beyond that), far above any real document."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(F.split("text", r"\s+")).alias("tok")
+        "doc_id", F.explode(tokens("text")).alias("tok")
     ).where(F.length("tok") > 0)
     toks = toks.withColumn("h", md5_long(F.col("tok")))
     half = SIMHASH_BITS // 2
@@ -1287,7 +1289,7 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SIMHASH_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS tok FROM documents
+  SELECT doc_id, unnest({duck_tokens('text')}) AS tok FROM documents
 ),
 hashed AS (SELECT doc_id, {duck_md5_long('tok')} AS h FROM toks WHERE length(tok) > 0),
 votes AS (

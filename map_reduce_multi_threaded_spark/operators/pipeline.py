@@ -20,7 +20,9 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from ..functions.text import ascii_lower, duck_ascii_lower
+from ..functions.text import (
+    WS_RE, ascii_lower, duck_ascii_lower, duck_tokens, tokens, words_sql,
+)
 
 #: oracle-side casefold fragments from the ONE canonical helper (ADVICE r11)
 _DUCK_LC_TEXT = duck_ascii_lower("trim(text, ' ')")
@@ -48,7 +50,7 @@ def pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     both = d.unionByName(batch2)
 
-    toks = F.split("text", r"\s+")
+    toks = tokens("text")
     quality = both.where(
         (F.size(toks) >= 5) & (F.col("lang").isin(*KEEP_LANGS))
     )
@@ -77,7 +79,7 @@ WITH two_batches AS (
 ),
 quality AS (
   SELECT * FROM two_batches
-  WHERE len(string_split_regex(text, '\\s+')) >= 5
+  WHERE len({duck_tokens('text')}) >= 5
     AND lang IN {KEEP_LANGS!r}
 ),
 deduped AS (
@@ -87,7 +89,7 @@ deduped AS (
   ) WHERE rn = 1
 )
 SELECT source, lang, count(*) AS n_docs,
-       CAST(sum(len(string_split_regex(text, '\\s+'))) AS BIGINT) AS n_tokens
+       CAST(sum(len({duck_tokens('text')})) AS BIGINT) AS n_tokens
 FROM deduped GROUP BY source, lang
 """
 
@@ -102,7 +104,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ln is libm-dependent), tie-broken by doc_id downstream."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(F.split("text", r"\s+")).alias("term")
+        "doc_id", F.explode(tokens("text")).alias("term")
     ).where(F.length("term") > 0)
     doclen = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = doclen.agg(
@@ -150,7 +152,7 @@ def bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: shared retrieval CTE chain (toks → scored), reused by the plain
 #: BM25 oracle and the rerank oracle
 _BM25_CTES = f"""toks AS (
-  SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS term FROM documents
+  SELECT doc_id, unnest({duck_tokens('text')}) AS term FROM documents
 ),
 toks_f AS (SELECT * FROM toks WHERE length(term) > 0),
 doclen AS (SELECT doc_id, count(*) AS dl FROM toks_f GROUP BY doc_id),
@@ -228,7 +230,7 @@ def rerank_crossencoder(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # Unicode-aware and splits NBSP/U+3000 that the JVM and
                 # RE2 \s do not; round-11 catch), empties dropped, no
                 # case folding
-                lst = [w for w in re.split(r"\s+", text, flags=re.ASCII) if w]
+                lst = [w for w in re.split(WS_RE, text, flags=re.ASCII) if w]
                 s = 0
                 for t in terms:
                     occ = sum(1 for w in lst if w == t)
@@ -275,7 +277,7 @@ feat AS (
          CAST({_RERANK_FEATURES} AS BIGINT) AS rerank_score
   FROM cand c JOIN (
     SELECT doc_id,
-           list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS lst
+           list_filter({duck_tokens('text')}, x -> x <> '') AS lst
     FROM documents) d USING (doc_id)
 )
 SELECT rank, doc_id, rerank_score, bm25 FROM (
@@ -328,7 +330,7 @@ def rerank_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     ctoks = (
         docs.join(F.broadcast(cand), "doc_id")
-        .select("doc_id", F.explode(F.split("text", r"\s+")).alias("term"))
+        .select("doc_id", F.explode(tokens("text")).alias("term"))
         .where(F.length("term") > 0)
         .distinct()
         .localCheckpoint()
@@ -603,7 +605,7 @@ def tfidf_cosine_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     |BM25_QUERY_TERMS|) are broadcast."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(F.split("text", r"\s+")).alias("term")
+        "doc_id", F.explode(tokens("text")).alias("term")
     ).where(F.length("term") > 0)
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
@@ -670,7 +672,7 @@ def tfidf_cosine_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TFIDF_COSINE_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS term FROM documents
+  SELECT doc_id, unnest({duck_tokens('text')}) AS term FROM documents
 ),
 toks_f AS (SELECT * FROM toks WHERE length(term) > 0),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM toks_f GROUP BY doc_id, term),
@@ -720,7 +722,7 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(F.split("text", r"\s+")).cast("long").alias("n_tokens"),
+        F.size(tokens("text")).cast("long").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("source")
@@ -739,7 +741,7 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_ORACLE = f"""
 WITH sized AS (
   SELECT doc_id, source,
-         CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS n_tokens
+         CAST(len({duck_tokens('text')}) AS BIGINT) AS n_tokens
   FROM documents
 ),
 c AS (
@@ -967,7 +969,7 @@ def pipeline_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.length("text").alias("n_chars"),
-        F.size(F.split("text", r"\s+")).alias("n_tokens"),
+        F.size(tokens("text")).alias("n_tokens"),
     )
     cum = two_pass_cumsum(
         d,
@@ -990,7 +992,7 @@ def pipeline_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BUDGET_SELECT_ORACLE = f"""
 WITH d AS (
   SELECT doc_id, length(text) AS n_chars,
-         len(string_split_regex(text, '\\s+')) AS n_tokens
+         len({duck_tokens('text')}) AS n_tokens
   FROM documents
 ),
 cum AS (
@@ -1203,7 +1205,7 @@ def pipeline_rag_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import md5_bucket, py_md5_bucket
 
     d = load_table(spark, sf_dir, "documents")
-    t = d.select("doc_id", F.split("text", r"\s+").alias("t"))
+    t = d.select("doc_id", tokens("text").alias("t"))
     starts = F.expr(f"sequence(0, size(t) - 1, {RAG_CHUNK_STRIDE})")
     chunks = t.select(
         "doc_id", F.posexplode(starts).alias("chunk_idx", "start"), "t"
@@ -1256,7 +1258,7 @@ def _rag_oracle() -> str:
     qlist = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
     return f"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM documents
+  SELECT doc_id, {duck_tokens('text')} AS t FROM documents
 ),
 chunks AS (
   SELECT doc_id, t,
@@ -1494,7 +1496,7 @@ def pipeline_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     per_doc = d.select(
         "source",
-        F.expr(r"size(filter(split(text, '\\s+'), x -> length(x) > 0))").alias(
+        F.expr(f"size({words_sql('text')})").alias(
             "n"
         ),
     )
@@ -1519,7 +1521,7 @@ def pipeline_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MIXTURE_WEIGHTS_ORACLE = f"""
 WITH per_src AS (
   SELECT source,
-         CAST(sum(len(list_filter(string_split_regex(text, '\\s+'),
+         CAST(sum(len(list_filter({duck_tokens('text')},
                                   x -> x <> ''))) AS BIGINT) AS n_tokens
   FROM documents GROUP BY source
 )
@@ -1770,7 +1772,7 @@ def pipeline_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import md5_long
 
     d = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split("text", r"\s+"))
+    n_tokens = F.size(tokens("text"))
     w = F.least(n_tokens, F.lit(IMP_CAP))
     accept = md5_long(F.col("doc_id"), salt="imp") % IMP_CAP < w
     return (
@@ -1785,11 +1787,11 @@ def _importance_sample_oracle() -> str:
     h = duck_md5_long("CAST(doc_id AS VARCHAR)", salt="imp")
     return f"""
 SELECT doc_id,
-       len(string_split_regex(text, '\\s+')) AS n_tokens,
-       least(len(string_split_regex(text, '\\s+')), {IMP_CAP}) AS weight
+       len({duck_tokens('text')}) AS n_tokens,
+       least(len({duck_tokens('text')}), {IMP_CAP}) AS weight
 FROM documents
 WHERE {h} % {IMP_CAP}
-      < least(len(string_split_regex(text, '\\s+')), {IMP_CAP})
+      < least(len({duck_tokens('text')}), {IMP_CAP})
 """
 
 
@@ -1813,8 +1815,7 @@ def pipeline_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "doc_id",
             F.expr(
-                r"cast(size(array_distinct(filter(split(text, '\\s+'), "
-                r"x -> length(x) > 0))) as bigint)"
+                f"cast(size(array_distinct({words_sql('text')})) as bigint)"
             ).alias("score"),
         )
     )
@@ -1836,10 +1837,10 @@ def pipeline_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PREFERENCE_PAIRS_ORACLE = """
+_PREFERENCE_PAIRS_ORACLE = f"""
 WITH scored AS (
   SELECT source, doc_id,
-         CAST(len(list_distinct(list_filter(string_split_regex(text, '\\s+'),
+         CAST(len(list_distinct(list_filter({duck_tokens('text')},
               x -> length(x) > 0))) AS BIGINT) AS score
   FROM documents
 ),

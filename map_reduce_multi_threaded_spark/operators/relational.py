@@ -31,12 +31,15 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..functions.text import ascii_lower, duck_ascii_lower, duck_md5_long
+from ..functions.text import (
+    ascii_lower, duck_ascii_lower, duck_md5_long, duck_tokens, tokens,
+)
 
 #: oracle-side casefold fragment from the ONE canonical helper (ADVICE r11)
 _DUCK_LC_TEXT = duck_ascii_lower("text")
 from ..registry import QuerySpec
 from ..sources.tables import load_table, staged
+from ..streaming import windows as W
 
 # --------------------------------------------------------------------------
 # deterministic aggregate helpers (Spark side)
@@ -1553,49 +1556,12 @@ WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 10 = 0
 
 def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute tumbling window counts per event type."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-_EVENTS_TUMBLING_ORACLE = f"""
-SELECT strftime(time_bucket(INTERVAL '10 minutes', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type, count(*) AS n_events, {osum('value', 'sum_value')}
-FROM events GROUP BY 1, 2
-"""
+    return W.tumbling_counts(load_table(spark, sf_dir, "events"))
 
 
 def events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """10-minute windows sliding every 5 — each event lands in 2
-    windows; Spark's window() generates them without self-joins."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "n_events",
-        )
-    )
-
-
-# each event belongs to windows starting at bucket(ts,5m) and bucket(ts,5m)-5m
-_EVENTS_SLIDING_ORACLE = """
-SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start, count(*) AS n_events
-FROM (
-  SELECT unnest([time_bucket(INTERVAL '5 minutes', ts),
-                 time_bucket(INTERVAL '5 minutes', ts) - INTERVAL '5 minutes']) AS ws
-  FROM events
-) GROUP BY 1
-"""
+    """10-minute windows sliding every 5."""
+    return W.sliding_counts(load_table(spark, sf_dir, "events"))
 
 
 def events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1604,41 +1570,7 @@ def events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's session_window handles merge logic natively; the DuckDB
     oracle derives the same sessions via gaps-and-islands (lag +
     cumulative sum)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("session_start"),
-            "n_events",
-        )
-    )
-
-
-_EVENTS_SESSION_ORACLE = """
-WITH flagged AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   > INTERVAL '30 minutes'
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-), sessions AS (
-  -- event_id tiebreak required: with tied timestamps a ts-only ROWS
-  -- frame places the new_session=1 row at an arbitrary position inside
-  -- the tie group and splits the session (round-11 frozen-time 12x
-  -- catch on the shared streaming spelling, queries.py:_SESSION_ORACLE)
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM flagged
-)
-SELECT user_id,
-       strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-       count(*) AS n_events
-FROM sessions GROUP BY user_id, session_id
-"""
+    return W.session_counts(load_table(spark, sf_dir, "events"))
 
 
 def events_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2891,7 +2823,7 @@ def sql_collated_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents", cpu_heavy=True)
         .select(
-            "doc_id", F.posexplode(F.split("text", r"\s+")).alias("pos", "term")
+            "doc_id", F.posexplode(tokens("text")).alias("pos", "term")
         )
         .where(F.length("term") > 0)
     )
@@ -2921,7 +2853,7 @@ def _collated_wordcount_oracle() -> str:
 WITH toks AS (
   SELECT doc_id, s.pos AS pos, s.term AS term
   FROM (SELECT doc_id,
-               unnest(list_transform(string_split_regex(text, '\\s+'),
+               unnest(list_transform({duck_tokens('text')},
                       (x, i) -> {{'term': x, 'pos': i}})) AS s
         FROM documents) u
 ),
@@ -6720,7 +6652,7 @@ def agg_approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is what ``est_exact`` would then surface as false."""
     toks = (
         load_table(spark, sf_dir, "documents")
-        .select(F.explode(F.split(ascii_lower("text"), r"\s+")).alias("w"))
+        .select(F.explode(tokens(ascii_lower("text"))).alias("w"))
         .where(F.col("w") != "")
     )
     cand = (
@@ -6747,7 +6679,7 @@ def agg_approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _APPROX_TOPK_ORACLE = f"""
 SELECT w AS word, count(*) AS exact_count, TRUE AS est_exact
-FROM (SELECT unnest(string_split_regex({_DUCK_LC_TEXT}, '\\s+')) AS w
+FROM (SELECT unnest({duck_tokens(_DUCK_LC_TEXT)}) AS w
       FROM documents) t
 WHERE w <> ''
 GROUP BY w
@@ -6793,7 +6725,7 @@ def agg_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     toks = (
         load_table(spark, sf_dir, "documents", cpu_heavy=True)
-        .select(F.explode(F.split(ascii_lower("text"), r"\s+")).alias("w"))
+        .select(F.explode(tokens(ascii_lower("text"))).alias("w"))
         .where(F.col("w") != "")
     )
     votes = F.explode(
@@ -6865,7 +6797,7 @@ def _countmin_oracle() -> str:
     )
     return f"""
 WITH tf AS (
-  SELECT w FROM (SELECT unnest(string_split_regex({_DUCK_LC_TEXT}, '\\s+')) AS w
+  SELECT w FROM (SELECT unnest({duck_tokens(_DUCK_LC_TEXT)}) AS w
                  FROM documents) t
   WHERE w <> ''
 ),
@@ -6940,9 +6872,9 @@ SPECS = [
     QuerySpec("scalar_array", scalar_array, _SCALAR_ARRAY_ORACLE, "array functions (embeddings)"),
     QuerySpec("scalar_array_hof", scalar_array_hof, _SCALAR_ARRAY_HOF_ORACLE, "array higher-order functions (filter/exists/forall/fold)"),
     QuerySpec("sample_deterministic", sample_deterministic, _SAMPLE_ORACLE, "hash-based deterministic sampling"),
-    QuerySpec("events_tumbling", events_tumbling, _EVENTS_TUMBLING_ORACLE, "tumbling event-time windows (batch)"),
-    QuerySpec("events_sliding", events_sliding, _EVENTS_SLIDING_ORACLE, "sliding event-time windows (batch)"),
-    QuerySpec("events_session", events_session, _EVENTS_SESSION_ORACLE, "session windows (batch)"),
+    QuerySpec("events_tumbling", events_tumbling, W.TUMBLING_ORACLE, "tumbling event-time windows (batch)"),
+    QuerySpec("events_sliding", events_sliding, W.SLIDING_ORACLE, "sliding event-time windows (batch)"),
+    QuerySpec("events_session", events_session, W.SESSION_ORACLE, "session windows (batch)"),
     QuerySpec("events_session_dynamic_gap", events_session_dynamic_gap,
               _SESSION_DYNAMIC_ORACLE,
               "session windows with a per-row gap expression (interval-union "

@@ -15,7 +15,10 @@ from __future__ import annotations
 import pandas as pd  # module-level: pandas_udf type-hint resolution
 import pyspark.sql.functions as F
 
-from ..functions.text import ascii_lower, duck_ascii_lower
+from ..functions.text import (
+    ascii_lower, duck_ascii_lower, duck_strip_punct, duck_tokens, duck_word_ngrams,
+    duck_words, strip_punct, tokens, word_ngrams, words, words_sql,
+)
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import QuerySpec
@@ -49,7 +52,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a fixed priority chain (first language in sorted order wins
     ties) so the prediction is deterministic on every engine."""
     d = load_table(spark, sf_dir, "documents")
-    d = d.select("doc_id", "lang", F.split("text", r"\s+").alias("t"))
+    d = d.select("doc_id", "lang", tokens("text").alias("t"))
     for lang, markers in LANG_MARKERS.items():
         inlist = ", ".join(f"'{w}'" for w in markers)
         d = d.withColumn(f"s_{lang}", F.expr(f"size(filter(t, x -> x in ({inlist})))"))
@@ -73,7 +76,7 @@ def _langid_oracle() -> str:
     for lang in reversed(langs):
         chain = f"CASE WHEN s_{lang} = {best} THEN '{lang}' ELSE {chain} END"
     return f"""
-WITH toks AS (SELECT doc_id, lang, string_split_regex(text, '\\s+') AS t FROM documents),
+WITH toks AS (SELECT doc_id, lang, {duck_tokens('text')} AS t FROM documents),
 scored AS (
   SELECT doc_id, lang,
        {score_exprs}
@@ -94,11 +97,11 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep/drop flag — the first filter stage of a training-data
     pipeline."""
     d = load_table(spark, sf_dir, "documents")
-    d = d.select("doc_id", "text", F.split("text", r"\s+").alias("t"))
+    d = d.select("doc_id", "text", tokens("text").alias("t"))
     n_chars = F.length("text")
     n_tokens = F.size("t")
     sum_tok_len = F.expr("aggregate(t, 0, (acc, x) -> acc + length(x))")
-    n_punct = n_chars - F.length(F.regexp_replace("text", r"\p{Punct}", ""))
+    n_punct = n_chars - F.length(strip_punct("text"))
     inlist = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
     n_stop = F.expr(f"size(filter(t, x -> x in ({inlist})))")
     avg_tok = sum_tok_len / n_tokens
@@ -107,7 +110,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Define punct_ratio of empty text as 0.0 — identical exact
     # predicate on both engines, and it keeps the column non-NULL so
     # downstream ordering/filters never hit engine NULL-order skew.
-    # n_tokens is never 0: split('', '\s+') is [''] on both engines.
+    # n_tokens is never 0: tokens('') is [''] on both engines.
     punct_ratio = F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0))
     stop_ratio = n_stop / n_tokens
     keep = (
@@ -129,16 +132,16 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _QUALITY_ORACLE = f"""
-WITH toks AS (SELECT doc_id, text, string_split_regex(text, '\\s+') AS t FROM documents)
+WITH toks AS (SELECT doc_id, text, {duck_tokens('text')} AS t FROM documents)
 SELECT doc_id,
        length(text) AS n_chars,
        len(t) AS n_tokens,
        list_sum(list_transform(t, x -> length(x))) * 1.0 / len(t) AS avg_token_len,
-       CASE WHEN length(text) > 0 THEN (length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) * 1.0 / length(text) ELSE 0.0 END AS punct_ratio,
+       CASE WHEN length(text) > 0 THEN (length(text) - length({duck_strip_punct('text')})) * 1.0 / length(text) ELSE 0.0 END AS punct_ratio,
        len(list_filter(t, x -> x IN ({_sql_list(EN_STOPWORDS)}))) * 1.0 / len(t) AS stopword_ratio,
        (len(t) >= 5 AND len(t) <= 100000
         AND list_sum(list_transform(t, x -> length(x))) * 1.0 / len(t) BETWEEN 2 AND 20
-        AND CASE WHEN length(text) > 0 THEN (length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) * 1.0 / length(text) ELSE 0.0 END <= 0.2)
+        AND CASE WHEN length(text) > 0 THEN (length(text) - length({duck_strip_punct('text')})) * 1.0 / length(text) ELSE 0.0 END <= 0.2)
          AS keep
 FROM toks
 """
@@ -157,7 +160,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        F.size(F.split("text", r"\s+")).alias("n_ws_tokens"),
+        F.size(tokens("text")).alias("n_ws_tokens"),
         F.size(F.regexp_extract_all("text", F.lit(BPE_RE), 0)).alias("n_bpe_tokens"),
         F.length("text").alias("n_chars"),
     )
@@ -165,7 +168,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TOKEN_COUNT_ORACLE = f"""
 SELECT doc_id,
-       len(string_split_regex(text, '\\s+')) AS n_ws_tokens,
+       len({duck_tokens('text')}) AS n_ws_tokens,
        len(regexp_extract_all(text, '{BPE_RE}')) AS n_bpe_tokens,
        length(text) AS n_chars
 FROM documents
@@ -272,7 +275,7 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     one explode, no shuffle, no Python.  At 100 TB this is a narrow
     map whose output feeds tokenize/pack stages downstream."""
     d = load_table(spark, sf_dir, "documents")
-    d = d.select("doc_id", F.split("text", r"\s+").alias("t")).where(F.size("t") > 0)
+    d = d.select("doc_id", tokens("text").alias("t")).where(F.size("t") > 0)
     starts = F.expr(f"sequence(0, size(t) - 1, {CHUNK_STRIDE})")
     return (
         d.select("doc_id", "t", F.size("t").alias("n_tokens"), F.posexplode(starts).alias("chunk_idx", "start"))
@@ -287,8 +290,8 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CHUNKING_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM documents
-  WHERE len(string_split_regex(text, '\\s+')) > 0
+  SELECT doc_id, {duck_tokens('text')} AS t FROM documents
+  WHERE len({duck_tokens('text')}) > 0
 ),
 chunks AS (
   SELECT doc_id, t, len(t) AS n_tokens,
@@ -315,7 +318,7 @@ def text_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf-idf is rounded to 9 dp before ranking so libm ln() last-ulp
     differences can't reorder ties across engines."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.split("text", r"\s+")).alias("term")).where(
+    toks = d.select("doc_id", F.explode(tokens("text")).alias("term")).where(
         F.length("term") > 0
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -334,9 +337,9 @@ def text_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TFIDF_ORACLE = """
+_TFIDF_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS term FROM documents
+  SELECT doc_id, unnest({duck_tokens('text')}) AS term FROM documents
 ),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM toks WHERE length(term) > 0 GROUP BY 1, 2),
 df AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks WHERE length(term) > 0 GROUP BY 1),
@@ -369,7 +372,7 @@ def text_quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is 0 (ANSI 0/0 on Spark, NULL-order skew in the window otherwise)
     punct_ratio = F.when(
         F.length("text") > 0,
-        (F.length("text") - F.length(F.regexp_replace("text", r"\p{Punct}", "")))
+        (F.length("text") - F.length(strip_punct("text")))
         / F.length("text"),
     ).otherwise(F.lit(0.0))
     w = Window.partitionBy("lang").orderBy("punct_ratio", "doc_id")
@@ -381,11 +384,11 @@ def text_quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QUANTILE_FILTER_ORACLE = """
+_QUANTILE_FILTER_ORACLE = f"""
 WITH scored AS (
   SELECT doc_id, lang,
          CASE WHEN length(text) > 0 THEN
-           (length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g'))) * 1.0
+           (length(text) - length({duck_strip_punct('text')})) * 1.0
            / length(text) ELSE 0.0 END AS punct_ratio
   FROM documents
 ),
@@ -428,7 +431,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
     toks = (
         d.select(
-            "doc_id", F.posexplode(F.split("text", r"\s+")).alias("p", "term")
+            "doc_id", F.posexplode(tokens("text")).alias("p", "term")
         )
         .where(F.length("term") > 0)
         .where(~F.expr(f"term IN ({stop})"))
@@ -475,7 +478,7 @@ def _rake_oracle() -> str:
 WITH toks AS (
   SELECT doc_id, s['p'] AS p, s['term'] AS term FROM (
     SELECT doc_id,
-           unnest(list_transform(string_split_regex(text, '\\s+'),
+           unnest(list_transform({duck_tokens('text')},
                   (x, i) -> {{'p': i - 1, 'term': x}})) AS s
     FROM documents)
   WHERE length(s['term']) > 0 AND s['term'] NOT IN ({stop})
@@ -543,7 +546,7 @@ def text_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = (
         d.select(
             "doc_id",
-            F.expr("filter(split(text, '\\\\s+'), x -> length(x) > 0)").alias("ts"),
+            words("text").alias("ts"),
         )
         .where(F.expr(f"size(ts) >= {SPAN_G}"))
         .select(
@@ -589,7 +592,7 @@ def text_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DUP_SPANS_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
+  SELECT doc_id, list_filter({duck_tokens('text')},
                              x -> length(x) > 0) AS ts
   FROM documents
 ),
@@ -634,22 +637,22 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     all integer math, so bit-identical on every engine."""
     d = load_table(spark, sf_dir, "documents")
     tok_vals = (
-        "transform(filter(split(text, '\\\\s+'), x -> length(x) > 0), "
+        f"transform({words_sql('text')}, "
         "t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT) % 256)"
     )
     fp = F.expr(
         f"aggregate({tok_vals}, 0L, (acc, v) -> (acc * {ROLL_BASE} + v) % {ROLL_MOD})"
     )
-    n_tok = F.expr("size(filter(split(text, '\\\\s+'), x -> length(x) > 0))").cast("long")
+    n_tok = F.expr(f"size({words_sql('text')})").cast("long")
     return d.select("doc_id", n_tok.alias("n_tokens"), fp.alias("fingerprint"))
 
 
 _ROLLING_ORACLE = f"""
 SELECT doc_id,
-       CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0)) AS BIGINT) AS n_tokens,
+       CAST(len({duck_words('text')}) AS BIGINT) AS n_tokens,
        list_reduce(
          list_prepend(0, list_transform(
-           list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0),
+           {duck_words('text')},
            t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 256)),
          (acc, v) -> (acc * {ROLL_BASE} + v) % {ROLL_MOD}) AS fingerprint
 FROM documents
@@ -750,18 +753,14 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     training gram stream joins against it map-side — no shuffle of the
     big side.  The final per-doc count-distinct is a keyed agg over
     only the matching grams (223 rows at sf0.01, not 250k)."""
-    grams_expr = (
-        "transform(sequence(1, size(t) - {n1}), "
-        "i -> array_join(slice(t, i, {n}), ' '))"
-    ).format(n=DECON_N, n1=DECON_N - 1)
     toks = (
         load_table(spark, sf_dir, "documents", cpu_heavy=True)
         .select(
             "doc_id",
-            F.expr(r"filter(split(text, '\\s+'), x -> length(x) > 0)").alias("t"),
+            words("text").alias("t"),
         )
         .where(F.expr(f"size(t) >= {DECON_N}"))
-        .select("doc_id", F.explode(F.expr(grams_expr)).alias("gram"))
+        .select("doc_id", F.explode(word_ngrams("t", DECON_N)).alias("gram"))
     )
     bench = (
         toks.where(F.col("doc_id") % DECON_MOD == 0)
@@ -778,13 +777,12 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DECON_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0) AS t
+         {duck_words('text')} AS t
   FROM documents
 ),
 grams AS (
   SELECT doc_id,
-         unnest(list_transform(generate_series(1, len(t) - {DECON_N - 1}),
-                i -> array_to_string(t[i:i + {DECON_N - 1}], ' '))) AS gram
+         unnest({duck_word_ngrams('t', DECON_N)}) AS gram
   FROM toks WHERE len(t) >= {DECON_N}
 ),
 bench AS (SELECT DISTINCT gram FROM grams WHERE doc_id % {DECON_MOD} = 0)
@@ -811,15 +809,11 @@ def text_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE keyed aggregation with map-side partials; the support filter
     prunes the long tail AFTER the final agg (it cannot be pushed
     below it), keeping the output the head of the Zipf curve."""
-    grams_expr = (
-        "transform(sequence(1, size(t) - {n1}), "
-        "i -> array_join(slice(t, i, {n}), ' '))"
-    ).format(n=DECON_N, n1=DECON_N - 1)
     return (
         load_table(spark, sf_dir, "documents", cpu_heavy=True)
-        .select(F.expr(r"filter(split(text, '\\s+'), x -> length(x) > 0)").alias("t"))
+        .select(words("text").alias("t"))
         .where(F.expr(f"size(t) >= {DECON_N}"))
-        .select(F.explode(F.expr(grams_expr)).alias("gram"))
+        .select(F.explode(word_ngrams("t", DECON_N)).alias("gram"))
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("n"))
         .where(F.col("n") >= NGRAM_MIN_SUPPORT)
@@ -828,12 +822,11 @@ def text_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _NGRAM_COUNTS_ORACLE = f"""
 WITH toks AS (
-  SELECT list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0) AS t
+  SELECT {duck_words('text')} AS t
   FROM documents
 ),
 grams AS (
-  SELECT unnest(list_transform(generate_series(1, len(t) - {DECON_N - 1}),
-                i -> array_to_string(t[i:i + {DECON_N - 1}], ' '))) AS gram
+  SELECT unnest({duck_word_ngrams('t', DECON_N)}) AS gram
   FROM toks WHERE len(t) >= {DECON_N}
 )
 SELECT gram, count(*) AS n FROM grams GROUP BY gram
@@ -863,20 +856,13 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents", cpu_heavy=True)
         .select(
             "doc_id",
-            F.expr(r"filter(split(text, '\\s+'), x -> length(x) > 0)").alias("t"),
+            words("text").alias("t"),
         )
         .where(F.expr(f"size(t) >= {DECON_N}"))
         .select(
             "doc_id",
             F.explode(
-                F.array_distinct(
-                    F.expr(
-                        "transform(sequence(1, size(t) - {n1}), "
-                        "i -> array_join(slice(t, i, {n}), ' '))".format(
-                            n=DECON_N, n1=DECON_N - 1
-                        )
-                    )
-                )
+                F.array_distinct(word_ngrams("t", DECON_N))
             ).alias("gram"),
         )
     )
@@ -899,13 +885,12 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NGRAM_NOVELTY_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0) AS t
+         {duck_words('text')} AS t
   FROM documents
 ),
 grams AS (
   SELECT DISTINCT doc_id,
-         unnest(list_transform(generate_series(1, len(t) - {DECON_N - 1}),
-                i -> array_to_string(t[i:i + {DECON_N - 1}], ' '))) AS gram
+         unnest({duck_word_ngrams('t', DECON_N)}) AS gram
   FROM toks WHERE len(t) >= {DECON_N}
 ),
 freq AS (SELECT gram, count(*) AS n_docs FROM grams GROUP BY gram)
@@ -934,18 +919,14 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     its distinct count, and the ratio all evaluate inside codegen per
     row, no explode and NO shuffle at all (contrast
     :func:`text_decontaminate`, which must explode to join)."""
-    grams_expr = (
-        "transform(sequence(1, size(t) - {n1}), "
-        "i -> array_join(slice(t, i, {n}), ' '))"
-    ).format(n=REP_N, n1=REP_N - 1)
     return (
         load_table(spark, sf_dir, "documents", cpu_heavy=True)
         .select(
             "doc_id",
-            F.expr(r"filter(split(text, '\\s+'), x -> length(x) > 0)").alias("t"),
+            words("text").alias("t"),
         )
         .where(F.expr(f"size(t) >= {REP_N}"))
-        .select("doc_id", F.expr(grams_expr).alias("g"))
+        .select("doc_id", word_ngrams("t", REP_N).alias("g"))
         .select(
             "doc_id",
             F.expr("size(g)").cast("int").alias("n_grams"),
@@ -963,7 +944,7 @@ WITH g AS (
          list_transform(generate_series(1, len(t) - {REP_N - 1}),
                         i -> array_to_string(t[i:i + {REP_N - 1}], ' ')) AS grams
   FROM (SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0) AS t
+               {duck_words('text')} AS t
         FROM documents)
   WHERE len(t) >= {REP_N}
 )
@@ -993,7 +974,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     division is final."""
     d = load_table(spark, sf_dir, "documents", cpu_heavy=True).select(
         "doc_id",
-        F.expr(r"filter(split(text, '\\s+'), x -> length(x) > 0)").alias("t"),
+        words("text").alias("t"),
     )
     vocab = (
         d.select(F.explode("t").alias("tok"))
@@ -1023,7 +1004,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VOCAB_COVERAGE_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(text, '\\s+'), x -> length(x) > 0) AS t
+         {duck_words('text')} AS t
   FROM documents
 ),
 vocab AS (
@@ -1063,7 +1044,7 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     on bounded keys."""
     toks = (
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(F.split(ascii_lower("text"), r"\s+")).alias("w"))
+        .select("doc_id", F.explode(tokens(ascii_lower("text"))).alias("w"))
         .where(F.col("w") != "")
     )
     counts = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
@@ -1088,7 +1069,7 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RARITY_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, w FROM (
-    SELECT doc_id, unnest(string_split_regex({_DUCK_LC_TEXT}, '\\s+')) AS w
+    SELECT doc_id, unnest({duck_tokens(_DUCK_LC_TEXT)}) AS w
     FROM documents
   ) WHERE w <> ''
 ),
@@ -1130,7 +1111,7 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     two count tables; scoring is pure joins."""
     d = load_table(spark, sf_dir, "documents", cpu_heavy=True).select(
         "doc_id",
-        F.expr(r"filter(split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '\\s+'), x -> length(x) > 0)").alias("t"),
+        words(duck_ascii_lower("text")).alias("t"),
     )
     bi = (
         d.where(F.size("t") >= 2)
@@ -1182,7 +1163,7 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LM_PERPLEXITY_ORACLE = f"""
 WITH d AS (
   SELECT doc_id,
-         list_filter(string_split_regex({_DUCK_LC_TEXT}, '\\s+'),
+         list_filter({duck_tokens(_DUCK_LC_TEXT)},
                      x -> length(x) > 0) AS t
   FROM documents
 ),
@@ -1329,7 +1310,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import md5_bucket
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.split("text", r"\s+")).alias("tok"))
+    toks = d.select("doc_id", F.explode(tokens("text")).alias("tok"))
     b = toks.select(
         "doc_id", md5_bucket(F.col("tok"), N_HASH_FEATURES, salt="feat").alias("b")
     )
@@ -1351,7 +1332,7 @@ def _feature_hashing_oracle() -> str:
     )
     return f"""
 WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS tok FROM documents
+  SELECT doc_id, unnest({duck_tokens('text')}) AS tok FROM documents
 ),
 bucketed AS (SELECT doc_id, {bucket} AS b FROM toks)
 SELECT doc_id,

@@ -20,6 +20,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.text import WS_RE, duck_tokens
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 
@@ -158,9 +159,9 @@ def udtf_top_terms_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
             import re
             from collections import Counter
 
-            # ASCII \s+ split — NOT str.split(): the engine-wide
+            # ASCII WS_RE split — NOT str.split(): the engine-wide
             # tokenization contract (see udf_arrow_scalar)
-            toks = [w for w in re.split(r"\s+", text or "", flags=re.ASCII) if w]
+            toks = [w for w in re.split(WS_RE, text or "", flags=re.ASCII) if w]
             top = sorted(Counter(toks).items(), key=lambda kv: (-kv[1], kv[0]))
             vals = [t for t, _ in top[:n]]
             yield tuple(vals + [None] * (n - len(vals)))
@@ -177,7 +178,7 @@ def udtf_top_terms_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _UDTF_POLY_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS term FROM documents
+  SELECT doc_id, unnest({duck_tokens('text')}) AS term FROM documents
 ),
 c AS (
   SELECT doc_id, term, count(*) AS n FROM toks
@@ -347,7 +348,7 @@ def udf_arrow_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The function counts whitespace tokens — deliberately
     SQL-expressible so the Arrow path itself is oracle-gated.
-    Tokenization is the engine-wide ASCII ``\\s+`` contract: plain
+    Tokenization is the engine-wide contract (``functions/text.py``): plain
     ``str.split()`` is UNICODE-whitespace-aware in Python (it splits
     on NBSP/U+3000 that neither Java nor RE2 ``\\s`` matches — found
     by the round-11 adversarial-text sweep), so the UDF splits with
@@ -358,15 +359,15 @@ def udf_arrow_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     def n_tokens(text: str) -> int:
         import re
 
-        return len([w for w in re.split(r"\s+", text, flags=re.ASCII) if w])
+        return len([w for w in re.split(WS_RE, text, flags=re.ASCII) if w])
 
     d = load_table(spark, sf_dir, "documents")
     return d.select("doc_id", n_tokens("text").alias("n_tokens"))
 
 
-_UDF_ARROW_ORACLE = """
+_UDF_ARROW_ORACLE = f"""
 SELECT doc_id,
-       CAST(len(list_filter(string_split_regex(text, '\\s+'),
+       CAST(len(list_filter({duck_tokens('text')},
                             x -> x <> '')) AS INTEGER) AS n_tokens
 FROM documents
 """

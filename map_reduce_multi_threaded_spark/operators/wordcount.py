@@ -8,9 +8,9 @@ reference stage (cite)                     here
 ========================================  =====================================
 S1/S4 dir scan + tokenize (:477-495,      ``documents.text`` scan +
 :152-159)                                  ``split/explode``
-S5 punct strip (:160-165)                  ``regexp_replace(\\p{Punct})``
+S5 punct strip (:160-165)                  ``strip_punct``
 S6 drop-empty filter (:166)                ``where(length>0)``
-S7 lowercase (:167)                        ``lower``
+S7 lowercase (:167)                        ``ascii_lower``
 S8 emit (word,1) (:168-171)                implicit in ``groupBy().count()``
 S9 reader→mapper queue (:72-115)           whole-stage codegen pipelining
 S10 partial agg, 1024 bins (:191-236)      partial HashAggregate (automatic)
@@ -42,10 +42,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.text import duck_ascii_lower, normalize_token
+from ..functions.text import (
+    duck_ascii_lower, duck_strip_punct, duck_tokens, normalize_token, tokens,
+)
 from ..registry import QuerySpec
 from ..sources.tables import load_table
-from ..sources.text import tokens_from_text
 
 
 def _normalized_counts(raw_tokens: DataFrame, tok_col: str = "tok") -> DataFrame:
@@ -85,7 +86,7 @@ def _counts_of(lines: DataFrame, text_col: str, passes: int) -> DataFrame:
     count is 8× the true frequency".  Implemented as a crossJoin with a
     broadcast N-row range: no data duplication on disk, no extra scan.
     """
-    toks = lines.select(F.explode(tokens_from_text(F.col(text_col))).alias("tok"))
+    toks = lines.select(F.explode(tokens(F.col(text_col))).alias("tok"))
     if passes > 1:
         toks = toks.crossJoin(F.broadcast(lines.sparkSession.range(passes))).drop("id")
     return _normalized_counts(toks)
@@ -126,9 +127,7 @@ def word_counts_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame
 
 #: oracle-side token expression, casefolded via the ONE canonical helper
 #: so the SQL literal cannot drift from :func:`ascii_lower` (ADVICE r11)
-_DUCK_WORD = duck_ascii_lower(
-    "regexp_replace(unnest(string_split_regex(text, '\\s+')), '[[:punct:]]', '', 'g')"
-)
+_DUCK_WORD = duck_ascii_lower(duck_strip_punct(f"unnest({duck_tokens('text')})"))
 
 _ORACLE_TOKENS = f"""
     SELECT {_DUCK_WORD} AS word

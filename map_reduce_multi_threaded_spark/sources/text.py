@@ -19,7 +19,9 @@ corpus.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from ..functions.text import tokens
 
 
 def read_text_dir(spark: SparkSession, path: str, wholetext: bool = False) -> DataFrame:
@@ -38,9 +40,6 @@ def read_text_dir(spark: SparkSession, path: str, wholetext: bool = False) -> Da
     return reader.text(path).withColumn("file", F.input_file_name())
 
 
-def tokens_from_text(text: Column) -> Column:
-    """Whitespace tokenization, the reference's ``ifstream >> word``
-    semantics (``map_reduce.cpp:159``): any run of whitespace separates
-    tokens; leading whitespace yields no empty first token (handled by
-    the empty-token filter downstream, ``map_reduce.cpp:166``)."""
-    return F.split(text, r"\s+")
+#: the reference's ``ifstream >> word`` split (``map_reduce.cpp:159``),
+#: re-exported under its source-side name
+tokens_from_text = tokens

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.text import duck_ascii_lower
+from ..operators.wordcount import _ORACLE_WORDCOUNT
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 from . import windows as W
@@ -26,44 +26,9 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     return W.run_to_memory(W.tumbling_counts(ev), "stream_tumbling_sink")
 
 
-_TUMBLING_ORACLE = """
-SELECT strftime(time_bucket(INTERVAL '10 minutes', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type, count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-FROM events GROUP BY 1, 2
-"""
-
-
 def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = W.read_events_stream(spark, sf_dir)
     return W.run_to_memory(W.session_counts(ev), "stream_session_sink")
-
-
-_SESSION_ORACLE = """
-WITH flagged AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   > INTERVAL '30 minutes'
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-), sessions AS (
-  -- ORDER BY must carry the event_id tiebreak like the flagged CTE:
-  -- with tied timestamps (round-11 frozen-time axis at 12x volume) a
-  -- ts-only ROWS frame puts the new_session=1 row at an ARBITRARY
-  -- position inside the tie group, splitting one session into two for
-  -- whichever users draw an unlucky order (engine was right at 480
-  -- sessions; this oracle said 481/482)
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM flagged
-)
-SELECT user_id,
-       strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-       count(*) AS n_events
-FROM sessions GROUP BY user_id, session_id
-"""
 
 
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,30 +150,8 @@ GROUP BY event_type
 
 
 def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding windows (10 min, slide 5) — each event lands in two
-    windows; window() generates both without a self-join."""
-    import pyspark.sql.functions as F
-
     ev = W.read_events_stream(spark, sf_dir)
-    agg = (
-        ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "n_events",
-        )
-    )
-    return W.run_to_memory(agg, "stream_sliding_sink")
-
-
-_SLIDING_ORACLE = """
-SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start, count(*) AS n_events
-FROM (
-  SELECT unnest([time_bucket(INTERVAL '5 minutes', ts),
-                 time_bucket(INTERVAL '5 minutes', ts) - INTERVAL '5 minutes']) AS ws
-  FROM events
-) GROUP BY 1
-"""
+    return W.run_to_memory(W.sliding_counts(ev), "stream_sliding_sink")
 
 
 def stream_custom_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,9 +346,8 @@ def stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
-    from ..functions.text import normalize_token
+    from ..functions.text import normalize_token, tokens
     from ..sources.tables import staged
-    from ..sources.text import tokens_from_text
 
     docs_dir = staged(
         sf_dir,
@@ -421,29 +363,13 @@ def stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(docs_dir)
     )
     counts = (
-        docs.select(F.explode(tokens_from_text(F.col("text"))).alias("tok"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
         .select(normalize_token(F.col("tok")).alias("word"))
         .where(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     return W.run_to_memory(counts, "stream_wordcount_sink", output_mode="complete")
-
-
-#: oracle-side token expression from the ONE canonical casefold helper
-_DUCK_WORD = duck_ascii_lower(
-    "regexp_replace(unnest(string_split_regex(text, '\\s+')), '[[:punct:]]', '', 'g')"
-)
-
-_STREAM_WORDCOUNT_ORACLE = f"""
-SELECT word, count(*) AS cnt
-FROM (
-  SELECT {_DUCK_WORD} AS word
-  FROM documents
-)
-WHERE length(word) > 0
-GROUP BY word
-"""
 
 
 def stream_update_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -967,14 +893,14 @@ SPECS = [
               "foreachBatch merge-on-read upsert of a replayed change "
               "stream (per-batch change-set compaction; version counts "
               "gate the micro-batch structure)"),
-    QuerySpec("stream_tumbling", stream_tumbling, _TUMBLING_ORACLE,
+    QuerySpec("stream_tumbling", stream_tumbling, W.TUMBLING_ORACLE,
               "streaming tumbling windows drained through a memory sink"),
     QuerySpec("stream_ingest_dedup", stream_ingest_dedup, _STREAM_INGEST_DEDUP_ORACLE,
               "stream-static LEFT-ANTI ingest guard vs the processed-ids ledger "
               "(stateless idempotent re-delivery dedup)"),
     QuerySpec("stream_ohlc", stream_ohlc, _STREAM_OHLC_ORACLE,
               "streaming OHLC bars via incremental min/max-of-struct picks"),
-    QuerySpec("stream_tumbling_multibatch", stream_tumbling_multibatch, _TUMBLING_ORACLE,
+    QuerySpec("stream_tumbling_multibatch", stream_tumbling_multibatch, W.TUMBLING_ORACLE,
               "append-mode tumbling windows over a 6-micro-batch replay (watermark-driven emission)"),
     QuerySpec("stream_windowed_rollup", stream_windowed_rollup, _WINDOWED_ROLLUP_ORACLE,
               "chained stateful aggregation: 10-min windows rolled into 30-min inside one query"),
@@ -984,7 +910,7 @@ SPECS = [
     QuerySpec("stream_update_counts", stream_update_counts, _UPDATE_COUNTS_ORACLE,
               "UPDATE-mode tumbling counts: per-batch state snapshots as a "
               "changelog, oracled from deterministic batch boundaries"),
-    QuerySpec("stream_wordcount", stream_wordcount, _STREAM_WORDCOUNT_ORACLE,
+    QuerySpec("stream_wordcount", stream_wordcount, _ORACLE_WORDCOUNT,
               "the reference's S1-S13 pipeline as a stream: 2-micro-batch "
               "replay into a complete-mode global word count"),
     QuerySpec("stream_join_left_outer", stream_join_left_outer, _STREAM_LEFT_OUTER_ORACLE,
@@ -994,11 +920,11 @@ SPECS = [
               "expired and null-extended at their own watermark frontiers"),
     QuerySpec("stream_stateful_counts", stream_stateful_counts, _STATEFUL_ORACLE,
               "custom stateful operator via applyInPandasWithState"),
-    QuerySpec("stream_session", stream_session, _SESSION_ORACLE,
+    QuerySpec("stream_session", stream_session, W.SESSION_ORACLE,
               "streaming session windows (30-min gap) per user"),
-    QuerySpec("stream_sliding", stream_sliding, _SLIDING_ORACLE,
+    QuerySpec("stream_sliding", stream_sliding, W.SLIDING_ORACLE,
               "streaming sliding windows (10 min / slide 5)"),
-    QuerySpec("stream_custom_sessions", stream_custom_sessions, _SESSION_ORACLE,
+    QuerySpec("stream_custom_sessions", stream_custom_sessions, W.SESSION_ORACLE,
               "custom GroupState sessionization with event-time timeouts (multi-batch replay)"),
     QuerySpec("stream_dedup", stream_dedup, _DEDUP_ORACLE,
               "streaming dropDuplicates over a doubled replay"),

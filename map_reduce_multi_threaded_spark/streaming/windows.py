@@ -11,8 +11,11 @@ streaming — the same plan runs both ways, which is how the streaming
 results are oracle-checked: replay the parquet through a file source
 (:func:`read_events_stream`), drain it into a memory sink through the
 one availableNow drain (:func:`drain`), compare to the batch/DuckDB
-answer.  :func:`capture_template` builds any streaming query drain-free
-and returns its template plan instead.
+answer.  The tumbling, sliding and session operators keep their one
+DuckDB oracle beside them (``TUMBLING_ORACLE`` and so on), shared by
+the batch ``events_*`` spec and its ``stream_*`` twin.
+:func:`capture_template` builds any streaming query drain-free and
+returns its template plan instead.
 
 Scale: streaming state (window aggregates, dedup keys) is partitioned
 by group key across executors exactly like a batch shuffle; watermarks
@@ -302,6 +305,39 @@ def tumbling_counts(events: DataFrame) -> DataFrame:
     )
 
 
+TUMBLING_ORACLE = """
+SELECT strftime(time_bucket(INTERVAL '10 minutes', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
+       event_type, count(*) AS n_events,
+       CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+FROM events GROUP BY 1, 2
+"""
+
+
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """10-minute windows sliding every 5 minutes (batch or streaming
+    input) — each event lands in two windows, which ``window()``
+    generates without a self-join."""
+    return (
+        events.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "n_events",
+        )
+    )
+
+
+# each event belongs to windows starting at bucket(ts,5m) and bucket(ts,5m)-5m
+SLIDING_ORACLE = """
+SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start, count(*) AS n_events
+FROM (
+  SELECT unnest([time_bucket(INTERVAL '5 minutes', ts),
+                 time_bucket(INTERVAL '5 minutes', ts) - INTERVAL '5 minutes']) AS ws
+  FROM events
+) GROUP BY 1
+"""
+
+
 def ohlc_bars(events: DataFrame) -> DataFrame:
     """1-hour OHLC bars per event type — the streaming twin of the
     batch ``events_ohlc_bars`` operator, sharing its min/max-of-struct
@@ -331,7 +367,8 @@ def ohlc_bars(events: DataFrame) -> DataFrame:
 
 
 def session_counts(events: DataFrame) -> DataFrame:
-    """30-minute-gap session windows per user."""
+    """30-minute-gap session windows per user (batch or streaming
+    input, like :func:`tumbling_counts`)."""
     return (
         events.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -341,6 +378,33 @@ def session_counts(events: DataFrame) -> DataFrame:
             "n_events",
         )
     )
+
+
+SESSION_ORACLE = """
+WITH flagged AS (
+  SELECT user_id, ts, event_id,
+         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                   > INTERVAL '30 minutes'
+              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+              THEN 1 ELSE 0 END AS new_session
+  FROM events
+), sessions AS (
+  -- ORDER BY must carry the event_id tiebreak like the flagged CTE:
+  -- with tied timestamps (round-11 frozen-time axis at 12x volume) a
+  -- ts-only ROWS frame puts the new_session=1 row at an ARBITRARY
+  -- position inside the tie group, splitting one session into two for
+  -- whichever users draw an unlucky order (engine was right at 480
+  -- sessions; this oracle said 481/482)
+  SELECT user_id, ts,
+         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
+  FROM flagged
+)
+SELECT user_id,
+       strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
+       count(*) AS n_events
+FROM sessions GROUP BY user_id, session_id
+"""
 
 
 def dedup_counts(events: DataFrame) -> DataFrame:

@@ -219,7 +219,7 @@ TIME_FROZEN_SUBSET = [
     # the frozen-time 12x catch: the shared session oracle's running-sum
     # window needed the event_id tiebreak (a ts-only ROWS frame splits a
     # session at DuckDB's arbitrary tie order); stream_session shares
-    # _SESSION_ORACLE with events_session and the streaming drain path
+    # windows.SESSION_ORACLE with events_session and the streaming drain path
     "stream_session",
 ]
 

@@ -744,6 +744,48 @@ def test_package_has_no_broad_except():
     assert not broad, broad
 
 
+def test_text_contract_lives_in_one_module():
+    """The cross-engine text contract — the whitespace-split regex, the
+    DuckDB split call, both punctuation classes and the A–Z casefold
+    table — is spelled only in ``functions/text.py``.  Every other
+    module calls its Spark/DuckDB pairs, so the two engines' spellings
+    cannot drift apart.  Scans the source (no Spark)."""
+    import pathlib
+
+    import map_reduce_multi_threaded_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    home = root / "functions" / "text.py"
+    spellings = ("\\s+", "string_split_regex", "\\p{Punct}", "[[:punct:]]",
+                 "ABCDEFGHIJKLMNOPQRSTUVWXYZ")
+    found = [
+        f"{path.relative_to(root).as_posix()}:{n}: {s}"
+        for path in sorted(root.rglob("*.py"))
+        if path != home
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        for s in spellings
+        if s in line
+    ]
+    assert not found, found
+
+
+def test_equal_oracles_are_one_string():
+    """Registry oracles that read the same after whitespace and ``--``
+    comment normalization are one string: a batch/stream twin uses its
+    partner's oracle, not a hand copy that can drift.  No Spark."""
+    import re
+
+    from map_reduce_multi_threaded_spark.registry import collect_specs
+
+    groups: dict[str, dict[str, list[str]]] = {}
+    for spec in collect_specs():
+        if spec.oracle is not None:
+            key = " ".join(re.sub(r"--[^\n]*", "", spec.oracle).split())
+            groups.setdefault(key, {}).setdefault(spec.oracle, []).append(spec.name)
+    copies = [sorted(v.values()) for v in groups.values() if len(v) > 1]
+    assert not copies, copies
+
+
 def test_env_reads_are_only_the_session_knobs():
     """The package reads exactly three environment variables, all in
     session.py: core count, shuffle partitions and driver memory.  No
